@@ -29,9 +29,18 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# perf harness at sf0.1 wants headroom beyond the library's modest 4g
-# default; respect an explicit caller override
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+
+def _host_driver_mem() -> str:
+    """~30% of host RAM within [1, 16] GiB. In local mode the driver
+    heap is the executor heap, and the host is shared with other
+    processes; 16g (headroom for sf0.1) is reached from ~54 GiB up."""
+    with open("/proc/meminfo") as f:
+        mem_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{max(1, min(16, int(mem_kb * 0.3 / (1 << 20))))}g"
+
+
+# respect an explicit caller override
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _host_driver_mem())
 
 from nyc_etl_pipeline_spark import get_spark, suite  # noqa: E402
 

@@ -8,10 +8,17 @@ pure transform between warehouse tables:
 
   silver   raw monthly parquet -> trips_silver        (month-partitioned)
   dims     date dim + seeded dims + upserts           (small tables)
-  fact     watermark-incremental star fact            (month-partitioned,
+  fact     digest-incremental star fact               (month-partitioned,
                                                        partition overwrite
                                                        = idempotent re-runs)
   reports  monthly_report / weekly_report             (full rebuild)
+
+Every table the Engine reads back is read with its schema from
+`schemas.ENGINE_TABLES`, so no read launches a schema-inference job;
+a change to what a layer writes must update that map. Job budget of an
+incremental pass over six one-color months, one changed: silver 3 (one
+scan per raw footer schema, plus the write), dims 11, fact 7, reports
+15; tests/test_engine.py pins the budget on two-color months.
 
 CLI:  python -m nyc_etl_pipeline_spark.engine \
           --warehouse /tmp/wh --green-dir .../green_data \
@@ -31,18 +38,23 @@ from nyc_etl_pipeline_spark.pipeline import (
     build_date_dim,
     build_fact,
     clean_trips,
-    monthly_report,
     seed_payment_dim,
     seed_rate_dim,
     seed_type_dim,
     seed_vendor_dim,
-    upsert_dim,
-    weekly_report,
     zone_dim,
 )
-from nyc_etl_pipeline_spark.pipeline.dims import dim_candidates
+from nyc_etl_pipeline_spark.pipeline.dims import merge_dim_keys
 from nyc_etl_pipeline_spark.pipeline.silver import read_raw_normalized
-from nyc_etl_pipeline_spark.schemas import GREEN_RAW, YELLOW_RAW
+from nyc_etl_pipeline_spark.schemas import ENGINE_TABLES, GREEN_RAW, YELLOW_RAW
+
+# (table, silver key column, seed, default name, drop sentinel 0)
+_UPSERTED_DIMS = (
+    ("dim_vendor", "VendorID", seed_vendor_dim, "Unknown Vendor", True),
+    ("dim_rate", "RatecodeID", seed_rate_dim, "Unknown Ratecode", True),
+    # 0 is the seeded 'Flex Fare trip' key (Q4)
+    ("dim_payment", "payment_type", seed_payment_dim, "Unknown Payment Method", False),
+)
 
 
 class Engine:
@@ -50,6 +62,16 @@ class Engine:
         self.spark = spark
         self.wh = Warehouse(spark, warehouse_root)
         self.year = year
+
+    def _read(self, table: str) -> DataFrame:
+        return self.wh.read(table, ENGINE_TABLES[table])
+
+    def _write_rows(self, rows: list, table: str) -> None:
+        """Overwrite a small table from driver-side rows, as one file
+        (one partition: the next read-back is one job; ``coalesce(1)``
+        costs ~0.7 s more per write on local[4])."""
+        rdd = self.spark.sparkContext.parallelize(rows, 1)
+        self.wh.overwrite(self.spark.createDataFrame(rdd, ENGINE_TABLES[table]), table)
 
     # ---- silver ----------------------------------------------------------
 
@@ -77,35 +99,17 @@ class Engine:
 
     def run_dims(self, zone_csv: str | None = None) -> None:
         spark = self.spark
-        silver = self.wh.read("trips_silver")
         self.wh.overwrite(
             build_date_dim(spark, f"{self.year}-01-01", f"{self.year}-12-31"), "dim_date"
         )
-        vendors = upsert_dim(
-            self._existing("dim_vendor", seed_vendor_dim(spark)),
-            dim_candidates([silver], "VendorID"),
-            "VendorID",
-            "VendorName",
-            "Unknown Vendor",
-        )
-        self.wh.overwrite(vendors, "dim_vendor")
-        rates = upsert_dim(
-            self._existing("dim_rate", seed_rate_dim(spark)),
-            dim_candidates([silver.withColumnRenamed("RatecodeID", "RatecodeID")], "RatecodeID"),
-            "RatecodeID",
-            "RatecodeName",
-            "Unknown Ratecode",
-        )
-        self.wh.overwrite(rates, "dim_rate")
-        payments = upsert_dim(
-            self._existing("dim_payment", seed_payment_dim(spark)),
-            silver.select(F.col("payment_type").alias("paymentID")).dropDuplicates(),
-            "paymentID",
-            "payment_type",
-            "Unknown Payment Method",
-            drop_sentinel=False,  # 0 is the seeded 'Flex Fare trip' key (Q4)
-        )
-        self.wh.overwrite(payments, "dim_payment")
+        # every dim's distinct keys in one silver pass; the (enum-sized)
+        # merge with the existing rows then runs on the driver
+        found = self._read("trips_silver").agg(
+            *(F.collect_set(dim[1]) for dim in _UPSERTED_DIMS)
+        ).first()
+        for keys, (table, _, seed, default_name, drop_sentinel) in zip(found, _UPSERTED_DIMS):
+            existing = self._existing(table, seed(spark))
+            self._write_rows(merge_dim_keys(existing, keys, default_name, drop_sentinel), table)
         self.wh.overwrite(seed_type_dim(spark), "dim_type")
         if zone_csv:
             self.wh.overwrite(zone_dim(spark, zone_csv), "dim_zone")
@@ -116,25 +120,23 @@ class Engine:
     # fails loud at the guard instead of OOMing the driver collect.
     MAX_DIM_ROWS = 100_000
 
-    def _existing(self, table: str, seed: DataFrame) -> DataFrame:
+    def _existing(self, table: str, seed: DataFrame) -> list:
         # Q5 semantics: existing dim rows are never updated; seeds are
-        # the initial state on first run. The existing dim is
-        # materialized (dims are small by definition) so the upsert's
-        # output can overwrite the same path it was derived from —
-        # lazy lineage over the original files would read deleted
-        # parquet mid-write.
-        if self.wh.exists(table):
-            df = self.wh.read(table)
-            n = df.count()
-            if n > self.MAX_DIM_ROWS:
-                raise ValueError(
-                    f"dim table {table!r} has {n} rows > MAX_DIM_ROWS="
-                    f"{self.MAX_DIM_ROWS}: dims are materialized to the "
-                    f"driver for same-path overwrite, so an unbounded dim "
-                    f"indicates corrupt upstream keys — refusing the collect."
-                )
-            return self.spark.createDataFrame(df.collect(), df.schema)
-        return seed
+        # the initial state on first run. The existing dim is collected
+        # (dims are small by definition) so the merged dim can
+        # overwrite the same path it was derived from — lazy lineage
+        # over the original files would read deleted parquet mid-write.
+        if not self.wh.exists(table):
+            return seed.collect()
+        rows = self._read(table).limit(self.MAX_DIM_ROWS + 1).collect()
+        if len(rows) > self.MAX_DIM_ROWS:
+            raise ValueError(
+                f"dim table {table!r} has more than MAX_DIM_ROWS="
+                f"{self.MAX_DIM_ROWS} rows: dims are materialized to the "
+                f"driver for same-path overwrite, so an unbounded dim "
+                f"indicates corrupt upstream keys — refusing the collect."
+            )
+        return rows
 
     # ---- fact ------------------------------------------------------------
 
@@ -178,31 +180,25 @@ class Engine:
         writes with a STATIC full-table overwrite so stale partitions
         absent from the rebuilt fact are actually dropped.
         """
-        silver = self.wh.read("trips_silver")
-        dd = self.wh.read("dim_date")
-        dtype = self.wh.read("dim_type")
-        state = self._silver_month_state(silver)
+        silver = self._read("trips_silver")
+        dd = self._read("dim_date")
+        dtype = self._read("dim_type")
+        # <= 12 rows, collected once: change detection compares them on
+        # the driver and they are recorded as the new state
+        state = [tuple(r) for r in self._silver_month_state(silver).collect()]
         full_rebuild = not incremental
         if incremental and self.wh.exists("fact_nyc") and self.wh.exists("_fact_state"):
-            prev = self.wh.read("_fact_state")
-            changed = (
-                state.alias("cur")
-                .join(prev.alias("old"), on="month", how="left")
-                .filter(
-                    F.col("old.n_rows").isNull()
-                    | (F.col("cur.n_rows") != F.col("old.n_rows"))
-                    | (F.col("cur.digest") != F.col("old.digest"))
-                )
-            )
-            affected = [r["month"] for r in changed.select("month").collect()]
+            prev = set(map(tuple, self._read("_fact_state").collect()))
+            affected = sorted(row[0] for row in state if row not in prev)
             if not affected:
                 return
             silver = silver.filter(F.col("month").isin(affected))
-        fact = build_fact(silver, dd, dtype)
-        month_of = F.broadcast(
-            dd.select(F.col("dateID").alias("date_puID"), F.col("month").alias("month"))
+        # dateID is days since Jan 1 of self.year, plus 1 (build_date_dim
+        # as run_dims calls it), so the pickup month needs no join
+        start = F.lit(f"{self.year}-01-01").cast("date")
+        fact = build_fact(silver, dd, dtype).withColumn(
+            "month", F.month(F.date_add(start, F.col("date_puID") - 1))
         )
-        fact = fact.join(month_of, on="date_puID", how="inner")
         if full_rebuild:
             # static overwrite: a month deleted upstream must not leave
             # a stale fact partition behind (dynamic mode would keep it)
@@ -211,7 +207,7 @@ class Engine:
             self.wh.overwrite_partitions(fact, "fact_nyc", ["month"])
         # record the silver state this build consumed (after the fact
         # write — a crash in between just re-detects the months next run)
-        self.wh.overwrite(state, "_fact_state")
+        self._write_rows(state, "_fact_state")
 
     # ---- reports ---------------------------------------------------------
 
@@ -224,7 +220,7 @@ class Engine:
 
         from pyspark.storagelevel import StorageLevel
 
-        fact = self.wh.read("fact_nyc").drop("month")
+        fact = self._read("fact_nyc").drop("month")
         # One scan + one shuffle serve BOTH marts: the base is hash-
         # partitioned on the 6 shared grouping keys (a subset of each
         # mart's keys, so neither groupBy re-shuffles) and persisted
@@ -242,14 +238,10 @@ class Engine:
             min(4096, -(-self.wh.size_bytes("fact_nyc") // (32 << 20))),
         )
         base = shared_report_base(
-            fact, self.wh.read("dim_date"), num_partitions=n_parts
+            fact, self._read("dim_date"), num_partitions=n_parts
         ).persist(StorageLevel.DISK_ONLY)
-        dims = (
-            self.wh.read("dim_zone"),
-            self.wh.read("dim_type"),
-            self.wh.read("dim_vendor"),
-            self.wh.read("dim_payment"),
-            self.wh.read("dim_rate"),
+        dims = tuple(
+            self._read(t) for t in ("dim_zone", "dim_type", "dim_vendor", "dim_payment", "dim_rate")
         )
         try:
             self.wh.overwrite(monthly_from_base(base, *dims), "monthly_report")

@@ -19,7 +19,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_etl_pipeline_spark.io import read_csv
-from nyc_etl_pipeline_spark.schemas import TAXI_ZONE
+from nyc_etl_pipeline_spark.schemas import (
+    DIM_PAYMENT,
+    DIM_RATE,
+    DIM_TYPE,
+    DIM_VENDOR,
+    TAXI_ZONE,
+)
 
 
 def build_date_dim(spark: SparkSession, start: str = "2023-01-01", end: str = "2023-12-31") -> DataFrame:
@@ -56,8 +62,7 @@ def build_date_dim(spark: SparkSession, start: str = "2023-01-01", end: str = "2
 def seed_vendor_dim(spark: SparkSession) -> DataFrame:
     """create_datamart.sql:5-13 seed rows."""
     return spark.createDataFrame(
-        [(1, "Creative Mobile Technologies, LLC"), (2, "VeriFone Inc.")],
-        "VendorID long, VendorName string",
+        [(1, "Creative Mobile Technologies, LLC"), (2, "VeriFone Inc.")], DIM_VENDOR
     )
 
 
@@ -72,7 +77,7 @@ def seed_rate_dim(spark: SparkSession) -> DataFrame:
         (6, "Group ride"),
         (99, "Unknown"),
     ]
-    return spark.createDataFrame(rows, "RatecodeID int, RatecodeName string")
+    return spark.createDataFrame(rows, DIM_RATE)
 
 
 def seed_payment_dim(spark: SparkSession) -> DataFrame:
@@ -86,14 +91,12 @@ def seed_payment_dim(spark: SparkSession) -> DataFrame:
         (5, "Unknown"),
         (6, "Voided trip"),
     ]
-    return spark.createDataFrame(rows, "paymentID int, payment_type string")
+    return spark.createDataFrame(rows, DIM_PAYMENT)
 
 
 def seed_type_dim(spark: SparkSession) -> DataFrame:
     """create_datamart.sql:125-133 seed rows."""
-    return spark.createDataFrame(
-        [(1, "Green"), (2, "Yellow")], "typeID int, typeName string"
-    )
+    return spark.createDataFrame([(1, "Green"), (2, "Yellow")], DIM_TYPE)
 
 
 def zone_dim(spark: SparkSession, csv_path: str) -> DataFrame:
@@ -139,3 +142,20 @@ def upsert_dim(
         F.col(key), F.lit(default_name).alias(name_col)
     )
     return existing.unionByName(new_rows)
+
+
+def merge_dim_keys(
+    existing: list,
+    keys,
+    default_name: str,
+    drop_sentinel: bool = True,
+) -> list[tuple]:
+    """``upsert_dim`` over rows already on the driver: the existing
+    (key, name) rows, then one (key, default_name) row per unseen key
+    in ``keys``, in key order. Same semantics (Q4, Q5), no Spark job —
+    for enum-sized dims whose existing rows and distinct keys are
+    collected anyway. ``keys`` holds no NULL (silver fills them with 0,
+    and ``collect_set`` skips them)."""
+    seen = {row[0] for row in existing}
+    new = sorted(k for k in set(keys) - seen if not (drop_sentinel and k == 0))
+    return [tuple(row) for row in existing] + [(k, default_name) for k in new]

@@ -55,13 +55,19 @@ def read_raw_normalized(spark, paths: list[str], schema) -> DataFrame:
 
     Per-file-group normalization is the schema-evolution pattern that
     survives at scale — a single forced-schema scan aborts on the first
-    drifted file, and parquet mergeSchema rejects type conflicts.
+    drifted file, and parquet mergeSchema rejects type conflicts. Files
+    are grouped by their footer schema (read with pyarrow, no Spark
+    job), and each group is one scan: one schema-inference job per
+    distinct footer rather than per file.
     """
-    from pyspark.sql import functions as F
+    import pyarrow.parquet as pq
 
-    out = None
+    groups: dict = {}
     for p in paths:
-        df = spark.read.parquet(p)
+        groups.setdefault(pq.read_schema(p).remove_metadata(), []).append(p)
+    out = None
+    for group in groups.values():
+        df = spark.read.parquet(*group)
         have = {f.name for f in df.schema.fields}
         cols = [
             (F.col(f.name).cast(f.dataType) if f.name in have else F.lit(None).cast(f.dataType)).alias(f.name)

@@ -146,6 +146,50 @@ FACT_NYC = T.StructType(
     ]
 )
 
+# Enum-like dims — create_datamart.sql:5-13, 93-133.
+DIM_VENDOR = T.StructType(
+    [T.StructField("VendorID", T.LongType()), T.StructField("VendorName", T.StringType())]
+)
+DIM_RATE = T.StructType(
+    [T.StructField("RatecodeID", T.IntegerType()), T.StructField("RatecodeName", T.StringType())]
+)
+DIM_PAYMENT = T.StructType(
+    [T.StructField("paymentID", T.IntegerType()), T.StructField("payment_type", T.StringType())]
+)
+DIM_TYPE = T.StructType(
+    [T.StructField("typeID", T.IntegerType()), T.StructField("typeName", T.StringType())]
+)
+
+# Per-month silver fingerprint recorded by the last fact build
+# (engine.Engine._silver_month_state).
+FACT_STATE = T.StructType(
+    [
+        T.StructField("month", T.IntegerType()),
+        T.StructField("n_rows", T.LongType()),
+        T.StructField("digest", T.LongType()),
+    ]
+)
+
+
+def _month_partitioned(schema: T.StructType) -> T.StructType:
+    return T.StructType(schema.fields + [T.StructField("month", T.IntegerType())])
+
+
+# Every warehouse table the Engine reads back, as its writer stores it.
+# Reads pass these schemas so Spark plans the scan without a
+# schema-inference job; a writer change must update this map.
+ENGINE_TABLES = {
+    "trips_silver": _month_partitioned(TRIPS_SILVER),
+    "fact_nyc": _month_partitioned(FACT_NYC),
+    "dim_date": DIM_DATE,
+    "dim_zone": TAXI_ZONE,
+    "dim_vendor": DIM_VENDOR,
+    "dim_rate": DIM_RATE,
+    "dim_payment": DIM_PAYMENT,
+    "dim_type": DIM_TYPE,
+    "_fact_state": FACT_STATE,
+}
+
 # ---------------------------------------------------------------------------
 # Driver testdata tables (/root/testdata/sf*/ — TESTDATA.md / FIXTURES.md §8)
 # ---------------------------------------------------------------------------

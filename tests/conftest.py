@@ -132,3 +132,24 @@ def zone_csv(spark, tmp_path_factory):
         lines.append(f"{lid},Manhattan,Zone {lid},Boro Zone")
     p.write_text("\n".join(lines) + "\n")
     return str(p)
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (fn's result, Spark jobs fn launched), read
+    from ``statusTracker()`` under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

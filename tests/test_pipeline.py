@@ -166,3 +166,75 @@ def test_idempotent_partition_overwrite(spark, green_raw, tmp_path):
     wh.overwrite_partitions(g.filter(F.col("month") == 1), "trips_silver", ["month"])
     n2 = wh.read("trips_silver").count()
     assert n1 == n2 == 6
+
+
+def test_merge_dim_keys_matches_upsert_dim(spark):
+    """The Engine's driver-side dim merge and the distributed upsert_dim
+    give the same rows: seeds and earlier-upserted names kept (Q5),
+    unseen keys added with the default name, key 0 dropped except for
+    the payment dim, whose seed holds it (Q4)."""
+    from pyspark.sql import types as T
+
+    from nyc_etl_pipeline_spark.pipeline.dims import merge_dim_keys
+
+    cases = [
+        (seed_vendor_dim, "Unknown Vendor", True),
+        (seed_rate_dim, "Unknown Ratecode", True),
+        (seed_payment_dim, "Unknown Payment Method", False),
+    ]
+    for seed, default, drop_sentinel in cases:
+        seed_df = seed(spark)
+        key, name_col = seed_df.columns
+        existing = seed_df.unionByName(spark.createDataFrame([(42, "upserted earlier")], seed_df.schema))
+        keys = [0, 1, 2, 7, 9, 42]  # sentinel, seeded, unseen, earlier-upserted
+        candidates = spark.createDataFrame(
+            [(k,) for k in keys], T.StructType([seed_df.schema[key]])
+        )
+        want = upsert_dim(existing, candidates, key, name_col, default, drop_sentinel=drop_sentinel)
+        got = merge_dim_keys(existing.collect(), keys, default, drop_sentinel)
+        assert sorted(got) == sorted(tuple(r) for r in want.collect()), key
+        names = dict(got)
+        assert names[42] == "upserted earlier" and names[7] == names[9] == default
+        if drop_sentinel:
+            assert 0 not in names
+        else:
+            assert names[0] == "Flex Fare trip"
+
+
+def test_read_raw_normalized_one_scan_per_footer_schema(spark, tmp_path, yellow_raw, count_jobs):
+    """Three raw files with two footer schemas (RatecodeID DOUBLE vs
+    INT64, airport_fee missing from one): the grouped read equals the
+    per-file normalization as a multiset, and infers one schema per
+    group instead of per file."""
+    import functools
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nyc_etl_pipeline_spark.pipeline.silver import read_raw_normalized
+    from nyc_etl_pipeline_spark.schemas import YELLOW_RAW
+
+    t = yellow_raw.toArrow()
+    rate = t.schema.get_field_index("RatecodeID")
+    drifted = t.set_column(rate, "RatecodeID", t["RatecodeID"].cast(pa.int64())).drop_columns(
+        ["airport_fee"]
+    )
+    paths = []
+    for name, table in (("2023-01", t.slice(0, 1)), ("2023-02", drifted), ("2023-03", t.slice(1, 1))):
+        paths.append(str(tmp_path / f"{name}.parquet"))
+        pq.write_table(table, paths[-1])
+
+    def per_file(p):
+        df = spark.read.parquet(p)
+        return df.select(
+            *[
+                (F.col(f.name) if f.name in df.columns else F.lit(None)).cast(f.dataType).alias(f.name)
+                for f in YELLOW_RAW.fields
+            ]
+        )
+
+    want = functools.reduce(lambda a, b: a.unionByName(b), map(per_file, paths))
+    got, jobs = count_jobs(lambda: read_raw_normalized(spark, paths, YELLOW_RAW))
+    assert jobs == 2
+    assert got.count() == want.count() == 4
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
