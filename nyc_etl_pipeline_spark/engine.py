@@ -166,7 +166,7 @@ class Engine:
         timestamps all precede the max already loaded); a content
         digest catches any change. The reference's watermark operator
         (gold.py:56-65) is still provided as
-        `pipeline.latest_pickup_watermark` (gate query q05).
+        `pipeline.latest_pickup_watermark` and `build_fact(watermark=)`.
 
         Affected months are rebuilt COMPLETELY from silver and swapped
         in with partition overwrite. (Appending just the new rows would

@@ -26,6 +26,8 @@ the rounding arithmetic itself is bit-identical across engines.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -40,6 +42,17 @@ def round_half_up(col: Column | str, digits: int = 3) -> Column:
 def sql_round_half_up(expr: str, digits: int = 3) -> str:
     scale = float(10**digits)
     return f"floor(({expr}) * {scale} + 0.5) / {scale}"
+
+
+def sql_double(x: float) -> str:
+    """``x`` as a Spark SQL DOUBLE literal. ``repr`` round-trips a
+    finite double exactly and the D suffix pins the type; ±Inf and NaN
+    have no literal form, so they render as casts from strings."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    name = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
 
 
 def md5_long(col: Column | str, start: int = 1, nhex: int = 15) -> Column:

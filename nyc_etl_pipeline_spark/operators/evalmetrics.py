@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from nyc_etl_pipeline_spark.hygiene import scratch_checkpoint
 
-from nyc_etl_pipeline_spark.functions import dec_sum, round_half_up
+from nyc_etl_pipeline_spark.functions import dec_sum, round_half_up, sql_double
 
 
 def _quantile_bounds(
@@ -1269,7 +1269,7 @@ def kendall_tau(
     if bounds:
         bucket = F.expr(
             " + ".join(
-                f"(CASE WHEN __x > {float(b)!r}D THEN 1 ELSE 0 END)"
+                f"(CASE WHEN __x > {sql_double(b)} THEN 1 ELSE 0 END)"
                 for b in bounds
             )
         )
@@ -1290,13 +1290,14 @@ def kendall_tau(
         ]
     )
     if gcols:
+        quoted = ["`" + c.replace("`", "``") + "`" for c in gcols]
         over = (
-            "OVER (PARTITION BY " + ", ".join(gcols)
+            "OVER (PARTITION BY " + ", ".join(quoted)
             + " ORDER BY __y ASC ROWS BETWEEN UNBOUNDED PRECEDING"
             " AND CURRENT ROW)"
         )
         cum = per_y.selectExpr(
-            *gcols,
+            *quoted,
             "__y",
             *mass_cols,
             *[f"sum({c}) {over} AS __cum_{c}" for c in mass_cols],

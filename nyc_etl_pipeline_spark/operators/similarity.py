@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from nyc_etl_pipeline_spark.functions import sql_double
 from nyc_etl_pipeline_spark.hygiene import scratch_persist
 
 
@@ -1472,10 +1473,10 @@ def kmeans_fixed(
             # one-parse double-literal array: F.array(*[F.lit(x) ...])
             # cost k*dim py4j round-trips PER ROUND of plan build
             # (~0.3-0.4 s each at k=4, dim=64 — r13 build profile);
-            # repr() round-trips doubles exactly and the D suffix pins
-            # the literal type, so the expression is value-identical
+            # sql_double round-trips doubles exactly, so the
+            # expression is value-identical
             arr = F.expr(
-                "array(" + ", ".join(f"{float(x)!r}D" for x in cents[j]) + ")"
+                "array(" + ", ".join(sql_double(x) for x in cents[j]) + ")"
             )
             d = F.aggregate(
                 F.sequence(F.lit(1), F.lit(dim)), F.lit(0.0), _step(arr)

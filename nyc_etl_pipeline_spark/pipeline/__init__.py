@@ -18,7 +18,11 @@ from nyc_etl_pipeline_spark.pipeline.dims import (
     zone_dim,
 )
 from nyc_etl_pipeline_spark.pipeline.fact import build_fact, latest_pickup_watermark
-from nyc_etl_pipeline_spark.pipeline.reports import monthly_report, weekly_report
+from nyc_etl_pipeline_spark.pipeline.reports import (
+    monthly_from_base,
+    shared_report_base,
+    weekly_from_base,
+)
 
 __all__ = [
     "clean_trips",
@@ -31,6 +35,7 @@ __all__ = [
     "zone_dim",
     "build_fact",
     "latest_pickup_watermark",
-    "monthly_report",
-    "weekly_report",
+    "shared_report_base",
+    "monthly_from_base",
+    "weekly_from_base",
 ]

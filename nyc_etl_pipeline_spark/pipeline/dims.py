@@ -105,18 +105,6 @@ def zone_dim(spark: SparkSession, csv_path: str) -> DataFrame:
     return read_csv(spark, csv_path, TAXI_ZONE)
 
 
-def dim_candidates(trips: list[DataFrame], key: str) -> DataFrame:
-    """Distinct key values across silver tables (gold.py:84-87 etc.),
-    union by NAME (Q3 fix) and deduped. Sort is dropped — the
-    reference's pre-insert ``.sort()`` (gold.py:87) orders rows into an
-    unordered table, a no-op we don't pay a shuffle for."""
-    out = None
-    for df in trips:
-        part = df.select(key).dropDuplicates()
-        out = part if out is None else out.unionByName(part)
-    return out.dropDuplicates()
-
-
 def upsert_dim(
     existing: DataFrame,
     candidates: DataFrame,
@@ -134,6 +122,8 @@ def upsert_dim(
 
     ``candidates`` is expected to be small (distinct keys); the
     left-anti join broadcasts ``existing`` when Catalyst sees its size.
+    The reference's pre-insert ``.sort()`` (gold.py:87, A7) orders rows
+    into an unordered table, so it is dropped.
     """
     new_keys = candidates.join(existing, on=key, how="left_anti")
     if drop_sentinel:

@@ -2,9 +2,8 @@
 
 Reference: assets/platinum.py:69-154 (monthly), :166-252 (weekly);
 output DDL Databases/create_report.sql. A star-join + group-by —
-pure Catalyst territory: every dimension is broadcast, aggregation is
-partial (map-side) + final hash agg, so the only shuffle is on the
-grouping keys.
+pure Catalyst territory: every dimension is broadcast, and one hash
+exchange on the keys both marts share serves both aggregations.
 
 Q1 fix: avg/total_trip_duration are true MINUTES
 (``trip_duration``-seconds / 60.0). The reference divided its seconds
@@ -22,9 +21,8 @@ once instead of twice. This wins exactly when the report grain barely
 compresses the fact (the reference's 36M-row yellow crash case:
 near-uniform keys mean map-side combine removes almost nothing, so
 the second groupBy shuffle is pure waste). For heavily compressing
-key distributions the classic per-mart partial+final agg shuffles
-fewer bytes — the standalone ``monthly_report``/``weekly_report``
-keep that plan.
+key distributions a per-mart partial+final agg would shuffle fewer
+bytes.
 """
 
 from __future__ import annotations
@@ -163,7 +161,8 @@ def monthly_from_base(
     dim_payment: DataFrame,
     dim_rate: DataFrame,
 ) -> DataFrame:
-    """Monthly mart from a ``shared_report_base`` — shuffle-free agg."""
+    """platinum.py:69-154 — monthly mart (7 keys incl. pickup month)
+    from a ``shared_report_base``; shuffle-free agg."""
     grouped = base.groupBy(*SHARED_KEYS[:4], "month_pu", *SHARED_KEYS[4:]).agg(*_aggregates())
     return _decorate(grouped, zone, dim_type, dim_vendor, dim_payment, dim_rate, ["month_pu"])
 
@@ -176,7 +175,9 @@ def weekly_from_base(
     dim_payment: DataFrame,
     dim_rate: DataFrame,
 ) -> DataFrame:
-    """Weekly mart from a ``shared_report_base`` — shuffle-free agg."""
+    """platinum.py:166-252 — weekly mart (month swapped for
+    dayOfWeek + weekOfYear) from a ``shared_report_base``; shuffle-free
+    agg."""
     grouped = base.groupBy(
         *SHARED_KEYS[:4], "dayOfWeek_pu", "weekOfYear_pu", *SHARED_KEYS[4:]
     ).agg(*_aggregates())
@@ -185,75 +186,3 @@ def weekly_from_base(
         ["dayOfWeek_pu", "weekOfYear_pu"],
     )
 
-
-def monthly_report(
-    fact: DataFrame,
-    dim_date: DataFrame,
-    zone: DataFrame,
-    dim_type: DataFrame,
-    dim_vendor: DataFrame,
-    dim_payment: DataFrame,
-    dim_rate: DataFrame,
-) -> DataFrame:
-    """platinum.py:69-154 — group by 7 keys incl. pickup month."""
-    dd = F.broadcast(
-        dim_date.select(F.col("dateID").alias("date_puID"), F.col("month").alias("month_pu"))
-    )
-    grouped = (
-        fact.join(dd, on="date_puID", how="inner")
-        .groupBy(
-            "PULocationID",
-            "DOLocationID",
-            "typeID",
-            "VendorID",
-            "month_pu",
-            "RatecodeID",
-            "paymentID",
-        )
-        .agg(*_aggregates())
-    )
-    return _decorate(
-        grouped, zone, dim_type, dim_vendor, dim_payment, dim_rate, ["month_pu"]
-    )
-
-
-def weekly_report(
-    fact: DataFrame,
-    dim_date: DataFrame,
-    zone: DataFrame,
-    dim_type: DataFrame,
-    dim_vendor: DataFrame,
-    dim_payment: DataFrame,
-    dim_rate: DataFrame,
-) -> DataFrame:
-    """platinum.py:166-252 — keys swap month for dayOfWeek+weekOfYear."""
-    dd = F.broadcast(
-        dim_date.select(
-            F.col("dateID").alias("date_puID"),
-            F.col("dayOfWeek").alias("dayOfWeek_pu"),
-            F.col("weekOfYear").alias("weekOfYear_pu"),
-        )
-    )
-    grouped = (
-        fact.join(dd, on="date_puID", how="inner")
-        .groupBy(
-            "PULocationID",
-            "DOLocationID",
-            "typeID",
-            "VendorID",
-            "dayOfWeek_pu",
-            "weekOfYear_pu",
-            "RatecodeID",
-            "paymentID",
-        )
-        .agg(*_aggregates())
-    )
-    return _decorate(
-        grouped,
-        zone,
-        dim_type,
-        dim_vendor,
-        dim_payment,
-        dim_rate,
-        ["dayOfWeek_pu", "weekOfYear_pu"],
-    )

@@ -4,11 +4,23 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from nyc_etl_pipeline_spark import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+# The reference repo's real TLC data (public trip records), read in
+# place from a checkout beside this repo by the tests marked
+# ``requires_reference``; they skip where it is absent.
+_REFERENCE_DATA = os.path.join(os.path.dirname(REPO_ROOT), "reference", "data")
+GREEN_DIR = os.path.join(_REFERENCE_DATA, "green_data")
+ZONE_CSV = os.path.join(_REFERENCE_DATA, "taxi_zone.csv")
+
+requires_reference = pytest.mark.skipif(
+    not os.path.isdir(GREEN_DIR), reason="reference green data not present"
+)
 
 
 @pytest.fixture(scope="session")

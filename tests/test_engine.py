@@ -9,16 +9,10 @@ import shutil
 
 import pyarrow.parquet as pq
 import pytest
+from conftest import GREEN_DIR, ZONE_CSV, requires_reference
 from pyspark.sql import functions as F
 
 from nyc_etl_pipeline_spark.engine import Engine
-
-GREEN_DIR = "/root/reference/data/green_data"
-ZONE_CSV = "/root/reference/data/taxi_zone.csv"
-
-requires_reference = pytest.mark.skipif(
-    not os.path.isdir(GREEN_DIR), reason="reference green data not present"
-)
 
 
 @pytest.fixture()

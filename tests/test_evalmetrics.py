@@ -885,6 +885,46 @@ def test_kendall_closed_forms(spark):
     assert r["n"] == 2 and r["tau"] == 1.0
 
 
+def test_kendall_group_column_needs_quoting(spark):
+    # the cumulative pass is a SQL string: a group column named with a
+    # space must be quoted there like any other identifier
+    import random
+
+    from nyc_etl_pipeline_spark.operators.evalmetrics import kendall_tau
+
+    rng = random.Random(19)
+    rows = [
+        ("g" + str(rng.randint(0, 1)), round(rng.random(), 1), round(rng.random(), 1))
+        for _ in range(120)
+    ]
+    df = spark.createDataFrame(rows, "`my group` string, x double, y double")
+    out = {r["my group"]: r for r in kendall_tau(df, "x", "y", ["my group"]).collect()}
+    assert set(out) == {r[0] for r in rows}
+    for g, r in out.items():
+        C, D, tau = _brute_kendall([(x, y) for gg, x, y in rows if gg == g])
+        assert (int(r["concordant"]), int(r["discordant"]), r["tau"]) == (C, D, tau), g
+
+
+def test_kendall_infinite_x(spark):
+    # +Inf lands among the literal x-bucket bounds, which the bucket
+    # expression renders as SQL
+    import math
+    import random
+
+    from nyc_etl_pipeline_spark.operators.evalmetrics import kendall_tau
+
+    rng = random.Random(23)
+    rows = [
+        (math.inf if i % 3 == 0 else round(rng.random(), 1), round(rng.random(), 1))
+        for i in range(150)
+    ]
+    C, D, tau = _brute_kendall(rows)
+    df = spark.createDataFrame(rows, "x double, y double")
+    r = kendall_tau(df, "x", "y").collect()[0]
+    assert (int(r["concordant"]), int(r["discordant"]), r["tau"]) == (C, D, tau)
+    assert r["n"] == len(rows)
+
+
 def test_kendall_ungrouped_equals_grouped_constant_key(spark):
     import random
 

@@ -7,17 +7,12 @@ union)."""
 import importlib.util
 import os
 
-import pytest
+from conftest import GREEN_DIR, ZONE_CSV, requires_reference
 from pyspark.sql import functions as F
 
 from nyc_etl_pipeline_spark.engine import Engine
 
-GREEN_DIR = "/root/reference/data/green_data"
-ZONE_CSV = "/root/reference/data/taxi_zone.csv"
-
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(GREEN_DIR), reason="reference green data not present"
-)
+pytestmark = requires_reference
 
 
 def _load_synth():

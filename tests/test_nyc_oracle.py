@@ -1,27 +1,29 @@
 """Independent-engine cross-check of the FULL NYC pipeline: the Spark
-silver -> fact -> monthly_report chain on one month of real green
-data, vs the same semantics written from scratch as DuckDB SQL.
+silver -> fact -> shared_report_base -> monthly_from_base chain (the
+plan Engine.run_reports runs) vs the same semantics written from
+scratch as DuckDB SQL, on one month of real green data where it is
+present and on the conftest green fixture everywhere.
 
 This validates the reference-parity core (dedup, dropna, null->0
 sentinel, surcharge sum, duration seconds, 2023 date-dim inner join,
 dim decoration incl. 'Unknown Vendor' upsert, minutes fix Q1, rounding)
-end-to-end on real data — not just the TPC-H-shaped suite mapping.
+end-to-end — not just the TPC-H-shaped suite mapping.
 """
 
+import math
 import os
 
 import duckdb
+import pyarrow.parquet as pq
 import pytest
+from conftest import GREEN_DIR, ZONE_CSV, requires_reference
 
-GREEN = "/root/reference/data/green_data/2023-01.parquet"
-ZONE = "/root/reference/data/taxi_zone.csv"
+from tests.oracle_harness import canon
 
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(GREEN), reason="reference green data not present"
-)
 
-_DUCK_SQL = f"""
-WITH raw AS (SELECT DISTINCT * FROM read_parquet('{GREEN}')),
+def _duck_sql(green: str, zone: str) -> str:
+    return f"""
+WITH raw AS (SELECT DISTINCT * FROM read_parquet('{green}')),
 silver AS (
   SELECT VendorID,
          lpep_pickup_datetime  AS pu,
@@ -41,7 +43,7 @@ fact AS (
   SELECT * FROM silver
   WHERE year(pu) = 2023 AND year(do_) = 2023   -- Q10: 2023 date-dim inner join
 ),
-zone AS (SELECT * FROM read_csv('{ZONE}', header=true)),
+zone AS (SELECT * FROM read_csv('{zone}', header=true)),
 dim_payment(pid, payment_type) AS (VALUES
   (0,'Flex Fare trip'),(1,'Credit card'),(2,'Cash'),(3,'No charge'),
   (4,'Dispute'),(5,'Unknown'),(6,'Voided trip')),
@@ -90,27 +92,33 @@ JOIN dim_rate r ON g.RatecodeID = r.rid
 """
 
 
-def test_monthly_report_matches_independent_duckdb_implementation(spark):
-    import sys
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from oracle_harness import compare
-
+@pytest.mark.parametrize("source", [pytest.param("reference", marks=requires_reference), "fixture"])
+def test_monthly_report_matches_independent_duckdb_implementation(
+    spark, tmp_path, green_raw, zone_csv, source
+):
     from nyc_etl_pipeline_spark.pipeline import (
         build_date_dim,
         build_fact,
         clean_trips,
-        monthly_report,
+        monthly_from_base,
         seed_payment_dim,
         seed_rate_dim,
         seed_type_dim,
         seed_vendor_dim,
+        shared_report_base,
         upsert_dim,
         zone_dim,
     )
     from nyc_etl_pipeline_spark.schemas import GREEN_RAW
 
-    raw = spark.read.schema(GREEN_RAW).parquet(GREEN)
+    if source == "reference":
+        green, zone = os.path.join(GREEN_DIR, "2023-01.parquet"), ZONE_CSV
+    else:
+        green, zone = str(tmp_path / "green.parquet"), zone_csv
+        pq.write_table(green_raw.toArrow(), green)
+
+    raw = spark.read.schema(GREEN_RAW).parquet(green)
     silver = clean_trips(raw, "Green")
     dd = build_date_dim(spark, "2023-01-01", "2023-12-31")
     vendors = upsert_dim(
@@ -121,27 +129,23 @@ def test_monthly_report_matches_independent_duckdb_implementation(spark):
         "Unknown Vendor",
     )
     fact = build_fact(silver, dd, seed_type_dim(spark))
-    report = monthly_report(
-        fact,
-        dd,
-        zone_dim(spark, ZONE),
+    report = monthly_from_base(
+        shared_report_base(fact, dd),
+        zone_dim(spark, zone),
         seed_type_dim(spark),
         vendors,
         seed_payment_dim(spark),
         seed_rate_dim(spark),
     )
     con = duckdb.connect()
-    oracle = con.sql(_DUCK_SQL).df()
+    oracle = con.sql(_duck_sql(green, zone)).df()
+    assert len(oracle) > 0
 
     # Real money data is decimal-aligned, so group aggregates routinely
     # land EXACTLY on .0005 rounding boundaries; there, cross-engine
     # float summation order legitimately flips the final rounded digit
     # (SURVEY §7.3). Non-float columns must match exactly; rounded
     # floats may differ by at most one rounding step (0.001).
-    import math
-
-    from oracle_harness import canon
-
     spark_pdf = report.toPandas()
     s_rows, s_cols = canon(spark_pdf)
     o_rows, o_cols = canon(oracle)

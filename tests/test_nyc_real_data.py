@@ -11,15 +11,10 @@ in place; skipped when absent.
 import os
 import time
 
-import pytest
+from conftest import GREEN_DIR, ZONE_CSV, requires_reference
 from pyspark.sql import functions as F
 
-GREEN_DIR = "/root/reference/data/green_data"
-ZONE_CSV = "/root/reference/data/taxi_zone.csv"
-
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(GREEN_DIR), reason="reference green data not present"
-)
+pytestmark = requires_reference
 
 
 def test_full_year_pipeline_under_two_minutes(spark):
@@ -27,13 +22,14 @@ def test_full_year_pipeline_under_two_minutes(spark):
         build_date_dim,
         build_fact,
         clean_trips,
-        monthly_report,
+        monthly_from_base,
         seed_payment_dim,
         seed_rate_dim,
         seed_type_dim,
         seed_vendor_dim,
+        shared_report_base,
         upsert_dim,
-        weekly_report,
+        weekly_from_base,
         zone_dim,
     )
     from nyc_etl_pipeline_spark.schemas import GREEN_RAW
@@ -56,13 +52,16 @@ def test_full_year_pipeline_under_two_minutes(spark):
         "Unknown Vendor",
     )
     fact = build_fact(silver, dd, seed_type_dim(spark))
-    zone = zone_dim(spark, ZONE_CSV)
-    m = monthly_report(
-        fact, dd, zone, seed_type_dim(spark), vendors, seed_payment_dim(spark), seed_rate_dim(spark)
+    dims = (
+        zone_dim(spark, ZONE_CSV),
+        seed_type_dim(spark),
+        vendors,
+        seed_payment_dim(spark),
+        seed_rate_dim(spark),
     )
-    w = weekly_report(
-        fact, dd, zone, seed_type_dim(spark), vendors, seed_payment_dim(spark), seed_rate_dim(spark)
-    )
+    base = shared_report_base(fact, dd)
+    m = monthly_from_base(base, *dims)
+    w = weekly_from_base(base, *dims)
     n_monthly = m.count()
     n_weekly = w.count()
     elapsed = time.perf_counter() - t0

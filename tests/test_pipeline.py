@@ -10,13 +10,14 @@ from nyc_etl_pipeline_spark.pipeline import (
     build_fact,
     clean_trips,
     latest_pickup_watermark,
-    monthly_report,
+    monthly_from_base,
     seed_payment_dim,
     seed_rate_dim,
     seed_type_dim,
     seed_vendor_dim,
+    shared_report_base,
     upsert_dim,
-    weekly_report,
+    weekly_from_base,
     zone_dim,
 )
 from nyc_etl_pipeline_spark.schemas import TRIPS_SILVER
@@ -71,9 +72,12 @@ def test_date_dim(spark):
 def test_upsert_dim_adds_unseen_vendor_with_default(spark, green_raw, yellow_raw):
     g = clean_trips(green_raw, "Green")
     y = clean_trips(yellow_raw, "Yellow")
-    from nyc_etl_pipeline_spark.pipeline.dims import dim_candidates
-
-    cands = dim_candidates([g, y], "VendorID")
+    # distinct keys across both colors, union by name (Q3), as q04 builds them
+    cands = (
+        g.select("VendorID").dropDuplicates()
+        .unionByName(y.select("VendorID").dropDuplicates())
+        .dropDuplicates()
+    )
     dim = upsert_dim(seed_vendor_dim(spark), cands, "VendorID", "VendorName", "Unknown Vendor")
     got = {r["VendorID"]: r["VendorName"] for r in dim.collect()}
     assert got[1] == "Creative Mobile Technologies, LLC"  # Q5: never updated
@@ -122,9 +126,9 @@ def test_reports_end_to_end(spark, green_raw, yellow_raw, zone_csv):
         "VendorName",
         "Unknown Vendor",
     )
-    m = monthly_report(
-        fact, dd, zone, seed_type_dim(spark), vendors, seed_payment_dim(spark), seed_rate_dim(spark)
-    )
+    dims = (zone, seed_type_dim(spark), vendors, seed_payment_dim(spark), seed_rate_dim(spark))
+    base = shared_report_base(fact, dd)
+    m = monthly_from_base(base, *dims)
     rows = m.collect()
     # 7 fact rows: the RatecodeID=0 row has no dim_rate entry -> dropped
     # by the inner join (Q4); the two Jan-05 vendor-2 green trips share
@@ -137,9 +141,7 @@ def test_reports_end_to_end(spark, green_raw, yellow_raw, zone_csv):
     assert jan[0]["total_trips"] == 2
     assert round(jan[0]["avg_trip_duration"], 3) == 15.0  # minutes (Q1 fixed)
 
-    w = weekly_report(
-        fact, dd, zone, seed_type_dim(spark), vendors, seed_payment_dim(spark), seed_rate_dim(spark)
-    )
+    w = weekly_from_base(base, *dims)
     wrows = w.collect()
     assert len(wrows) == 5
     assert {r["dayOfWeek_pu"] for r in wrows} <= {

@@ -13,7 +13,7 @@ import duckdb
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from nyc_etl_pipeline_spark.functions import round_half_up, sql_round_half_up
+from nyc_etl_pipeline_spark.functions import round_half_up, sql_double, sql_round_half_up
 
 # parity contract bound: |x * 10^d| < 2^53 (see functions/__init__);
 # with digits <= 6 that caps |x| at ~9e9
@@ -41,6 +41,18 @@ def _duck_round_half_up(con, values, digits):
         ).fetchone()[0]
         for v in values
     ]
+
+
+@settings(max_examples=20, deadline=None)
+@given(st.lists(st.floats(), min_size=1, max_size=20))
+def test_sql_double_round_trips_through_spark(spark, values):
+    """sql_double parses back to the same double, ±Inf and NaN included,
+    and keeps the ``repr`` + D form for finite values."""
+    got = spark.sql("SELECT " + ", ".join(map(sql_double, values))).collect()[0]
+    for v, g in zip(values, got):
+        assert (g == v) or (math.isnan(g) and math.isnan(v)), (v, g)
+        if math.isfinite(v):
+            assert sql_double(v) == repr(v) + "D"
 
 
 @settings(max_examples=20, deadline=None)
