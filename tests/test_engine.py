@@ -13,6 +13,7 @@ from conftest import GREEN_DIR, ZONE_CSV, requires_reference
 from pyspark.sql import functions as F
 
 from nyc_etl_pipeline_spark.engine import Engine
+from nyc_etl_pipeline_spark.schemas import ENGINE_TABLES
 
 
 @pytest.fixture()
@@ -102,10 +103,10 @@ def test_engine_refuses_exploded_dim(spark, tmp_path):
     )
     eng.wh.overwrite(big, "dim_vendor")
     with pytest.raises(ValueError, match="MAX_DIM_ROWS"):
-        eng._existing("dim_vendor", big.limit(0))
+        eng._existing("dim_vendor", lambda _: big.limit(0))
     # a sane dim still round-trips through the guard
     eng.wh.overwrite(big.limit(5), "dim_rate")
-    assert len(eng._existing("dim_rate", big.limit(0))) == 5
+    assert len(eng._existing("dim_rate", lambda _: big.limit(0))) == 5
 
 
 @requires_reference
@@ -195,14 +196,17 @@ def _fact_months(eng):
     return {r["month"]: r["n"] for r in fact.groupBy("month").agg(F.count("*").alias("n")).collect()}
 
 
-def _fact_files(eng):
-    root = eng.wh.path("fact_nyc")
-    return {
-        (os.path.relpath(os.path.join(d, f), root), os.stat(os.path.join(d, f)).st_mtime_ns)
-        for d, _, files in os.walk(root)
-        for f in files
-        if not f.startswith((".", "_"))
-    }
+def _data_files(eng, table):
+    """(path in the table, inode, mtime, size) of every data file."""
+    root = eng.wh.path(table)
+    files = set()
+    for d, _, names in os.walk(root):
+        for name in names:
+            if not name.startswith((".", "_")):
+                path = os.path.join(d, name)
+                st = os.stat(path)
+                files.add((os.path.relpath(path, root), st.st_ino, st.st_mtime_ns, st.st_size))
+    return files
 
 
 def test_engine_synthetic_incremental_matches_full_build(
@@ -219,10 +223,10 @@ def test_engine_synthetic_incremental_matches_full_build(
     assert _fact_months(eng) == {1: 4, 2: 1, 3: 1, 6: 1}
     feb_fare = eng.wh.read("fact_nyc").filter("month = 2").first()["fare_amount"]
 
-    before = _fact_files(eng)
+    before = _data_files(eng, "fact_nyc")
     _reprice_february(green_raw, green)
     eng.run_all(green, yellow, zone_csv)
-    rewritten = {os.path.dirname(rel) for rel, _ in before ^ _fact_files(eng)}
+    rewritten = {os.path.dirname(f[0]) for f in before ^ _data_files(eng, "fact_nyc")}
     assert rewritten == {"month=2"}
     assert eng.wh.read("fact_nyc").filter("month = 2").first()["fare_amount"] == feb_fare + 1.0
 
@@ -244,13 +248,13 @@ def test_engine_synthetic_detects_late_only_batch(spark, tmp_path, zone_csv, syn
     before = _fact_months(eng)
     jan_extra = eng.wh.read("trips_silver").filter(F.col("month") == 1).limit(2)
     eng.wh.append(jan_extra, "trips_silver", ["month"])
-    untouched = {f for f in _fact_files(eng) if os.path.dirname(f[0]) != "month=1"}
+    untouched = {f for f in _data_files(eng, "fact_nyc") if os.path.dirname(f[0]) != "month=1"}
 
     eng.run_fact(incremental=True)
     after = _fact_months(eng)
     assert after[1] == before[1] + 2, "late-only batch was not loaded"
     assert {m: n for m, n in after.items() if m != 1} == {m: n for m, n in before.items() if m != 1}
-    assert untouched <= _fact_files(eng), "an unchanged month was rebuilt"
+    assert untouched <= _data_files(eng, "fact_nyc"), "an unchanged month was rebuilt"
 
 
 def test_engine_synthetic_full_rebuild_drops_deleted_month(spark, tmp_path, zone_csv, synth_dirs):
@@ -269,14 +273,86 @@ def test_engine_synthetic_full_rebuild_drops_deleted_month(spark, tmp_path, zone
     assert set(_fact_months(eng)) == {1, 3, 6}
 
 
+_UNCHANGING_DIMS = ("dim_date", "dim_type", "dim_vendor", "dim_rate", "dim_payment")
+
+
+def test_engine_incremental_dims_write_only_on_change(
+    spark, tmp_path, zone_csv, green_raw, synth_dirs
+):
+    """A re-delivered month that brings no new dim key rewrites none of
+    the dims it cannot change: every data file stays in place."""
+    green, yellow = synth_dirs
+    eng = Engine(spark, str(tmp_path / "wh"))
+    eng.run_all(green, yellow, zone_csv)
+    before = {t: _data_files(eng, t) for t in _UNCHANGING_DIMS}
+    assert all(before.values())
+    _reprice_february(green_raw, green)
+    eng.run_all(green, yellow, zone_csv)
+    assert {t: _data_files(eng, t) for t in _UNCHANGING_DIMS} == before
+
+
+def test_engine_incremental_dims_add_unseen_vendor(
+    spark, tmp_path, zone_csv, green_raw, synth_dirs
+):
+    """A re-delivered month with an unseen VendorID adds exactly one
+    default-named row; existing names stay as they were (Q5)."""
+    green, yellow = synth_dirs
+    eng = Engine(spark, str(tmp_path / "wh"))
+    eng.run_all(green, yellow, zone_csv)
+
+    def vendors():
+        return {r["VendorID"]: r["VendorName"] for r in eng.wh.read("dim_vendor").collect()}
+
+    before = vendors()
+    assert 7 not in before
+    feb = green_raw.filter(F.date_format("lpep_pickup_datetime", "yyyy-MM") == "2023-02")
+    pq.write_table(
+        feb.withColumn("VendorID", F.lit(7).cast("long")).toArrow(),
+        os.path.join(green, "2023-02.parquet"),
+    )
+    eng.run_all(green, yellow, zone_csv)
+    assert vendors() == {**before, 7: "Unknown Vendor"}
+
+
+def test_engine_new_year_rewrites_dim_date(spark, tmp_path, synth_dirs):
+    """The stored dim_date follows the Engine's year."""
+    green, yellow = synth_dirs
+    root = str(tmp_path / "wh")
+    Engine(spark, root).run_silver(green, yellow)
+    Engine(spark, root).run_dims()
+    eng = Engine(spark, root, year=2024)
+    eng.run_dims()
+    years = eng.wh.read("dim_date").groupBy("year").count().collect()
+    assert [tuple(r) for r in years] == [(2024, 366)]
+
+
+@pytest.mark.parametrize(
+    "table, rows",
+    [
+        ("_fact_state", [(1, 3, -(2**63)), (2, 1, -1), (12, 5, 2**63 - 1)]),
+        ("dim_vendor", [(1, "Creative Mobile Technologies, LLC"), (6, "Unknown Vendor")]),
+        ("dim_rate", []),
+    ],
+)
+def test_write_rows_round_trips_as_one_file(spark, tmp_path, table, rows):
+    eng = Engine(spark, str(tmp_path / "wh"))
+    eng._write_rows(rows, table)
+    assert sorted(tuple(r) for r in eng._read(table).collect()) == sorted(rows)
+    stored = spark.read.parquet(eng.wh.path(table)).schema
+    declared = ENGINE_TABLES[table]
+    assert [(f.name, f.dataType) for f in stored] == [(f.name, f.dataType) for f in declared]
+    assert len(_data_files(eng, table)) == 1
+
+
 # Spark jobs per Engine layer on the synthetic months, as measured: a
 # full build, then an incremental re-run with one re-delivered month.
 # Silver infers one schema per raw footer schema (green, yellow); every
-# warehouse read uses its declared schema, dims take one silver pass,
-# and the fact reads silver's month state once.
+# warehouse read uses its declared schema, dims take one silver pass
+# and write only what changed, and the fact reads silver's month state
+# once.
 JOB_BUDGET = {
     "full": {"silver": 5, "dims": 11, "fact": 6, "reports": 15},
-    "incremental": {"silver": 5, "dims": 11, "fact": 7, "reports": 15},
+    "incremental": {"silver": 5, "dims": 7, "fact": 7, "reports": 15},
 }
 
 
