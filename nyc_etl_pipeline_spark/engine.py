@@ -251,17 +251,16 @@ class Engine:
         # mart's keys, so neither groupBy re-shuffles) and persisted
         # across the two writes. See reports.py scale note.
         #
-        # Partition count is sized to the fact's on-disk bytes (~32 MB
-        # of parquet each, so the per-task aggregation hash maps stay
-        # small even when the report grain barely compresses), and the
-        # base persists DISK_ONLY: it is a materialized shuffle, and
-        # memory-caching it would pin the protected storage half of
-        # the unified pool exactly when both pipelined hash aggs need
-        # execution memory (a 36M-row run in a 4g heap died that way).
-        n_parts = max(
-            int(self.spark.conf.get("spark.sql.shuffle.partitions")),
-            min(4096, -(-self.wh.size_bytes("fact_nyc") // (32 << 20))),
-        )
+        # Partition count comes from the fact's on-disk bytes alone
+        # (~32 MB of parquet each, so the per-task aggregation hash
+        # maps stay small even when the report grain barely
+        # compresses, and a small mart is one file),
+        # and the base persists DISK_ONLY: it is a materialized
+        # shuffle, and memory-caching it would pin the protected
+        # storage half of the unified pool exactly when both pipelined
+        # hash aggs need execution memory (a 36M-row run in a 4g heap
+        # died that way).
+        n_parts = max(1, min(4096, -(-self.wh.size_bytes("fact_nyc") // (32 << 20))))
         base = shared_report_base(
             fact, self._read("dim_date"), num_partitions=n_parts
         ).persist(StorageLevel.DISK_ONLY)

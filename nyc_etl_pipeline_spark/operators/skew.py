@@ -1,10 +1,9 @@
-"""Skew & co-location utilities for the 100 TB posture.
+"""Skew utilities for the 100 TB posture.
 
-- Bucketing: persist both sides of a recurring equi-join bucketed on
-  the join key; Spark then sort-merge-joins bucket-to-bucket with NO
-  shuffle exchange on either side (asserted in tests/test_scale.py).
-  At 100 TB this converts the nightly fact⋈fact join from a full
-  network shuffle into a local merge.
+- Co-location (bucketing) lives in `io.Warehouse.overwrite_bucketed`:
+  both sides of a recurring equi-join bucketed on the join key
+  sort-merge-join bucket-to-bucket with NO shuffle exchange on either
+  side (asserted in tests/test_io_formats.py).
 - Salting: a hot key (the NYC data's airport taxi zones, a null-ish
   default user, ...) makes one reducer partition take the whole
   stage's wall clock. `salted_sum_count` spreads each key over
@@ -19,23 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_bucketed(
-    df: DataFrame, table: str, key: str, n_buckets: int, path: str | None = None
-) -> None:
-    """Persist as a bucketed (+sorted) parquet table in the session
-    catalog. Joins/aggregations on `key` between tables bucketed the
-    same way need no exchange."""
-    writer = (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-    )
-    if path:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
 
 
 def salt_col(n_salts: int, *cols) -> F.Column:

@@ -175,7 +175,7 @@ def stream_to_warehouse(
     stops — the incremental-batch trigger a scheduled ingest job uses.
     """
     writer = (
-        df.writeStream.format(warehouse.table_format)
+        df.writeStream.format("parquet")
         .option("path", warehouse.path(table))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")

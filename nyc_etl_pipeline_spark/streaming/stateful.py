@@ -76,57 +76,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Same operator on the NEW arbitrary-stateful API
-    (transformWithStateInPandas, Spark 4): typed value state via a
-    StatefulProcessor instead of a raw tuple — the forward-looking
-    surface for custom streaming operators.
-
-    NOTE: the TWS python worker speaks a protobuf-based state protocol
-    and needs a working `google.protobuf`; in environments without it
-    the query fails at start (the applyInPandasWithState form above
-    has no such dependency). Tested where protobuf is available;
-    skipped otherwise."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                n, total, mx = self._state.get()
-            else:
-                n, total, mx = 0, 0.0, float("-inf")
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                if len(pdf):
-                    mx = max(mx, float(pdf["value"].max()))
-            self._state.update((n, total, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events_total": [n],
-                    "value_total": [total],
-                    "max_value_seen": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserTotals(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 SESSION_OUTPUT_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -206,76 +155,3 @@ def stream_capped_sessions(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def stream_capped_sessions_tws(
-    events: DataFrame, gap_us: int, cap_us: int
-) -> DataFrame:
-    """`stream_capped_sessions` on the NEW arbitrary-stateful API
-    (transformWithStateInPandas, Spark 4): identical gap-OR-cap
-    recurrence and per-user three-long state, but held in a typed
-    ValueState through a StatefulProcessor — the forward-looking
-    surface for custom streaming operators (timers, list/map state,
-    state schema evolution live here, not on applyInPandasWithState).
-
-    Same contract as the GroupState twin: per-user event-time order
-    across micro-batches; within a batch events sort by
-    (ts, event_id) — the parity test pins every assignment against
-    the batch operator.
-
-    NOTE: the TWS python worker speaks a protobuf-based state
-    protocol and needs a working `google.protobuf`; in environments
-    without it the query fails at start (the applyInPandasWithState
-    form above has no such dependency). Tested where protobuf is
-    available; env-skipped otherwise.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class CappedSessions(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("sess", SESSION_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                last, start, idx = self._state.get()
-            else:
-                last, start, idx = None, None, 0
-            pdf = pd.concat(list(rows), ignore_index=True)
-            if len(pdf) == 0:
-                return
-            pdf = pdf.sort_values(["__us", "event_id"]).reset_index(drop=True)
-            out = []
-            for t in pdf["__us"].tolist():
-                if idx == 0:
-                    idx, start = 1, t
-                elif t - last > gap_us or t - start > cap_us:
-                    idx += 1
-                    start = t
-                last = t
-                out.append(idx)
-            self._state.update((int(last), int(start), int(idx)))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out),
-                    "event_id": pdf["event_id"],
-                    "session_idx": out,
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    prepared = events.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("__us"),
-    )
-    return prepared.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=CappedSessions(),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )

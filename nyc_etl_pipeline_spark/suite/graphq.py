@@ -188,13 +188,13 @@ def q118_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE; the DuckDB oracle runs the single-statement form
     _Q118_SQL — same edge derivation, same recursion, same hop bound).
 
-    r13 split: the STATIC subgraph (w_edges -> strong -> und — the one
+    The STATIC subgraph (w_edges -> strong -> und — the one
     corpus-scale join+aggregate) is computed once as a DataFrame and
     localCheckpoint'ed before the recursion. Spark's UnionLoop inlines
     non-recursive CTEs into every iteration's plan, so the inlined
-    form re-ran the 4-table corpus join once per hop (4x at hop<3) —
-    visible as four parallel scan+join subtrees in the before plan
-    (plans/r13/q118_recursive_bfs_before.txt). The checkpointed edge
+    form re-ran the 4-table corpus join once per hop (4x at hop<3):
+    its formatted plan printed the 4-table scan+join subtree four
+    times under the UnionLoop's recursive branch. The checkpointed edge
     table is nation-pair-bounded (<=625 rows) at every SF, so the
     recursion now iterates over stored blocks; the oracle (and the
     recursive surface itself) are unchanged. The iterative DataFrame

@@ -189,7 +189,7 @@ def test_haversine_known_distance_and_cross_cell_pairs(spark):
 
 
 def test_q131_spatial_join_is_equi_not_cartesian(spark, sf_dir):
-    from nyc_etl_pipeline_spark import plans as P
+    from tests import plans as P
     from nyc_etl_pipeline_spark.suite.events import q131_radius_pairs
 
     plan = P.explain_str(q131_radius_pairs(spark, sf_dir))

@@ -229,6 +229,8 @@ def test_engine_synthetic_incremental_matches_full_build(
     rewritten = {os.path.dirname(f[0]) for f in before ^ _data_files(eng, "fact_nyc")}
     assert rewritten == {"month=2"}
     assert eng.wh.read("fact_nyc").filter("month = 2").first()["fare_amount"] == feb_fare + 1.0
+    # mart files are sized from the fact's bytes, not shuffle.partitions
+    assert len(_data_files(eng, "monthly_report")) == len(_data_files(eng, "weekly_report")) == 1
 
     fresh = Engine(spark, str(tmp_path / "wh_fresh"))
     fresh.run_all(green, yellow, zone_csv)

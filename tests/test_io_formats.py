@@ -29,7 +29,7 @@ def test_json_roundtrip(spark, sf_dir, tmp_path):
 
 
 def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
-    from nyc_etl_pipeline_spark import plans as P
+    from tests import plans as P
 
     li = read_testdata(spark, sf_dir, "lineitem")
     path = str(tmp_path / "li_orc")
@@ -284,13 +284,12 @@ def test_warehouse_size_bytes_tracks_data(spark, sf_dir, tmp_path):
     assert big == real
 
 
-def test_warehouse_orc_format_end_to_end(spark, sf_dir, tmp_path):
-    """Warehouse(table_format='orc'): overwrite / read / append /
-    dynamic-partition overwrite / compact all work through the same
-    code paths as parquet (the format string is the only difference)."""
+def test_warehouse_partitioned_end_to_end(spark, sf_dir, tmp_path):
+    """Partitioned Warehouse table: overwrite / read / append /
+    dynamic-partition overwrite / compact compose on one table."""
     from nyc_etl_pipeline_spark.io import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "orc_wh"), table_format="orc")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     orders = read_testdata(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate")
     )
@@ -313,7 +312,6 @@ def test_warehouse_orc_format_end_to_end(spark, sf_dir, tmp_path):
     n = wh.compact("orders", target_file_mb=512)
     assert n == len(years)
     assert wh.read("orders").count() == orders.count() + one_year.count()
-
 
 
 # ---- bucketed (hash-clustered) tables --------------------------------------

@@ -7,13 +7,13 @@ import os
 
 from pyspark.sql import functions as F
 
-from nyc_etl_pipeline_spark import plans as P
 from nyc_etl_pipeline_spark.io import read_testdata
 from nyc_etl_pipeline_spark.operators.similarity import (
     ivf_topk,
     ivf_topk_indexed,
     ivf_write_index,
 )
+from tests import plans as P
 
 N_LISTS = 8
 N_PROBE = 3

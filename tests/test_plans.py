@@ -3,13 +3,13 @@ pruning, broadcast, codegen, bounded shuffle counts."""
 
 from pyspark.sql import functions as F
 
-from nyc_etl_pipeline_spark import plans as P
 from nyc_etl_pipeline_spark.io import read_testdata
 from nyc_etl_pipeline_spark.suite.relational import (
     q01_monthly_sales_report,
     q03_clean_project,
     q08_top_customers,
 )
+from tests import plans as P
 
 
 def test_filter_pushes_into_parquet_scan(spark, sf_dir):

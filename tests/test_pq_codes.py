@@ -107,7 +107,7 @@ def test_ivfpq_prunes_partitions_and_keeps_quality(spark, tmp_path):
     """n_probe < n_lists: the probed-cell filter must reach the scan
     as partition pruning, and on the well-separated fixture the
     reranked result still recovers the exact top-k."""
-    from nyc_etl_pipeline_spark import plans as P
+    from tests import plans as P
 
     v, queries, books = _fixture(spark)
     path = str(tmp_path / "ivfpq_index")

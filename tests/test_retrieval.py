@@ -3,10 +3,10 @@ oracle gate (q109-q111)."""
 
 from pyspark.sql import functions as F
 
-from nyc_etl_pipeline_spark import plans as P
 from nyc_etl_pipeline_spark.io import read_testdata
 from nyc_etl_pipeline_spark.operators.retrieval import bm25_topk, boolean_and_search
 from nyc_etl_pipeline_spark.operators.sampling import weighted_sample
+from tests import plans as P
 
 
 def _docs(spark):
@@ -508,55 +508,51 @@ def test_sparse_cosine_vocab_paths_value_identical(spark):
         assert a == b and len(a) > 0
 
 
-def test_sparse_cosine_tf_cache_single_slot(spark):
-    """Repeated calls must not accumulate persisted tf relations
-    (ADVICE r10): the module-level slot unpersists the previous
-    call's cache, so after N calls exactly one sparse-tf cache
-    entry is live — and the evicted call's result still collects
-    correctly (lazy recompute)."""
-    from nyc_etl_pipeline_spark.operators import retrieval
+def test_sparse_cosine_tf_released_by_epoch_sweep(spark):
+    """The persisted tf follows the hygiene epoch contract: a same-tag
+    rebuild on one corpus re-matches the live cache entry (one entry,
+    read as an InMemoryRelation), another session's call leaves it
+    alone, and two epochs later the sweep releases it while the
+    results still recompute."""
+    from nyc_etl_pipeline_spark import hygiene as H
     from nyc_etl_pipeline_spark.operators.retrieval import sparse_cosine_pairs
+
+    def npersistent():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
 
     docs = spark.createDataFrame([
         (1, "apple banana cherry apple banana"),
         (2, "apple banana cherry apple grape"),
         (3, "totally unrelated words about engines and pistons"),
     ], "doc_id long, text string")
-    docs2 = spark.createDataFrame([
-        (7, "pear quince fig pear quince"),
-        (8, "pear quince fig pear melon"),
-        (9, "other things entirely like gears and sprockets"),
-    ], "doc_id long, text string")
+    H.release_all()
+    base = npersistent()
+    H.new_epoch("q178")
     first = sparse_cosine_pairs(docs, threshold=0.3)
-    first_tf = retrieval._SPARSE_TF_SLOT[spark]
-    second = sparse_cosine_pairs(docs2, threshold=0.3)
-    assert list(retrieval._SPARSE_TF_SLOT) == [spark]
-    assert retrieval._SPARSE_TF_SLOT[spark] is not first_tf
-    assert first_tf.storageLevel.useMemory is False  # unpersisted
-    assert retrieval._SPARSE_TF_SLOT[spark].storageLevel.useMemory is True
-    # the evicted first result still computes (recomputes tf lazily)
-    assert first.count() == second.count() == 1
-    # SAME-corpus repeat: the slot's materialized tf is REUSED, not
-    # evicted-and-rebuilt (the r11 close-out bench caught the rebuild
-    # as q178 0.34 -> 2.2 s: best-of-2 could never warm)
-    kept = retrieval._SPARSE_TF_SLOT[spark]
-    third = sparse_cosine_pairs(docs2, threshold=0.3)
-    assert retrieval._SPARSE_TF_SLOT[spark] is kept
-    assert kept.storageLevel.useMemory is True
-    assert third.count() == 1
-    # a SECOND live session gets its own slot and must NOT evict the
-    # first session's live cache (ADVICE r11: the old module-global
-    # single slot silently degraded concurrent pipelines to full
-    # recompute)
+    want = rows(first)
+    H.new_epoch("q178")  # same tag: the bench's second build
+    second = sparse_cosine_pairs(docs, threshold=0.3)
+    assert rows(second) == want and len(want) == 1
+    assert npersistent() == base + 1
+    assert "InMemoryRelation" in second._jdf.queryExecution().optimizedPlan().toString()
+
     other = spark.newSession()
-    docs3 = other.createDataFrame([
+    docs2 = other.createDataFrame([
         (11, "alpha beta gamma alpha beta"),
         (12, "alpha beta gamma alpha delta"),
         (13, "unrelated prose regarding turbines and flywheels"),
     ], "doc_id long, text string")
-    fourth = sparse_cosine_pairs(docs3, threshold=0.3)
-    assert fourth.count() == 1
-    assert retrieval._SPARSE_TF_SLOT[spark] is kept
-    assert kept.storageLevel.useMemory is True
-    assert set(retrieval._SPARSE_TF_SLOT) == {spark, other}
-    retrieval._SPARSE_TF_SLOT.pop(other).unpersist()
+    assert sparse_cosine_pairs(docs2, threshold=0.3).count() == 1
+    assert npersistent() == base + 2
+    third = sparse_cosine_pairs(docs, threshold=0.3)
+    assert rows(third) == want
+    assert npersistent() == base + 2  # still matched the first session's entry
+
+    H.new_epoch("q178_next1")
+    H.new_epoch("q178_next2")
+    assert npersistent() == base
+    assert rows(first) == want
+

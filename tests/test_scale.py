@@ -1,37 +1,9 @@
-"""Scale-path utilities: bucketed shuffle-free joins, skew salting."""
+"""Scale-path utilities: skew salting."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from nyc_etl_pipeline_spark import plans as P
 from nyc_etl_pipeline_spark.io import read_testdata
 from nyc_etl_pipeline_spark.operators import skew as SK
-
-
-def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
-    li = read_testdata(spark, sf_dir, "lineitem")
-    o = read_testdata(spark, sf_dir, "orders")
-    SK.write_bucketed(li, "b_lineitem", "l_orderkey", 8, path=str(tmp_path / "bl"))
-    SK.write_bucketed(
-        o.withColumnRenamed("o_orderkey", "l_orderkey"),
-        "b_orders",
-        "l_orderkey",
-        8,
-        path=str(tmp_path / "bo"),
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("b_lineitem").join(spark.table("b_orders"), on="l_orderkey")
-        plan = P.explain_str(joined, "simple")
-        assert "SortMergeJoin" in plan, plan
-        # bucket co-location: no shuffle exchange on either side
-        assert P.count_exchanges(plan) == 0, plan
-        assert joined.count() == li.join(o, li.l_orderkey == o.o_orderkey).count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
 
 
 def test_salted_agg_equals_plain(spark, sf_dir):

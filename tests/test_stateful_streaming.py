@@ -32,43 +32,6 @@ def _run_once(spark, src_dir, ckpt, name):
     return rows
 
 
-def test_transform_with_state_matches_batch(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas (new Spark 4 API) single-pass totals
-    equal the batch ground truth. The TWS python worker requires
-    google.protobuf (its state protocol) — absent/broken here, the
-    surface is skipped rather than stubbed."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf unavailable — transformWithState worker cannot start")
-    from nyc_etl_pipeline_spark.streaming.stateful import running_user_totals_tws
-
-    stream = open_event_stream(
-        spark, sf_dir, glob="events.parquet", sample=os.path.join(sf_dir, "events.parquet")
-    )
-    rows = []
-    q = (
-        running_user_totals_tws(stream)
-        .writeStream.outputMode("update")
-        .foreachBatch(lambda df, _e: rows.extend(df.collect()))
-        .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    got = {r["user_id"]: (r["n_events_total"], round(r["value_total"], 6)) for r in rows}
-    want = {
-        r["user_id"]: (r["n"], round(r["t"], 6))
-        for r in events.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("t"))
-        .collect()
-    }
-    assert got == want
-
-
 def test_state_accumulates_across_batches(spark, sf_dir, tmp_path):
     events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     # split the fixture into two arrival batches by event_id parity
@@ -157,66 +120,3 @@ def test_stream_capped_sessions_matches_batch_across_batches(spark, sf_dir, tmp_
     # non-vacuous: some user must actually have >1 session
     assert max(got.values()) > 1
 
-
-def test_stream_capped_sessions_tws_matches_batch_across_batches(
-    spark, sf_dir, tmp_path
-):
-    """The transformWithStateInPandas twin must produce the SAME
-    cross-batch session assignments as the batch operator (and hence
-    as the GroupState twin): two time-ordered arrival batches through
-    a shared checkpoint, every (user, event) assignment compared.
-    TWS's python worker needs google.protobuf — env-skip without it,
-    as with running_user_totals_tws."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip(
-            "google.protobuf unavailable — transformWithState worker cannot start"
-        )
-    from nyc_etl_pipeline_spark.operators.pandas_ops import capped_sessionize
-    from nyc_etl_pipeline_spark.streaming.stateful import stream_capped_sessions_tws
-
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    gap, cap = 30 * 60 * 10**6, 45 * 60 * 10**6
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    cut = events.agg(
-        F.expr("percentile(unix_micros(CAST(ts AS TIMESTAMP)), 0.5)")
-    ).first()[0]
-    src = tmp_path / "src"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    events.filter(us <= cut).write.parquet(str(src / "b1"))
-
-    def run_once():
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(str(src))
-        )
-        rows = []
-        q = (
-            stream_capped_sessions_tws(stream, gap, cap)
-            .writeStream.outputMode("append")
-            .foreachBatch(lambda df, _e: rows.extend(df.collect()))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return rows
-
-    got_rows = run_once()
-    events.filter(us > cut).write.parquet(str(src / "b2"))
-    got_rows += run_once()
-
-    got = {(r["user_id"], r["event_id"]): r["session_idx"] for r in got_rows}
-    want = {
-        (r["user_id"], r["event_id"]): r["session_idx"]
-        for r in capped_sessionize(
-            events, "user_id", "ts", "event_id", gap, cap
-        ).collect()
-    }
-    assert got == want
-    assert max(got.values()) > 1
