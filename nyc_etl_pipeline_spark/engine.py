@@ -17,12 +17,16 @@ Every table the Engine reads back is read with its schema from
 `schemas.ENGINE_TABLES`, so no read launches a schema-inference job;
 a change to what a layer writes must update that map. The dims layer
 writes a dim only when it changes (a new key, a new year); the zone
-dim alone is rewritten from its CSV on every pass. Job budget of an
-incremental pass over six one-color months, one changed: silver 3 (one
-scan per raw footer schema, plus the write), dims 7 (the stored
-date-dim year, two for the key pass, three dim reads, the zone write),
-fact 7, reports 15; tests/test_engine.py pins the budget on two-color
-months.
+dim alone is rewritten from its CSV on every pass. Within a layer,
+steps that write disjoint tables run side by side (`_concurrently`,
+under the caller's job group): the dims layer's four steps (the
+date-dim year check and write; the key pass and the three upserts; the
+type dim; the zone dim) and the reports layer's two mart builds and
+writes. Job budget of an incremental pass over six one-color months,
+one changed: silver 3 (one scan per raw footer schema, plus the
+write), dims 7 (the stored date-dim year, two for the key pass, three
+dim reads, the zone write), fact 7, reports 15; tests/test_engine.py
+pins the budget on two-color months.
 
 CLI:  python -m nyc_etl_pipeline_spark.engine \
           --warehouse /tmp/wh --green-dir .../green_data \
@@ -34,11 +38,14 @@ from __future__ import annotations
 import argparse
 import os
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor, wait
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.storagelevel import StorageLevel
+from pyspark.util import inheritable_thread_target
 
 from nyc_etl_pipeline_spark.io import Warehouse
 from nyc_etl_pipeline_spark.pipeline import (
@@ -51,7 +58,12 @@ from nyc_etl_pipeline_spark.pipeline import (
     seed_vendor_dim,
     zone_dim,
 )
-from nyc_etl_pipeline_spark.pipeline.dims import merge_dim_keys
+from nyc_etl_pipeline_spark.pipeline.dims import date_attributes, merge_dim_keys
+from nyc_etl_pipeline_spark.pipeline.reports import (
+    monthly_from_base,
+    shared_report_base,
+    weekly_from_base,
+)
 from nyc_etl_pipeline_spark.pipeline.silver import read_raw_normalized
 from nyc_etl_pipeline_spark.schemas import ENGINE_TABLES, GREEN_RAW, YELLOW_RAW
 
@@ -62,6 +74,34 @@ _UPSERTED_DIMS = (
     # 0 is the seeded 'Flex Fare trip' key (Q4)
     ("dim_payment", "payment_type", seed_payment_dim, "Unknown Payment Method", False),
 )
+
+# One pool for the life of the process: in pinned-thread mode every
+# Python thread holds its own JVM thread, so a pool per call would
+# leave JVM threads behind on every pass. Four workers cover the most
+# steps any layer submits at once (run_dims).
+_POOL = ThreadPoolExecutor(4, thread_name_prefix="engine-step")
+
+
+def _concurrently(spark: SparkSession, *steps: Callable[[], object]) -> list:
+    """Run zero-argument ``steps`` side by side and return their
+    results in order. Independent plans submitted together share the
+    scheduler's slots, so a 1-task write stage or a step's driver-side
+    plan building overlaps the others instead of leaving cores idle.
+
+    Each step runs with the caller's Spark local properties (job group,
+    scheduler pool) and session tags, copied when it is submitted, so
+    its jobs count under the caller's job group. Every step is waited
+    for before the first error (in step order) is re-raised: the
+    caller's cleanup, such as unpersisting a base the steps share, must
+    not run while a sibling still reads it.
+
+    A step must not call ``_concurrently`` itself: a nested submit to
+    the bounded pool can wait for a worker its own parent holds, and
+    deadlock.
+    """
+    futures = [_POOL.submit(inheritable_thread_target(spark)(step)) for step in steps]
+    wait(futures)
+    return [f.result() for f in futures]
 
 
 class Engine:
@@ -113,30 +153,41 @@ class Engine:
         new year, ``dim_type`` on first creation (its seeds, like the
         upserted dims', apply only then), an upserted dim when it is
         absent or gains a key. ``dim_zone`` follows the CSV and is
-        rewritten on every pass."""
+        rewritten on every pass. The four steps write disjoint tables
+        and run side by side."""
         spark = self.spark
-        # one bounded read finds the year of the stored date dim
-        year_row = self.wh.exists("dim_date") and self._read("dim_date").select("year").first()
-        if not year_row or year_row[0] != self.year:
-            self.wh.overwrite(
-                build_date_dim(spark, f"{self.year}-01-01", f"{self.year}-12-31"), "dim_date"
-            )
-        # every dim's distinct keys in one silver pass; the (enum-sized)
-        # merge with the existing rows then runs on the driver
-        found = self._read("trips_silver").agg(
-            *(F.collect_set(dim[1]) for dim in _UPSERTED_DIMS)
-        ).first()
-        for keys, (table, _, seed, default_name, drop_sentinel) in zip(found, _UPSERTED_DIMS):
-            stored = self.wh.exists(table)
-            existing = self._existing(table, seed)
-            merged = merge_dim_keys(existing, keys, default_name, drop_sentinel)
-            # merge_dim_keys only appends: same length == same table
-            if not stored or len(merged) > len(existing):
-                self._write_rows(merged, table)
-        if not self.wh.exists("dim_type"):
-            self.wh.overwrite(seed_type_dim(spark), "dim_type")
-        if zone_csv:
-            self.wh.overwrite(zone_dim(spark, zone_csv), "dim_zone")
+
+        def date_dim() -> None:
+            # one bounded read finds the year of the stored date dim
+            year_row = self.wh.exists("dim_date") and self._read("dim_date").select("year").first()
+            if not year_row or year_row[0] != self.year:
+                self.wh.overwrite(
+                    build_date_dim(spark, f"{self.year}-01-01", f"{self.year}-12-31"), "dim_date"
+                )
+
+        def upserted_dims() -> None:
+            # every dim's distinct keys in one silver pass; the (enum-
+            # sized) merge with the existing rows then runs on the driver
+            found = self._read("trips_silver").agg(
+                *(F.collect_set(dim[1]) for dim in _UPSERTED_DIMS)
+            ).first()
+            for keys, (table, _, seed, default_name, drop_sentinel) in zip(found, _UPSERTED_DIMS):
+                stored = self.wh.exists(table)
+                existing = self._existing(table, seed)
+                merged = merge_dim_keys(existing, keys, default_name, drop_sentinel)
+                # merge_dim_keys only appends: same length == same table
+                if not stored or len(merged) > len(existing):
+                    self._write_rows(merged, table)
+
+        def type_dim() -> None:
+            if not self.wh.exists("dim_type"):
+                self.wh.overwrite(seed_type_dim(spark), "dim_type")
+
+        def zone() -> None:
+            if zone_csv:
+                self.wh.overwrite(zone_dim(spark, zone_csv), "dim_zone")
+
+        _concurrently(spark, date_dim, upserted_dims, type_dim, zone)
 
     # Dims are enum-like (vendors, rate codes, payment types) — a few
     # dozen rows by design. The bound exists so corrupt raw data that
@@ -218,12 +269,10 @@ class Engine:
             if not affected:
                 return
             silver = silver.filter(F.col("month").isin(affected))
-        # dateID is days since Jan 1 of self.year, plus 1 (build_date_dim
-        # as run_dims calls it), so the pickup month needs no join
-        start = F.lit(f"{self.year}-01-01").cast("date")
-        fact = build_fact(silver, dd, dtype).withColumn(
-            "month", F.month(F.date_add(start, F.col("date_puID") - 1))
-        )
+        # dateID numbers the days of self.year (build_date_dim as
+        # run_dims calls it), so the pickup month needs no join
+        month = date_attributes(F.col("date_puID"), f"{self.year}-01-01")["month"]
+        fact = build_fact(silver, dd, dtype).withColumn("month", month)
         if full_rebuild:
             # static overwrite: a month deleted upstream must not leave
             # a stale fact partition behind (dynamic mode would keep it)
@@ -237,14 +286,6 @@ class Engine:
     # ---- reports ---------------------------------------------------------
 
     def run_reports(self) -> None:
-        from nyc_etl_pipeline_spark.pipeline.reports import (
-            monthly_from_base,
-            shared_report_base,
-            weekly_from_base,
-        )
-
-        from pyspark.storagelevel import StorageLevel
-
         fact = self._read("fact_nyc").drop("month")
         # One scan + one shuffle serve BOTH marts: the base is hash-
         # partitioned on the 6 shared grouping keys (a subset of each
@@ -261,15 +302,20 @@ class Engine:
         # hash aggs need execution memory (a 36M-row run in a 4g heap
         # died that way).
         n_parts = max(1, min(4096, -(-self.wh.size_bytes("fact_nyc") // (32 << 20))))
-        base = shared_report_base(
-            fact, self._read("dim_date"), num_partitions=n_parts
-        ).persist(StorageLevel.DISK_ONLY)
+        base = shared_report_base(fact, self.year, num_partitions=n_parts).persist(
+            StorageLevel.DISK_ONLY
+        )
         dims = tuple(
             self._read(t) for t in ("dim_zone", "dim_type", "dim_vendor", "dim_payment", "dim_rate")
         )
+        # the two marts are built and written side by side; the base is
+        # released only once both have ended
         try:
-            self.wh.overwrite(monthly_from_base(base, *dims), "monthly_report")
-            self.wh.overwrite(weekly_from_base(base, *dims), "weekly_report")
+            _concurrently(
+                self.spark,
+                lambda: self.wh.overwrite(monthly_from_base(base, *dims), "monthly_report"),
+                lambda: self.wh.overwrite(weekly_from_base(base, *dims), "weekly_report"),
+            )
         finally:
             base.unpersist()
 

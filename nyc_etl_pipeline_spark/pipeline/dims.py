@@ -15,7 +15,7 @@ dropped from dims (gold.py:104/163/220) except dim_payment which seeds
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_etl_pipeline_spark.io import read_csv
@@ -26,6 +26,21 @@ from nyc_etl_pipeline_spark.schemas import (
     DIM_VENDOR,
     TAXI_ZONE,
 )
+
+
+def date_attributes(date_id: Column, start: str) -> dict[str, Column]:
+    """``month``, ``dayOfWeek`` and ``weekOfYear`` of the day that
+    ``date_id`` names, where a dateID counts days since ``start`` plus 1
+    (``build_date_dim``'s numbering). Plain column arithmetic: a fact
+    keyed by ``date_puID`` gets its date parts without a date-dim join.
+    ``weekOfYear`` is the ISO week, so 2023-01-01 is in week 52 and
+    2024-12-30 in week 1."""
+    date = F.date_add(F.lit(start).cast("date"), (date_id - 1).cast("int"))
+    return {
+        "month": F.month(date).cast("int"),
+        "dayOfWeek": F.date_format(date, "EEEE"),
+        "weekOfYear": F.weekofyear(date).cast("int"),
+    }
 
 
 def build_date_dim(spark: SparkSession, start: str = "2023-01-01", end: str = "2023-12-31") -> DataFrame:
@@ -44,17 +59,19 @@ def build_date_dim(spark: SparkSession, start: str = "2023-01-01", end: str = "2
             ).alias("date")
         )
     )
+    date_id = (F.datediff("date", F.lit(start).cast("date")) + 1).cast("int")
+    attrs = date_attributes(date_id, start)
     return days.select(
-        (F.datediff("date", F.lit(start).cast("date")) + 1).cast("int").alias("dateID"),
+        date_id.alias("dateID"),
         F.col("date"),
         F.date_format("date", "yyyy-MM-dd").alias("dateStr"),
         F.dayofmonth("date").cast("int").alias("day"),
-        F.month("date").cast("int").alias("month"),
+        attrs["month"].alias("month"),
         F.concat(F.lit("Q"), F.quarter("date").cast("string")).alias("quarter"),
         F.year("date").cast("int").alias("year"),
         F.dayofmonth("date").cast("int").alias("dayOfMonth"),
-        F.date_format("date", "EEEE").alias("dayOfWeek"),
-        F.weekofyear("date").cast("int").alias("weekOfYear"),
+        attrs["dayOfWeek"].alias("dayOfWeek"),
+        attrs["weekOfYear"].alias("weekOfYear"),
         F.when(F.dayofweek("date").isin(1, 7), F.lit(1)).otherwise(F.lit(0)).alias("Weekday"),
     )
 

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nyc_etl_pipeline_spark.pipeline.dims import date_attributes
+
 # Grouping keys common to BOTH marts — the shared-exchange partition key.
 SHARED_KEYS = [
     "PULocationID",
@@ -124,7 +126,7 @@ def _decorate(
     return df.select(*out_cols)
 
 
-def shared_report_base(fact: DataFrame, dim_date: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def shared_report_base(fact: DataFrame, year: int, num_partitions: int | None = None) -> DataFrame:
     """Fact decorated with every date attribute both marts need, hash-
     partitioned on the 6 shared grouping keys.
 
@@ -134,20 +136,21 @@ def shared_report_base(fact: DataFrame, dim_date: DataFrame, num_partitions: int
     adds an Exchange — one shuffle serves both marts. Caller should
     persist the result before fanning out (Engine.run_reports does).
 
+    The date parts come from ``date_puID`` itself (``date_attributes``,
+    the date dim's own definition, for the dim built from Jan 1 of
+    ``year``), so the base joins nothing: ``build_fact``'s inner join
+    already kept only fact rows whose pickup day is in the date dim.
     Only the columns the aggregates consume survive into the base, so
     a persisted copy holds 6 ints + 3 date parts + 7 measures — not
     the full fact row.
     """
-    dd = F.broadcast(
-        dim_date.select(
-            F.col("dateID").alias("date_puID"),
-            F.col("month").alias("month_pu"),
-            F.col("dayOfWeek").alias("dayOfWeek_pu"),
-            F.col("weekOfYear").alias("weekOfYear_pu"),
-        )
-    )
-    base = fact.join(dd, on="date_puID", how="inner").select(
-        *SHARED_KEYS, "month_pu", "dayOfWeek_pu", "weekOfYear_pu", *_MEASURES
+    attrs = date_attributes(F.col("date_puID"), f"{year}-01-01")
+    base = fact.select(
+        *SHARED_KEYS,
+        attrs["month"].alias("month_pu"),
+        attrs["dayOfWeek"].alias("dayOfWeek_pu"),
+        attrs["weekOfYear"].alias("weekOfYear_pu"),
+        *_MEASURES,
     )
     parts = [num_partitions] if num_partitions else []
     return base.repartition(*parts, *[F.col(k) for k in SHARED_KEYS])

@@ -6,12 +6,16 @@ runs everywhere."""
 
 import os
 import shutil
+import threading
+import time
+import warnings
 
 import pyarrow.parquet as pq
 import pytest
 from conftest import GREEN_DIR, ZONE_CSV, requires_reference
 from pyspark.sql import functions as F
 
+from nyc_etl_pipeline_spark import engine
 from nyc_etl_pipeline_spark.engine import Engine
 from nyc_etl_pipeline_spark.schemas import ENGINE_TABLES
 
@@ -373,3 +377,99 @@ def test_engine_layer_job_budget(spark, tmp_path, zone_csv, green_raw, synth_dir
     for run, budget in JOB_BUDGET.items():
         over = {k: (jobs[run][k], v) for k, v in budget.items() if jobs[run][k] > v}
         assert not over, f"{run} pass: layer (jobs, budget) over budget: {over}"
+
+
+# ---- steps run side by side ----------------------------------------------
+
+
+def test_concurrently_returns_in_order_and_raises_after_every_step(spark):
+    assert engine._concurrently(spark, lambda: 1, lambda: 2) == [1, 2]
+    finished = threading.Event()
+
+    def slow():
+        time.sleep(0.5)
+        finished.set()
+
+    def fail():
+        raise RuntimeError("step failed")
+
+    with pytest.raises(RuntimeError, match="step failed"):
+        engine._concurrently(spark, fail, slow)
+    assert finished.is_set(), "the error surfaced while a sibling step still ran"
+
+
+def test_run_reports_failure_releases_base_after_both_marts(
+    spark, tmp_path, zone_csv, synth_dirs, monkeypatch
+):
+    """A failing mart surfaces its error only once the other mart has
+    been written, and the shared base is unpersisted after both."""
+    green, yellow = synth_dirs
+    eng = Engine(spark, str(tmp_path / "wh"))
+    eng.run_all(green, yellow, zone_csv)
+    written = []
+    overwrite = eng.wh.overwrite
+
+    def recording_overwrite(df, table, *args):
+        overwrite(df, table, *args)
+        written.append(table)
+
+    def broken_weekly(*_):
+        raise RuntimeError("weekly mart failed")
+
+    monkeypatch.setattr(eng.wh, "overwrite", recording_overwrite)
+    monkeypatch.setattr(engine, "weekly_from_base", broken_weekly)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="weekly mart failed"):
+        eng.run_reports()
+    assert written == ["monthly_report"]
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def _job_ids(spark) -> set[int]:
+    """Ids of the jobs the status store holds. Sets of ids, not sizes,
+    are compared: the store drops its oldest jobs beyond
+    ``spark.ui.retainedJobs``, which a long test session passes."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+def test_engine_steps_run_under_callers_job_group(
+    spark, tmp_path, zone_csv, green_raw, synth_dirs, count_jobs
+):
+    """Every job that run_dims and run_reports launch from their step
+    threads counts under the caller's job group, on a full and an
+    incremental pass. Warnings are errors here, so a step wrapped
+    without the session ("Tags will not be inherited") fails too."""
+    green, yellow = synth_dirs
+    eng = Engine(spark, str(tmp_path / "wh"))
+    layers = {"dims": lambda: eng.run_dims(zone_csv), "reports": eng.run_reports}
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        # PySpark's collect leaves its local socket to the collector
+        warnings.simplefilter("ignore", ResourceWarning)
+        for run in ("full", "incremental"):
+            eng.run_silver(green, yellow)
+            for layer in ("dims", "reports"):
+                if layer == "reports":
+                    eng.run_fact()
+                before = _job_ids(spark)
+                grouped = count_jobs(layers[layer])[1]
+                launched = len(_job_ids(spark) - before)
+                assert grouped == launched > 0, f"{run} {layer}: {grouped} of {launched} jobs in group"
+            _reprice_february(green_raw, green)
+
+
+def test_engine_passes_do_not_accumulate_threads(spark, tmp_path, zone_csv, synth_dirs):
+    """Repeated passes reuse the step threads: each Python thread holds
+    a JVM thread in pinned-thread mode, so new threads per pass would
+    pile up on both sides of the gateway."""
+    green, yellow = synth_dirs
+    eng = Engine(spark, str(tmp_path / "wh"))
+    eng.run_all(green, yellow, zone_csv)
+    eng.run_all(green, yellow, zone_csv)
+    after_first = threading.active_count()
+    for _ in range(9):
+        eng.run_all(green, yellow, zone_csv)
+    assert threading.active_count() <= after_first

@@ -130,7 +130,7 @@ def test_monthly_report_matches_independent_duckdb_implementation(
     )
     fact = build_fact(silver, dd, seed_type_dim(spark))
     report = monthly_from_base(
-        shared_report_base(fact, dd),
+        shared_report_base(fact, 2023),
         zone_dim(spark, zone),
         seed_type_dim(spark),
         vendors,

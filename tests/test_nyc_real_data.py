@@ -59,7 +59,7 @@ def test_full_year_pipeline_under_two_minutes(spark):
         seed_payment_dim(spark),
         seed_rate_dim(spark),
     )
-    base = shared_report_base(fact, dd)
+    base = shared_report_base(fact, 2023)
     m = monthly_from_base(base, *dims)
     w = weekly_from_base(base, *dims)
     n_monthly = m.count()

@@ -2,7 +2,9 @@
 (SURVEY §2 operator families S/P/J/U/A and quirks Q1-Q10)."""
 
 import datetime
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from nyc_etl_pipeline_spark.pipeline import (
@@ -20,6 +22,7 @@ from nyc_etl_pipeline_spark.pipeline import (
     weekly_from_base,
     zone_dim,
 )
+from nyc_etl_pipeline_spark.pipeline.dims import date_attributes
 from nyc_etl_pipeline_spark.schemas import TRIPS_SILVER
 
 
@@ -67,6 +70,34 @@ def test_date_dim(spark):
     jul4 = [r for r in rows if r["dateStr"] == "2023-07-04"][0]
     assert jul4["quarter"] == "Q3" and jul4["Weekday"] == 0
     assert jul4["weekOfYear"] == 27
+
+
+# (year, dateID, month, dayOfWeek, ISO weekOfYear) at the year edges:
+# 2023-01-01 closes ISO week 52 of 2022, 2024-12-30 opens week 1 of
+# 2025, and 2020-12-31 is in week 53
+_DATE_EDGES = {
+    2023: (1, 1, "Sunday", 52),
+    2024: (365, 12, "Monday", 1),
+    2020: (366, 12, "Thursday", 53),
+}
+
+
+@pytest.mark.parametrize("year", sorted(_DATE_EDGES))
+def test_date_attributes_match_date_dim(spark, year):
+    """The date parts derived from a dateID alone equal the date dim's
+    for every day of the year, leap years and ISO-week wraps included."""
+    start = f"{year}-01-01"
+    cols = ["dateID", "month", "dayOfWeek", "weekOfYear"]
+    dd = build_date_dim(spark, start, f"{year}-12-31").select(*cols)
+    n_days = 366 if year % 4 == 0 else 365
+    attrs = date_attributes(F.col("dateID"), start)
+    derived = spark.range(1, n_days + 1).select(F.col("id").cast("int").alias("dateID")).select(
+        "dateID", *(attrs[c].alias(c) for c in cols[1:])
+    )
+    got = Counter(map(tuple, derived.collect()))
+    assert got == Counter(map(tuple, dd.collect()))
+    assert sum(got.values()) == n_days
+    assert got[_DATE_EDGES[year]] == 1
 
 
 def test_upsert_dim_adds_unseen_vendor_with_default(spark, green_raw, yellow_raw):
@@ -127,7 +158,7 @@ def test_reports_end_to_end(spark, green_raw, yellow_raw, zone_csv):
         "Unknown Vendor",
     )
     dims = (zone, seed_type_dim(spark), vendors, seed_payment_dim(spark), seed_rate_dim(spark))
-    base = shared_report_base(fact, dd)
+    base = shared_report_base(fact, 2023)
     m = monthly_from_base(base, *dims)
     rows = m.collect()
     # 7 fact rows: the RatecodeID=0 row has no dim_rate entry -> dropped

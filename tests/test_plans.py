@@ -386,7 +386,6 @@ def test_shared_report_base_serves_both_marts_shuffle_free(spark):
     aggregations each plan partial+final HashAggregate directly over
     the InMemoryTableScan — zero ENSURE_REQUIREMENTS exchanges. One
     scan + one shuffle serve both report writes."""
-    from nyc_etl_pipeline_spark.pipeline import build_date_dim
     from nyc_etl_pipeline_spark.pipeline.reports import (
         monthly_from_base,
         shared_report_base,
@@ -422,7 +421,7 @@ def test_shared_report_base_serves_both_marts_shuffle_free(spark):
             ("RatecodeID", "RatecodeName"),
         ]
     ]
-    base = shared_report_base(fact, build_date_dim(spark)).persist()
+    base = shared_report_base(fact, 2023).persist()
     try:
         base.count()
         for mart in (monthly_from_base(base, *dims), weekly_from_base(base, *dims)):
