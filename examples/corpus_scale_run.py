@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nyc_etl_pipeline_spark import get_spark
+from nyc_etl_pipeline_spark import get_spark, hygiene
 
 VOCAB = 2000        # distinct fake words
 DOC_TOKENS = 60     # tokens per document
@@ -95,6 +95,7 @@ def main() -> None:
     print(f"synth+persist: {n:,} docs in {time.perf_counter() - t0:.1f}s")
 
     def timed(label: str, fn):
+        hygiene.new_epoch(label)  # release the case-before-last's scratch
         t = time.perf_counter()
         out = fn()
         print(f"{label}: {out} in {time.perf_counter() - t:.1f}s")

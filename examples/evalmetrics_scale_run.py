@@ -24,7 +24,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 from pyspark.sql import functions as F
 
-from nyc_etl_pipeline_spark import get_spark
+from nyc_etl_pipeline_spark import get_spark, hygiene
 from nyc_etl_pipeline_spark.operators.evalmetrics import (
     average_precision,
     calibration_report,
@@ -70,6 +70,7 @@ def main() -> None:
     print(f"synth+persist: {df.count():,} rows in {time.perf_counter() - t0:.1f}s")
 
     def timed(label, fn):
+        hygiene.new_epoch(label)  # release the case-before-last's scratch
         t = time.perf_counter()
         out = fn()
         print(f"{label}: {out} in {time.perf_counter() - t:.1f}s", flush=True)

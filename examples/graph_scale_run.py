@@ -24,7 +24,7 @@ os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
 
 from pyspark.sql import functions as F
 
-from nyc_etl_pipeline_spark import get_spark
+from nyc_etl_pipeline_spark import get_spark, hygiene
 
 
 def synth_edges(spark, n_edges: int, n_nodes: int):
@@ -70,6 +70,7 @@ def main() -> None:
     )
 
     def timed(label: str, fn):
+        hygiene.new_epoch(label)  # release the case-before-last's scratch
         t = time.perf_counter()
         out = fn()
         print(f"{label}: {out} in {time.perf_counter() - t:.1f}s")

@@ -47,6 +47,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.storagelevel import StorageLevel
 from pyspark.util import inheritable_thread_target
 
+from nyc_etl_pipeline_spark.hygiene import release, scratch_persist
 from nyc_etl_pipeline_spark.io import Warehouse
 from nyc_etl_pipeline_spark.pipeline import (
     build_date_dim,
@@ -302,8 +303,9 @@ class Engine:
         # hash aggs need execution memory (a 36M-row run in a 4g heap
         # died that way).
         n_parts = max(1, min(4096, -(-self.wh.size_bytes("fact_nyc") // (32 << 20))))
-        base = shared_report_base(fact, self.year, num_partitions=n_parts).persist(
-            StorageLevel.DISK_ONLY
+        base = scratch_persist(
+            shared_report_base(fact, self.year, num_partitions=n_parts),
+            StorageLevel.DISK_ONLY,
         )
         dims = tuple(
             self._read(t) for t in ("dim_zone", "dim_type", "dim_vendor", "dim_payment", "dim_rate")
@@ -317,7 +319,7 @@ class Engine:
                 lambda: self.wh.overwrite(weekly_from_base(base, *dims), "weekly_report"),
             )
         finally:
-            base.unpersist()
+            release(base)
 
     def run_all(
         self,

@@ -1,37 +1,48 @@
-"""Scratch-cache hygiene: bounded, epoch-based release of the
-persist()/localCheckpoint() intermediates operators create while
-building a declared query's plan.
+"""Scratch lifetime: the one module that persists, checkpoints or
+releases an intermediate.
 
-The problem (r12 degradation probe): operators persist or
-localCheckpoint intermediates that feed several branches of the plan
-they RETURN. The consuming action runs later, in the caller, so the
-operator itself has no correct place to unpersist — and without a
-release point every long-lived session accumulates CacheManager
-entries and checkpoint blocks. Measured effect in the 204-query bench:
-late-order queries ran ~2.5-3x their isolated times, and the best-of-2
-policy silently re-read run 1's leaked cache in run 2 (plan-identical
-persists are matched by the CacheManager across separate builds of the
-same query).
+Operators persist or checkpoint intermediates that feed several
+branches of the plan they RETURN. A DataFrame is a lazy plan and the
+consuming action runs later, in the caller, so the operator cannot
+release scratch that backs its result. Without a release point every
+long-lived session accumulates CacheManager entries and checkpoint
+blocks (the r12 degradation probe: late-order bench queries ran
+~2.5-3x their isolated times), and because the CacheManager matches
+plan-identical persists across separate builds, leaked scratch also
+silently warms later runs of the same query.
 
-The contract implemented here:
+The contract:
 
-* Operators route scratch intermediates through ``scratch_persist(df)``
-  / ``scratch_checkpoint(df, eager=...)`` instead of bare
-  ``persist()`` / ``localCheckpoint()``. Behaviour is identical; the
-  handle is additionally registered with the CURRENT EPOCH.
-* The suite registry advances the epoch at the start of every declared
-  query's builder (``suite.all_specs`` wraps each fn). Advancing to
-  epoch N releases everything registered at epoch <= N - KEEP_EPOCHS.
-* A returned DataFrame is therefore guaranteed re-executable for the
-  epoch it was built in plus the next KEEP_EPOCHS - 1 — which covers
-  every harness flow (bench: build -> action x2 per epoch; driver:
-  build -> collect -> compare; engine: build -> write). Holding a
-  query's result across many OTHER declared-query builds and
-  re-executing it later recomputes persisted scratch (correct, just
-  unaided); checkpointed scratch is only ever released once its blocks
-  have actually been materialized by an action, so an un-run plan is
-  never broken — see _release below for the one usage that can still
-  raise, and why it is out of contract.
+* What registers. ``scratch_persist(df)`` persists and
+  ``scratch_checkpoint(df)`` localCheckpoints EAGERLY (the blocks
+  exist before it returns); both register the result with the current
+  epoch. No other package module calls persist/unpersist/
+  localCheckpoint/cache (``tests/test_hygiene.py`` parses them all).
+* Caller-cache rule. ``scratch_persist`` returns a frame whose plan is
+  already cached as it is, unregistered: persist is not reference-
+  counted, so dropping a cache someone else created evicts it under
+  them (a trainer that did so made the next consumer of its caller's
+  pre-cached features re-pay the whole feature build).
+* When the sweep releases. ``new_epoch(tag)`` advances the epoch and
+  releases everything registered KEEP_EPOCHS or more epochs ago. The
+  suite registry calls it at the start of every declared query's
+  builder, and consecutive builds with the same tag share one epoch,
+  so a returned frame stays aided for its own epoch plus the next
+  KEEP_EPOCHS - 1: every harness runs the action after the builder
+  returns (bench: build -> action x2; driver: build -> collect ->
+  compare; perfbench: build -> noop write). Direct callers outside the
+  suite (the scale-run examples) call ``new_epoch`` per case
+  themselves.
+* What ``release(df)`` is for. Scratch the returned plan no longer
+  reads — the previous round of an iterative loop, an edge table only
+  the loop scanned, a trainer's feature cache — is dropped at once
+  instead of waiting for the sweep. An unregistered frame is a no-op.
+* Past the lifetime. A result re-executed KEEP_EPOCHS or more builds
+  after its own recomputes its persisted scratch (correct, unaided),
+  but FAILS with a missing-checkpoint-block error if it reads
+  checkpointed scratch: a checkpoint truncates lineage, so there is
+  nothing to recompute from. Hold such results materialized
+  (write/collect) instead.
 
 Why epochs and not weakrefs: a PySpark DataFrame's Python handle dies
 as soon as the builder returns a derived frame (``df.select(...)``
@@ -39,20 +50,16 @@ holds no reference to ``df``), so finalizers fire before the action —
 the exact opposite of the needed lifetime. Epoch distance is the
 library-visible notion of "two queries later", which IS the lifetime
 the harnesses guarantee.
-
-At 100 TB nothing changes structurally: executors hold the same blocks
-either way; this bounds DRIVER CacheManager growth and storage-memory
-creep in any long-lived session (a multi-tenant notebook, the bench,
-the driver's 50-query sweep) instead of relying on JVM GC to collect
-py4j-held RDD handles, which it does far too late under a large heap.
 """
 
 from __future__ import annotations
 
 import threading
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
 
 #: scratch registered at epoch E is released when the epoch counter
 #: reaches E + KEEP_EPOCHS: the query's own actions (bench runs both
@@ -60,136 +67,60 @@ from pyspark.sql import DataFrame
 #: and one full neighbouring epoch stay aided.
 KEEP_EPOCHS = 2
 
-#: an unmaterialized checkpoint entry is re-deferred at most this many
-#: sweeps before its registration is dropped (abandoned plans hold no
-#: blocks; dropping just stops tracking them).
-MAX_DEFERS = 32
-
 _LOCK = threading.RLock()
 _EPOCH = 0
 _LAST_TAG: str | None = None
-# [epoch, kind, payload, defers]: kind "cache" -> PySpark DataFrame to
-# unpersist; kind "ckpt" -> (py4j JavaObject of the checkpointed
-# RDD[InternalRow], DataFrame keeping the plan alive).
-_ENTRIES: list[list[Any]] = []
+# (epoch, registered frame, handle whose unpersist(False) drops its
+# blocks): the frame itself for a persist; the checkpointed
+# RDD[InternalRow] for a checkpoint (the frame rides along so py4j
+# cannot collect the RDD handle before release).
+_ENTRIES: list[tuple[int, DataFrame, Any]] = []
 
 
-def scratch_persist(df: DataFrame, storage_level=None) -> DataFrame:
-    """persist() + register for epoch-based release. Releasing a
-    persist is always value-safe (unpersisted frames recompute)."""
-    out = df.persist(storage_level) if storage_level is not None else df.persist()
+def _register(df: DataFrame, handle: Any) -> DataFrame:
     with _LOCK:
-        _ENTRIES.append([_EPOCH, "cache", out, 0])
-    return out
-
-
-def _checkpoint_jrdd(df: DataFrame):
-    """The JVM RDD[InternalRow] a localCheckpoint'ed Dataset wraps
-    (its analyzed plan is a LogicalRDD). None if the plan shape is
-    ever not the expected one — release then just skips it."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        return plan.rdd()
-    except Exception:
-        return None
-
-
-def scratch_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
-    """localCheckpoint() + register the underlying RDD for epoch-based
-    release. The RDD's blocks are only ever dropped AFTER they have
-    been materialized by an action (block presence probed via
-    getRDDStorageInfo), so a plan that is never executed is never
-    corrupted; a plan re-executed
-    KEEP_EPOCHS or more declared-query builds after its own is out of
-    the documented lifetime and would fail with a missing-checkpoint-
-    block error rather than silently recompute — callers holding
-    results that long should materialize them (write/collect) first.
-    """
-    out = df.localCheckpoint(eager=eager)
-    register_checkpointed(out)
-    return out
-
-
-def scratch_checkpoint_eager(df: DataFrame) -> DataFrame:
-    """`.transform(scratch_checkpoint_eager)` chain helper."""
-    return scratch_checkpoint(df, eager=True)
-
-
-def register_checkpointed(df: DataFrame) -> DataFrame:
-    """Register an ALREADY locally-checkpointed frame for epoch-based
-    release (iterative operators checkpoint per round themselves and
-    register only the final state they return)."""
-    jrdd = _checkpoint_jrdd(df)
-    if jrdd is not None:
-        with _LOCK:
-            # keep `df` alive alongside: if the caller drops the frame,
-            # py4j must not GC the RDD handle before release sees it
-            _ENTRIES.append([_EPOCH, "ckpt", (jrdd, df), 0])
+        _ENTRIES.append((_EPOCH, df, handle))
     return df
 
 
-def _has_blocks(jrdd) -> bool:
-    """True iff the RDD currently holds cached/checkpoint blocks.
-    (isLocallyCheckpointed is true from the moment the RDD is MARKED,
-    before any action materializes it — unpersisting at that point
-    would poison the plan's first execution, so block presence is the
-    release gate.)"""
-    rid = jrdd.id()
-    infos = jrdd.sparkContext().getRDDStorageInfo()
-    for i in range(len(infos)):
-        if infos[i].id() == rid:
-            return True
-    return False
+def scratch_persist(df: DataFrame, storage_level=None) -> DataFrame:
+    """persist() + register with the current epoch; a frame whose plan
+    is already cached is returned as is, unregistered (the caller-cache
+    rule). Releasing a persist is always value-safe: the frame
+    recomputes."""
+    if df.storageLevel != StorageLevel.NONE:
+        return df
+    out = df.persist(storage_level) if storage_level is not None else df.persist()
+    return _register(out, out)
 
 
-def release_checkpoint_now(df: DataFrame) -> None:
-    """Immediately drop a checkpointed frame's blocks — for iterative
-    loops where round N's eager checkpoint supersedes round N-1's
-    (the new blocks are already materialized, so the old table is
-    provably dead inside the operator)."""
-    jrdd = _checkpoint_jrdd(df)
-    if jrdd is None:
-        return
-    try:
-        if _has_blocks(jrdd):
-            jrdd.unpersist(False)
-    except Exception:
-        pass
+def scratch_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint() + register with the current epoch. The
+    blocks are materialized before this returns, so the sweep or
+    ``release`` can always drop them."""
+    out = df.localCheckpoint(eager=True)
+    # a localCheckpoint'ed Dataset's analyzed plan is a LogicalRDD over
+    # the checkpointed RDD[InternalRow]
+    return _register(out, out._jdf.queryExecution().analyzed().rdd())
 
 
-def _release(epoch_cutoff: int) -> None:
+def _release(match: Callable[[tuple[int, DataFrame, Any]], bool]) -> None:
     with _LOCK:
-        keep: list[list[Any]] = []
-        to_drop: list[list[Any]] = []
-        for entry in _ENTRIES:
-            if entry[0] <= epoch_cutoff:
-                to_drop.append(entry)
-            else:
-                keep.append(entry)
-        _ENTRIES[:] = keep
-    deferred: list[list[Any]] = []
-    for entry in to_drop:
-        _, kind, payload, defers = entry
+        dropped = [e for e in _ENTRIES if match(e)]
+        _ENTRIES[:] = [e for e in _ENTRIES if not match(e)]
+    for _, _, handle in dropped:
         try:
-            if kind == "cache":
-                payload.unpersist()
-            else:
-                jrdd, _df = payload
-                if _has_blocks(jrdd):
-                    jrdd.unpersist(False)
-                elif defers < MAX_DEFERS:
-                    # never materialized -> holds no blocks yet; keep
-                    # the registration so blocks created by a LATE
-                    # first action are still released by a later sweep
-                    entry[3] = defers + 1
-                    deferred.append(entry)
+            handle.unpersist(False)
         except Exception:
             # a dead/stopped session (tests tear sessions down) must
             # not fail the next query's build
             pass
-    if deferred:
-        with _LOCK:
-            _ENTRIES.extend(deferred)
+
+
+def release(df: DataFrame) -> None:
+    """Drop one registered frame's blocks now (see the module
+    docstring); a frame this module did not register is left alone."""
+    _release(lambda e: e[1] is df)
 
 
 def new_epoch(tag: str | None = None) -> int:
@@ -203,9 +134,8 @@ def new_epoch(tag: str | None = None) -> int:
     execution pays one-off costs that are not plan properties") keeps
     run 2 warm — run 2 re-matches run 1's still-registered scratch in
     the CacheManager (q178's sparse tf relies on exactly this). The
-    leak this module fixes is
-    ACCUMULATION ACROSS DIFFERENT queries, which is what epoch
-    advancement tracks."""
+    leak this module fixes is ACCUMULATION ACROSS DIFFERENT queries,
+    which is what epoch advancement tracks."""
     global _EPOCH, _LAST_TAG
     with _LOCK:
         if tag is not None and tag == _LAST_TAG:
@@ -213,13 +143,13 @@ def new_epoch(tag: str | None = None) -> int:
         _LAST_TAG = tag
         _EPOCH += 1
         epoch = _EPOCH
-    _release(epoch - KEEP_EPOCHS)
+    _release(lambda e: e[0] <= epoch - KEEP_EPOCHS)
     return epoch
 
 
 def release_all() -> None:
     """Release everything registered (session teardown / tests)."""
-    _release(_EPOCH)
+    _release(lambda e: True)
 
 
 def registered_count() -> int:

@@ -28,6 +28,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nyc_etl_pipeline_spark.hygiene import release, scratch_persist
 from nyc_etl_pipeline_spark.operators.text import tokens
 
 END_OF_WORD = "</w>"
@@ -102,7 +103,7 @@ def bpe_train(
     table exceeds `max_distinct_words` (raise the cap consciously, or
     pre-truncate the long tail with a HAVING freq >= k filter — the
     standard web-scale practice — rather than OOM-ing the driver)."""
-    wf = word_frequencies(docs, text_col).persist()
+    wf = scratch_persist(word_frequencies(docs, text_col))
     try:
         n = wf.count()  # materializes the persist; collect() below reuses it
         if n > max_distinct_words:
@@ -113,7 +114,7 @@ def bpe_train(
             )
         collected = [(r["word"], r["freq"]) for r in wf.collect()]
     finally:
-        wf.unpersist()
+        release(wf)
     collected.sort()  # shuffle-order independence
     return bpe_train_from_word_freqs(collected, n_merges)
 

@@ -48,6 +48,7 @@ from nyc_etl_pipeline_spark.functions import (
     round_half_up,
     sql_md5_long,
 )
+from nyc_etl_pipeline_spark.hygiene import release, scratch_persist
 from nyc_etl_pipeline_spark.operators.text import tokens
 
 
@@ -244,9 +245,7 @@ def logreg_train_fixed(
     # Column form (D-suffixed double literals, same association).
     w = [0.0] * dim
     spark = feats.sparkSession
-    managed = not _caller_cached(feats)
-    if managed:
-        feats = feats.persist()
+    feats = scratch_persist(feats)  # a caller's cache stays the caller's
     base = feats.select(
         F.col(x_col).alias("__x"), F.col(label_col).alias("__y")
     )
@@ -271,8 +270,7 @@ def logreg_train_fixed(
                     for i in range(1, dim + 1)
                 ]
     finally:
-        if managed:
-            feats.unpersist()
+        release(feats)
     return w
 
 
@@ -290,20 +288,6 @@ def logreg_score(
         *[F.col(c) for c in (extra_cols or [])],
         round_half_up(_sigmoid(_margin(F.col(x_col), weights)), 6).alias("score"),
     )
-
-
-def _caller_cached(df: DataFrame) -> bool:
-    """True when the plan is already in the cache manager — i.e. the
-    CALLER persisted the feature table. The trainers only manage (and
-    therefore only drop) a cache THEY created: persist() is not
-    reference-counted, so an unconditional finally-unpersist silently
-    evicted a caller's pre-cached feats — the next consumer (scoring,
-    a second training run) re-paid the full feature build (~300 s at
-    10M docs; found by the r12 probe, which pre-cached features
-    outside the timed region and still measured build-dominated
-    calls)."""
-    lvl = df.storageLevel
-    return bool(lvl.useMemory or lvl.useDisk or lvl.useOffHeap)
 
 
 def _reserved_softmax_names(n_classes: int) -> set[str]:
@@ -471,9 +455,7 @@ def softmax_train_fixed(
 
     W = [[0.0] * dim for _ in range(n_classes)]
     spark = feats.sparkSession
-    managed = not _caller_cached(feats)
-    if managed:
-        feats = feats.persist()
+    feats = scratch_persist(feats)  # a caller's cache stays the caller's
     base = feats.select(
         F.col(x_col).alias("__x"), F.col(label_col).alias("__y")
     )
@@ -521,8 +503,7 @@ def softmax_train_fixed(
                     for k in range(n_classes)
                 ]
     finally:
-        if managed:
-            feats.unpersist()
+        release(feats)
     return W
 
 

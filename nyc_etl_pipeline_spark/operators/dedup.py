@@ -23,8 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nyc_etl_pipeline_spark.hygiene import (
-    register_checkpointed,
-    release_checkpoint_now,
+    release,
+    scratch_checkpoint,
     scratch_persist,
 )
 from nyc_etl_pipeline_spark.functions import md5_long, round_half_up
@@ -1126,8 +1126,10 @@ def neardup_clusters(
     edges = pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst")).unionByName(
         pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst"))
     )
-    edges = edges.localCheckpoint()
-    labels = nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("label")).localCheckpoint()
+    edges = scratch_checkpoint(edges)
+    labels = scratch_checkpoint(
+        nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("label"))
+    )
     prev_ck = labels  # the checkpoint handle backing `labels`
     while True:
         neighbor_min = (
@@ -1141,19 +1143,18 @@ def neardup_clusters(
         # tables (one node-sized join per round removed — §2.4; the
         # count's input was already materialized by the eager
         # checkpoint, so the probe is a block scan)
-        new_labels = (
+        new_labels = scratch_checkpoint(
             labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
             .select(
                 "node",
                 F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label"),
                 F.col("label").alias("__old"),
             )
-            .localCheckpoint()
         )
         changed = new_labels.filter(F.col("label") != F.col("__old")).count()
-        # the fixpoint count was this round's action: the PREVIOUS
-        # label table's checkpoint blocks are now provably dead
-        release_checkpoint_now(prev_ck)
+        # the new eager checkpoint is materialized: the PREVIOUS label
+        # table's checkpoint blocks are now provably dead
+        release(prev_ck)
         prev_ck = new_labels
         labels = new_labels.select("node", "label")
         if changed == 0:
@@ -1161,8 +1162,7 @@ def neardup_clusters(
     # edges fed only the loop (the returned plan reads the final eager
     # label checkpoint); the final labels live until the caller's
     # action -> epoch-released
-    release_checkpoint_now(edges)
-    register_checkpointed(prev_ck)
+    release(edges)
     return labels.select(F.col("node").alias(id_col), F.col("label").alias("cluster_rep"))
 
 
@@ -1255,7 +1255,7 @@ def neardup_clusters_twophase(
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         )
         .dropDuplicates()
-        .localCheckpoint()
+        .transform(scratch_checkpoint)
     )
     converged = False
     for _ in range(max_rounds):
@@ -1284,17 +1284,15 @@ def neardup_clusters_twophase(
             ss.filter(F.col("a") != F.col("b"))
             .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
             .dropDuplicates()
-            .localCheckpoint()  # truncate per-round lineage
+            .transform(scratch_checkpoint)  # truncate per-round lineage
         )
-        if e2.exceptAll(e).union(e.exceptAll(e2)).isEmpty():
-            release_checkpoint_now(e)
-            e = e2
-            converged = True
-            break
-        # the fixpoint probe was this round's action: the previous
-        # edge table's checkpoint blocks are now provably dead
-        release_checkpoint_now(e)
+        converged = e2.exceptAll(e).union(e.exceptAll(e2)).isEmpty()
+        # the fixpoint probe was this round's last read of the previous
+        # edge table: its checkpoint blocks are now provably dead
+        release(e)
         e = e2
+        if converged:
+            break
     if not converged:
         # Returning labels from a non-fixpoint edge set would be
         # silently WRONG (stars not yet rooted at component minima).
@@ -1305,7 +1303,6 @@ def neardup_clusters_twophase(
         )
     # at fixpoint: stars rooted at component minima -> rep = min neighbor
     # (the final edge checkpoint feeds the returned plan -> epoch-released)
-    register_checkpointed(e)
     rep = e.groupBy(F.col("v").alias("node")).agg(F.min("u").alias("rep"))
     return (
         nodes.select(F.col(id_col).alias("node"))

@@ -192,12 +192,11 @@ def roc_auc(
         cum = per_score.withColumn("__cum", F.sum("__tie").over(w_cum))
     else:
         # the two-pass helper references per_score twice (local pass +
-        # offsets) — lazily localCheckpoint so the corpus-scale
-        # aggregate runs once and both passes read the resolution-
-        # bounded blocks; the quantile probe (an action) materializes
-        # it and runs over DISTINCT scores, which is the balance the
-        # local windows actually need (the kendall_tau lineage lesson;
-        # boundaries never affect values)
+        # offsets) — checkpoint so the corpus-scale aggregate runs
+        # once and both passes read the resolution-bounded blocks; the
+        # quantile probe then runs over DISTINCT scores, which is the
+        # balance the local windows actually need (the kendall_tau
+        # lineage lesson; boundaries never affect values)
         per_score = per_score.transform(scratch_checkpoint)
         bounds = _quantile_bounds(per_score, "__s", num_buckets)
         cum = _bucketed_global_cum(per_score, "__s", "__tie", bounds)
@@ -269,9 +268,9 @@ def roc_curve(
     gcols = group_cols or []
     lab = F.col(label_col).cast("bigint")
     # the per-score table feeds the cumulative pass AND the totals —
-    # lazily localCheckpoint-ed so the corpus-scale aggregate runs
-    # once and both branches read the resolution-bounded blocks (the
-    # kendall_tau lineage-truncation lesson)
+    # checkpointed so the corpus-scale aggregate runs once and both
+    # branches read the resolution-bounded blocks (the kendall_tau
+    # lineage-truncation lesson)
     per_score = (
         df.groupBy(*gcols, F.col(score_col).alias("score"))
         .agg(
@@ -1018,7 +1017,7 @@ def multiclass_eval(
     re-aggregations and a K-bounded outer join. Nothing downstream of
     the first aggregate is data-sized, so the plan survives any row
     count; skew rides the hash aggregate, not a window. The cell
-    table is lazily localCheckpoint-ed: it feeds two branches, and
+    table is checkpointed: it feeds two branches, and
     without lineage truncation each would re-analyze and re-shuffle
     the corpus (the kendall_tau lesson).
     """
@@ -1085,8 +1084,8 @@ def cohen_kappa(
     Scale shape: ONE data-sized shuffle — rows collapse to
     (group, a, b) cells (<= K^2 per group), and totals, both
     marginals, and the pe sum are all K-bounded re-aggregations of
-    that one cell table. The cell table is lazily localCheckpoint-ed:
-    it feeds three branches, and Catalyst plans are trees — without
+    that one cell table. The cell table is checkpointed: it feeds
+    three branches, and Catalyst plans are trees — without
     lineage truncation each branch would re-analyze AND re-shuffle
     the corpus (the kendall_tau lesson; here it also turns three
     corpus-scale aggregates into one).
@@ -1215,14 +1214,12 @@ def kendall_tau(
     # Catalyst plans are TREES, not DAGs: each reference would carry
     # its own copy of the full upstream lineage — re-ANALYZED on the
     # driver (measured 12+ s of pure plan time on a wide composite
-    # input) and re-COMPUTED per branch. A lazy localCheckpoint
-    # truncates the lineage at the resolution-bounded cell table: one
-    # compute at the first action (the quantile probe below), every
-    # branch then reads the stored blocks. Not persist(): an
-    # operator-internal persist either leaks or gets unpersisted
-    # before the caller's action runs (the r12 trainer-eviction
-    # lesson); checkpoint blocks are GC-reclaimed by the
-    # ContextCleaner when this DataFrame goes out of scope.
+    # input) and re-COMPUTED per branch. A checkpoint truncates the
+    # lineage at the resolution-bounded cell table: one compute, and
+    # every branch then reads the stored blocks. Its blocks back the
+    # returned plan, so the hygiene epoch sweep releases them
+    # KEEP_EPOCHS declared-query builds later (re-executing the result
+    # after that fails rather than recomputes — see hygiene).
     cells = (
         base.groupBy(
             *gcols,

@@ -32,8 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nyc_etl_pipeline_spark.hygiene import (
-    register_checkpointed,
-    release_checkpoint_now,
+    release,
+    scratch_checkpoint,
     scratch_persist,
 )
 
@@ -51,11 +51,13 @@ def pagerank_fixedpoint(
 ) -> DataFrame:
     """-> (node, rank_scaled bigint). `edges` columns: src, dst,
     weight (positive integers). Node set = src ∪ dst."""
-    e = edges.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        F.col(weight).cast("bigint").alias("w"),
-    ).persist()
+    e = scratch_persist(
+        edges.select(
+            F.col(src).alias("src"),
+            F.col(dst).alias("dst"),
+            F.col(weight).cast("bigint").alias("w"),
+        )
+    )
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -66,7 +68,7 @@ def pagerank_fixedpoint(
     outw = e.groupBy("src").agg(F.sum("w").alias("ow"))
     ew = e.join(F.broadcast(outw), on="src").transform(scratch_persist)
     ew.count()  # materialize once; iterations reuse the cached edge table
-    e.unpersist()
+    release(e)
 
     base = (PR_SCALE * (damping_den - damping_num) // damping_den) // n_nodes
     rank = nodes.select("node", F.lit(PR_SCALE // n_nodes).alias("rank_scaled"))
@@ -255,7 +257,7 @@ def kcore_peel(
         F.count(F.lit(1)).alias("deg")
     )
     if checkpoint:
-        alive = alive.localCheckpoint(eager=True)
+        alive = scratch_checkpoint(alive)
     for _ in range(n_rounds):
         prev_alive = alive
         removed = alive.filter(F.col("deg") < k).select("node")
@@ -279,15 +281,13 @@ def kcore_peel(
             )
         )
         if checkpoint:
-            alive = alive.localCheckpoint(eager=True)
+            alive = scratch_checkpoint(alive)
             # the new eager checkpoint is materialized: the previous
             # round's node table is provably dead — drop its blocks now
-            release_checkpoint_now(prev_alive)
-    if checkpoint:
-        e.unpersist()
-        # the final node-table checkpoint feeds the returned plan;
-        # released with the epoch sweep after the caller's action
-        register_checkpointed(alive)
+            release(prev_alive)
+    # the edge list fed only the rounds; the final node-table
+    # checkpoint feeds the returned plan -> released by the epoch sweep
+    release(e)
     # deg > 0: a truncated (non-converged) peel can leave a survivor
     # with every neighbor removed; the edge-list formulation (and the
     # oracle's terminal per-src count) has no row for it
@@ -361,7 +361,7 @@ def label_propagation(
         F.col("src")
     )
     if checkpoint:
-        e = e.persist()
+        e = scratch_persist(e)
     labels = (
         e.select(F.col("src").alias("node"))
         .distinct()
@@ -387,14 +387,12 @@ def label_propagation(
         )
         # checkpoint=False (plan-shape tests only) keeps the lazy plan
         if checkpoint:
-            labels = labels.localCheckpoint(eager=True)
+            labels = scratch_checkpoint(labels)
             # previous round's label checkpoint is superseded — the new
             # eager checkpoint no longer depends on it
-            release_checkpoint_now(prev_labels)
-    if checkpoint:
-        e.unpersist()
-        # final label checkpoint backs the returned plan -> epoch sweep
-        register_checkpointed(labels)
+            release(prev_labels)
+    # final label checkpoint backs the returned plan -> epoch sweep
+    release(e)
     return labels
 
 

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nyc_etl_pipeline_spark.hygiene import scratch_checkpoint_eager
+from nyc_etl_pipeline_spark.hygiene import scratch_checkpoint
 
 from nyc_etl_pipeline_spark.functions import round_half_up as R
 from nyc_etl_pipeline_spark.functions import sql_round_half_up
@@ -1150,7 +1150,7 @@ def q168_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.ngram_jaccard_pairs(
         read_testdata(spark, sf_dir, "documents"),
         n=NGRAM_N, threshold=JACCARD_THRESHOLD,
-    ).transform(scratch_checkpoint_eager)  # feeds both CC and the audit joins: materialize once
+    ).transform(scratch_checkpoint)  # feeds both CC and the audit joins: materialize once
     naive = sampling.assign_split(
         docs, ["doc_id"], SPLIT_WEIGHTS, salt=SPLIT_SALT, portable=True
     )

@@ -15,7 +15,7 @@ import pytest
 from conftest import GREEN_DIR, ZONE_CSV, requires_reference
 from pyspark.sql import functions as F
 
-from nyc_etl_pipeline_spark import engine
+from nyc_etl_pipeline_spark import engine, hygiene
 from nyc_etl_pipeline_spark.engine import Engine
 from nyc_etl_pipeline_spark.schemas import ENGINE_TABLES
 
@@ -402,7 +402,7 @@ def test_run_reports_failure_releases_base_after_both_marts(
     spark, tmp_path, zone_csv, synth_dirs, monkeypatch
 ):
     """A failing mart surfaces its error only once the other mart has
-    been written, and the shared base is unpersisted after both."""
+    been written, and the shared base is released after both."""
     green, yellow = synth_dirs
     eng = Engine(spark, str(tmp_path / "wh"))
     eng.run_all(green, yellow, zone_csv)
@@ -419,10 +419,12 @@ def test_run_reports_failure_releases_base_after_both_marts(
     monkeypatch.setattr(eng.wh, "overwrite", recording_overwrite)
     monkeypatch.setattr(engine, "weekly_from_base", broken_weekly)
     persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    registered = hygiene.registered_count()
     with pytest.raises(RuntimeError, match="weekly mart failed"):
         eng.run_reports()
     assert written == ["monthly_report"]
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    assert hygiene.registered_count() == registered
 
 
 def _job_ids(spark) -> set[int]:

@@ -9,8 +9,12 @@ contract the operators now rely on.
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 
+import nyc_etl_pipeline_spark
 from nyc_etl_pipeline_spark import hygiene as H
 
 
@@ -60,28 +64,87 @@ def test_same_tag_shares_epoch(spark):
     assert _npersistent(spark) == base
 
 
-def test_checkpoint_blocks_released_only_after_materialization(spark):
+def _cached_partitions(spark, ck) -> int:
+    """Materialized blocks of a checkpointed frame's RDD."""
+    rid = ck._jdf.queryExecution().analyzed().rdd().id()
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(infos[i].numCachedPartitions() for i in range(len(infos)) if infos[i].id() == rid)
+
+
+def test_checkpoint_is_eager_and_swept(spark):
+    """scratch_checkpoint's blocks exist before any action, so the
+    sweep KEEP_EPOCHS epochs later drops them even if no action ever
+    ran; past that, the result fails instead of recomputing."""
     base = _npersistent(spark)
     H.new_epoch("q1")
-    ck = H.scratch_checkpoint(spark.range(100).selectExpr("id * 3 AS z"))
-    # never executed: epoch sweeps must NOT poison the plan
+    ck = H.scratch_checkpoint(spark.range(100, numPartitions=2).selectExpr("id * 3 AS z"))
+    assert _cached_partitions(spark, ck) == 2
+    assert _npersistent(spark) == base + 1
     H.new_epoch("q2")
+    assert _npersistent(spark) == base + 1
     H.new_epoch("q3")
-    H.new_epoch("q4")
-    _noop(ck)  # late first action still works
-    assert _npersistent(spark) >= base + 1
-    H.new_epoch("q5")
-    H.new_epoch("q6")
-    H.new_epoch("q7")
-    assert _npersistent(spark) == base
+    assert (H.registered_count(), _npersistent(spark)) == (0, base)
+    with pytest.raises(Exception, match="(?i)checkpoint block"):
+        ck.count()
 
 
-def test_release_checkpoint_now_drops_blocks(spark):
+def test_release_drops_one_registered_frame_now(spark):
     base = _npersistent(spark)
-    ck = spark.range(64).selectExpr("id AS n").localCheckpoint(eager=True)
-    assert _npersistent(spark) >= base + 1
-    H.release_checkpoint_now(ck)
-    assert _npersistent(spark) == base
+    persisted = H.scratch_persist(spark.range(40).selectExpr("id AS p"))
+    _noop(persisted)
+    ck = H.scratch_checkpoint(spark.range(64).selectExpr("id AS n"))
+    assert (H.registered_count(), _npersistent(spark)) == (2, base + 2)
+    H.release(persisted)
+    assert (H.registered_count(), _npersistent(spark)) == (1, base + 1)
+    H.release(ck)
+    assert (H.registered_count(), _npersistent(spark)) == (0, base)
+    # a frame this module did not register: release leaves it alone
+    H.release(spark.range(3))
+    H.release(persisted)  # already released
+    assert (H.registered_count(), _npersistent(spark)) == (0, base)
+    assert persisted.count() == 40  # a released persist recomputes
+
+
+def test_caller_cache_survives_scratch_persist_and_sweeps(spark):
+    """A frame the caller cached is not the registry's to drop:
+    scratch_persist hands it back unregistered, so neither release nor
+    the epoch sweep evicts it."""
+    cached = spark.range(30).selectExpr("id AS c")
+    cached.persist()
+    try:
+        _noop(cached)
+        base = _npersistent(spark)
+        H.new_epoch("qcache")
+        assert H.scratch_persist(cached) is cached
+        # a plan-equal frame built separately is the same cache entry
+        twin = H.scratch_persist(spark.range(30).selectExpr("id AS c"))
+        assert H.registered_count() == 0
+        H.release(cached)
+        H.release(twin)
+        H.new_epoch("qcache_next1")
+        H.new_epoch("qcache_next2")
+        assert cached.storageLevel.useMemory or cached.storageLevel.useDisk
+        assert _npersistent(spark) == base
+    finally:
+        cached.unpersist()
+
+
+def test_only_hygiene_persists_or_checkpoints():
+    """Scratch lifetime has one owner: no package module but hygiene
+    calls persist/unpersist/localCheckpoint/cache directly."""
+    pkg = Path(nyc_etl_pipeline_spark.__file__).parent
+    banned = {"persist", "unpersist", "localCheckpoint"}
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "hygiene.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            name = node.func.attr
+            if name in banned or (name == "cache" and not node.args and not node.keywords):
+                found.append(f"{path.relative_to(pkg)}:{node.lineno} .{name}(")
+    assert found == [], "route these through nyc_etl_pipeline_spark.hygiene: " + ", ".join(found)
 
 
 def test_iterative_operators_bound_inflight_checkpoints(spark, sf_dir):
