@@ -279,14 +279,14 @@ def main() -> None:
         ),
     )
     # round-8 addition: leakage-safe split end-to-end — LSH pair graph,
-    # two-phase CC, cluster-keyed assignment, straddle audit. The
+    # connected components, cluster-keyed assignment, straddle audit. The
     # minhash stage above prices the pair graph alone; this stage is
     # the whole dedup-then-split step a pretraining pipeline runs.
     def _leak_probe():
         pairs = D.minhash_lsh_pairs(
             docs, num_hashes=64, bands=16, threshold=0.5
         ).localCheckpoint()
-        clusters = D.neardup_clusters_twophase(docs, pairs)
+        clusters = D.neardup_clusters(docs, pairs)
         w = {"train": 0.8, "val": 0.1, "test": 0.1}
         naive = SAMP.assign_split(docs.select("doc_id"), ["doc_id"], w, salt="probe")
         safe = SAMP.leakage_safe_assign(docs.select("doc_id"), clusters, w, salt="probe")
@@ -340,8 +340,8 @@ def main() -> None:
         "bigram_nll",
         lambda: "avg nll %.4f" % bigram_nll_scores(docs).agg(F.avg("nll")).first()[0],
     )
-    # indexed incremental near-dup: 10k batch vs the stored corpus band
-    # index (the maintained-index serving path q176 gates)
+    # incremental near-dup: 10k batch vs the stored corpus band index
+    # (the maintained-index serving path q176 gates)
     corpus = docs.filter(F.col("doc_id") >= 10_000)
     batch = docs.filter(F.col("doc_id") < 10_000)
     t_idx = time.perf_counter()
@@ -349,8 +349,8 @@ def main() -> None:
     print(f"band_index build (one-time): {index.count():,} rows "
           f"in {time.perf_counter() - t_idx:.1f}s")
     timed(
-        "incremental_neardup_indexed (10k batch vs stored index)",
-        lambda: f"""{D.incremental_neardup_dedup_indexed(
+        "incremental_neardup (10k batch vs stored index)",
+        lambda: f"""{D.incremental_neardup_dedup(
             batch, corpus, index, num_hashes=64, bands=16, threshold=0.5
         ).count():,} survivors""",
     )

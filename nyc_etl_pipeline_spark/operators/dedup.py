@@ -96,9 +96,8 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     trivial lambda-captured expression at every element_at read, so an
     inline split() re-tokenizes the document ~3x per gram position —
     measured 10.2 s vs 0.7 s for the sf0.1 shingle table, 14x, for
-    byte-identical output. `word_shingles` wraps this correctly;
-    `_shingle_table` is the two-step projection all dedup consumers
-    share."""
+    byte-identical output. `_shingle_table` is the two-step projection
+    all dedup consumers share."""
     k = F.size(toks)
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(k - n, F.lit(-1))),
@@ -399,15 +398,6 @@ def exact_substring_dedup(
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of a raw text column. Column-level API —
-    cannot stage a projection, so the token array is re-evaluated per
-    gram read; ONLY use this for single-expression contexts. Row-scale
-    pipelines should project tokens first and call
-    `shingles_from_tokens` (see `_shingle_table`)."""
-    return shingles_from_tokens(tokens(text), n)
-
-
 def _shingle_table(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(doc, shingle-hash) inverted-index rows. Shingles are joined by
     a 60-bit md5-derived hash rather than by string — 8-byte shuffle
@@ -415,7 +405,7 @@ def _shingle_table(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFra
     needs a collision between two distinct shingles in the same pair
     (~n_shingles^2 / 2^61 — negligible at any realistic corpus). The
     hash is `md5_long`, reproducible outside Spark, so every consumer
-    (q18/q23/q41/q47/q51/q52) stays DuckDB-oracle-checkable end to end.
+    (q18/q23/q41/q47/q51) stays DuckDB-oracle-checkable end to end.
 
     Tokenization is staged as its own projection so the token array is
     computed once per document (see shingles_from_tokens — 14x)."""
@@ -714,113 +704,6 @@ def _doc_shingle_arrays(sh: DataFrame) -> DataFrame:
     )
 
 
-def incremental_neardup_dedup(
-    new_docs: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 128,
-    bands: int = 32,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Batch-vs-corpus NEAR-dup dedup — the MinHash companion of
-    `incremental_exact_dedup` (q48): keep only arriving documents that
-    are not a near-duplicate (verified n-gram Jaccard >= threshold) of
-    (a) any corpus document, or (b) any EARLIER (lower-id) document in
-    the same batch. Returns the surviving new_docs rows.
-
-    Within-batch the rule is the greedy pairwise filter (first id
-    wins); transitive chains are deliberately NOT collapsed here —
-    clustering whole near-dup families is `neardup_clusters`' job,
-    while the incremental gate must stay a single bounded pass.
-
-    Scale shape: candidates come from equi-joins on (band_idx,
-    band_key) — batch bands vs the corpus band INDEX (stored, see
-    `minhash_band_table`; rebuilt here from `corpus` for the
-    self-contained form) and batch vs itself. Only candidate ids'
-    shingle arrays are materialized for verification (semi-join
-    pruned). Cost is proportional to the BATCH plus its candidate
-    fan-out, never to corpus size.
-    """
-    # ids must be globally unique across BOTH inputs: the verification
-    # stage unions the two shingle tables and groups by id, so a shared
-    # id would pool two documents' shingles (inflated sizes -> silently
-    # UNDER-scored Jaccard -> kept near-dups). Fail fast instead; the
-    # probe is an id-projection join stopped at the first overlap.
-    clash = (
-        new_docs.select(F.col(id_col))
-        .join(corpus.select(F.col(id_col)), on=id_col)
-        .limit(1)
-        .collect()
-    )
-    if clash:
-        raise ValueError(
-            f"{id_col}={clash[0][0]!r} appears in BOTH new_docs and corpus; "
-            "ids must be disjoint (re-ingestions need a fresh id or an "
-            "upstream exact-dedup pass)"
-        )
-    new_sh = _shingle_table(new_docs, id_col, text_col, n).transform(scratch_persist)
-    cor_sh = _shingle_table(corpus, id_col, text_col, n)
-    # nb feeds BOTH candidate joins (vs-corpus and within-batch) but
-    # must NOT be persisted: the signature agg's shuffle is shared
-    # across the two subtrees as a ReusedExchange, so the recompute is
-    # nearly free, while materializing the exploded band rows measured
-    # 2x SLOWER (8.5 s vs 4.5 s, sf0.1 best-of-2) than letting the
-    # plan share the exchange.
-    nb = minhash_band_table(new_docs, id_col, text_col, n, num_hashes, bands, sh=new_sh)
-    cb = minhash_band_table(corpus, id_col, text_col, n, num_hashes, bands, sh=cor_sh)
-
-    vs_corpus = (
-        nb.select(F.col(id_col).alias("new_id"), "band_idx", "band_key")
-        .join(cb.select(F.col(id_col).alias("other_id"), "band_idx", "band_key"),
-              on=["band_idx", "band_key"])
-        .select("new_id", "other_id")
-    )
-    within = (
-        nb.select(F.col(id_col).alias("new_id"), "band_idx", "band_key")
-        .join(nb.select(F.col(id_col).alias("other_id"), "band_idx", "band_key"),
-              on=["band_idx", "band_key"])
-        .filter(F.col("other_id") < F.col("new_id"))
-        .select("new_id", "other_id")
-    )
-    # cands feeds three consumers (two id prunes + the verify join):
-    # persist the pair list (candidate-fan-out-sized, tiny next to the
-    # shingle tables) so the band joins run once.
-    cands = vs_corpus.unionByName(within).dropDuplicates().transform(scratch_persist)
-
-    # Explicit semi-join prune BEFORE the collect_set aggregate: only
-    # candidate ids' shingle arrays are ever materialized. Without
-    # this, the per-doc array agg runs over the ENTIRE corpus — the
-    # one corpus-sized cost in a path whose contract is "batch +
-    # candidate fan-out, never corpus size" (measured at 1M corpus /
-    # 10k batch: the prune is what keeps verification batch-bounded).
-    # The new side only ever holds batch ids; the other side can hold
-    # corpus ids (vs_corpus) or batch ids (within).
-    cand_new_ids = cands.select(F.col("new_id").alias("__id")).dropDuplicates()
-    cand_other_ids = cands.select(F.col("other_id").alias("__id")).dropDuplicates()
-    new_side = _doc_shingle_arrays(
-        new_sh.join(cand_new_ids, on="__id", how="leftsemi")
-    ).select(
-        F.col("__id").alias("new_id"), F.col("__arr").alias("__arr_a"), F.col("__n").alias("__na")
-    )
-    other_side = _doc_shingle_arrays(
-        new_sh.unionByName(cor_sh).join(cand_other_ids, on="__id", how="leftsemi")
-    ).select(
-        F.col("__id").alias("other_id"), F.col("__arr").alias("__arr_b"), F.col("__n").alias("__nb")
-    )
-    ovc = F.size(F.array_intersect("__arr_a", "__arr_b"))
-    jac = ovc / (F.col("__na") + F.col("__nb") - ovc)
-    dropped = (
-        cands.join(new_side, on="new_id")
-        .join(other_side, on="other_id")
-        .filter(jac >= threshold)
-        .select(F.col("new_id").alias(id_col))
-        .dropDuplicates()
-    )
-    return new_docs.join(dropped, on=id_col, how="left_anti")
-
-
 def bloom_bits(
     benchmark: DataFrame,
     text_col: str = "text",
@@ -946,7 +829,7 @@ def bloom_contamination_scores(
     )
 
 
-def incremental_neardup_dedup_indexed(
+def incremental_neardup_dedup(
     new_docs: DataFrame,
     corpus_docs: DataFrame,
     corpus_index: DataFrame,
@@ -957,10 +840,20 @@ def incremental_neardup_dedup_indexed(
     bands: int = 32,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """`incremental_neardup_dedup` against a STORED corpus band index
-    (minhash_band_table rows, e.g. the table a streaming
-    `band_index_maintainer` grows per batch) instead of re-signaturing
-    the corpus. This is the at-scale form: the corpus contributes
+    """Batch-vs-corpus NEAR-dup dedup — the MinHash companion of
+    `incremental_exact_dedup` (q48): keep only arriving documents that
+    are not a near-duplicate (verified n-gram Jaccard >= threshold) of
+    (a) any corpus document, or (b) any EARLIER (lower-id) document in
+    the same batch. Returns the surviving new_docs rows.
+
+    Within-batch the rule is the greedy pairwise filter (first id
+    wins); transitive chains are deliberately NOT collapsed here —
+    clustering whole near-dup families is `neardup_clusters`' job,
+    while the incremental gate must stay a single bounded pass.
+
+    The corpus arrives as a STORED band index (`minhash_band_table`
+    rows, e.g. the table a streaming `band_index_maintainer` grows per
+    batch) plus its documents, and contributes
 
       * candidate generation — an equi-join of batch bands against the
         index (index-sized, never re-derived), and
@@ -969,25 +862,39 @@ def incremental_neardup_dedup_indexed(
         text is ever tokenized (at 100 TB that prune pushes down to an
         id-keyed scan; the corpus is never re-read in full).
 
-    `corpus_index` must have been built with the SAME (n, num_hashes,
-    bands) — band keys are positional. Decision semantics (greedy
-    first-id-wins within batch, verified Jaccard >= threshold) are
-    identical to the self-contained form; q176 hash-matches this path
-    against q127's full-chain SQL oracle.
+    Cost is proportional to the BATCH plus its candidate fan-out,
+    never to corpus size. `corpus_index` must have been built with the
+    SAME (n, num_hashes, bands) — band keys are positional. q127 builds
+    the index inline and q176/q200 read a maintained one; all three
+    hash-match a full-chain SQL oracle.
     """
+    # ids must be globally unique across the batch and the corpus: the
+    # verification stage unions the two shingle tables and groups by
+    # id, so a shared id would pool two documents' shingles (inflated
+    # sizes -> silently UNDER-scored Jaccard -> kept near-dups). The
+    # probe reads corpus_docs, not the index: the documents are what
+    # verification pools by id, one row each, including documents too
+    # short to shingle (absent from any index). Stopped at the first
+    # overlap.
     clash = (
         new_docs.select(F.col(id_col))
-        .join(corpus_index.select(F.col(id_col)).dropDuplicates(), on=id_col)
+        .join(corpus_docs.select(F.col(id_col)), on=id_col)
         .limit(1)
         .collect()
     )
     if clash:
         raise ValueError(
-            f"{id_col}={clash[0][0]!r} appears in BOTH new_docs and the "
-            "corpus index; ids must be disjoint (re-ingestions need a fresh "
+            f"{id_col}={clash[0][0]!r} appears in BOTH new_docs and "
+            "corpus_docs; ids must be disjoint (re-ingestions need a fresh "
             "id or an upstream exact-dedup pass)"
         )
     new_sh = _shingle_table(new_docs, id_col, text_col, n).transform(scratch_persist)
+    # nb feeds BOTH candidate joins (vs-corpus and within-batch) but
+    # must NOT be persisted: the signature agg's shuffle is shared
+    # across the two subtrees as a ReusedExchange, so the recompute is
+    # nearly free, while materializing the exploded band rows measured
+    # 2x SLOWER (8.5 s vs 4.5 s, sf0.1 best-of-2) than letting the
+    # plan share the exchange.
     nb = minhash_band_table(new_docs, id_col, text_col, n, num_hashes, bands, sh=new_sh)
     cb = corpus_index.select(id_col, "band_idx", "band_key")
 
@@ -1004,14 +911,23 @@ def incremental_neardup_dedup_indexed(
         .filter(F.col("other_id") < F.col("new_id"))
         .select("new_id", "other_id")
     )
+    # cands feeds three consumers (two id prunes + the verify join):
+    # persist the pair list (candidate-fan-out-sized, tiny next to the
+    # shingle tables) so the band joins run once.
     cands = vs_corpus.unionByName(within).dropDuplicates().transform(scratch_persist)
 
+    # Explicit semi-join prunes BEFORE the collect_set aggregates: only
+    # candidate ids' shingle arrays are ever materialized (measured at
+    # 1M corpus / 10k batch: the prune is what keeps verification
+    # batch-bounded). The new side only ever holds batch ids; the other
+    # side can hold corpus ids (vs_corpus) or batch ids (within).
     cand_new_ids = cands.select(F.col("new_id").alias("__id")).dropDuplicates()
     cand_other_ids = cands.select(F.col("other_id").alias("__id")).dropDuplicates()
     # Corpus text is pruned to candidate ids FIRST, then shingled —
     # the only corpus-doc access in the whole path is this id-keyed
-    # semi-join (contrast the self-contained form, which shingles the
-    # full corpus because it also has to build the bands from it).
+    # semi-join. Catalyst does not push a semi-join below the shingle
+    # explode, so pruning after shingling would tokenize every corpus
+    # document on every batch.
     cand_corpus_sh = _shingle_table(
         corpus_docs.join(
             cand_other_ids.select(F.col("__id").alias(id_col)),
@@ -1025,7 +941,7 @@ def incremental_neardup_dedup_indexed(
         F.col("__id").alias("new_id"), F.col("__arr").alias("__arr_a"), F.col("__n").alias("__na")
     )
     other_side = _doc_shingle_arrays(
-        new_sh.unionByName(cand_corpus_sh).join(cand_other_ids, on="__id", how="leftsemi")
+        new_sh.join(cand_other_ids, on="__id", how="leftsemi").unionByName(cand_corpus_sh)
     ).select(
         F.col("__id").alias("other_id"), F.col("__arr").alias("__arr_b"), F.col("__n").alias("__nb")
     )
@@ -1117,11 +1033,14 @@ def neardup_clusters(
     pair graph) — the canonical-document selection step of a dedup
     pipeline. Singletons are their own representative.
 
-    Iterative min-label propagation to fixpoint; near-dup components
-    have tiny diameters so this converges in a few rounds. Each round
-    localCheckpoints to truncate lineage (iterative plans otherwise
-    grow unboundedly). For billion-edge graphs swap in the
-    large-star/small-star formulation — same DataFrame-only shape.
+    Iterative min-label propagation to fixpoint: the loop runs
+    (graph diameter + 1) rounds, the last one confirming no label
+    moved. Near-dup components have tiny diameters, so that is a few
+    rounds. Each round localCheckpoints to truncate lineage (iterative
+    plans otherwise grow unboundedly). A large-star/small-star
+    formulation (O(log n) rounds) was kept beside this one until it
+    measured slower on the suite's pair graph: 3.84 s against 3.39 s
+    for the same oracle (sf0.1, 4 cores, bench.py median of 8).
     """
     edges = pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst")).unionByName(
         pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst"))
@@ -1219,97 +1138,6 @@ def contamination_scores(
             F.when(F.col("__n").isNull(), F.lit(False))
             .otherwise(rate >= threshold)
             .alias("is_contaminated"),
-        )
-    )
-
-
-def neardup_clusters_twophase(
-    nodes: DataFrame, pairs: DataFrame, id_col: str = "doc_id", max_rounds: int = 50
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the billion-edge scale path promised by `neardup_clusters`'
-    docstring, produced here with the same output contract
-    (doc_id, cluster_rep = component minimum; singletons included).
-
-    Why a second algorithm: min-label propagation converges in
-    O(diameter) rounds, each shipping the FULL edge list through a
-    join — fine for near-dup graphs (tiny diameters), hopeless for
-    long chains. Large-star/small-star converges in O(log n) rounds
-    and — crucially for skew — each round REWRITES the edge list into
-    a flatter one, so hot nodes shed degree as roots absorb their
-    components. Both rounds are one groupBy + one join over the
-    current edges; nothing driver-side except the fixpoint check.
-
-    large-star: every node u links its LARGER neighbors to
-      m(u) = min(N(u) ∪ {u});
-    small-star: every node u (on the >=-oriented edge list) links its
-      smaller-or-equal neighbors and itself to m(u).
-    At fixpoint the edges form stars rooted at component minima.
-    """
-    # canonical undirected edge set, self-loops dropped
-    e = (
-        pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .dropDuplicates()
-        .transform(scratch_checkpoint)
-    )
-    converged = False
-    for _ in range(max_rounds):
-        # ---- large-star on the symmetric view -------------------------
-        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = sym.groupBy("u").agg(F.min("v").alias("__mn"))
-        m = m.select("u", F.least("u", "__mn").alias("__m"))
-        ls = (
-            sym.join(m, on="u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("__m").alias("u"), F.col("v").alias("v"))
-        )
-        e1 = ls.select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")).filter(
-            F.col("u") != F.col("v")
-        ).dropDuplicates()
-        # ---- small-star on the >=-oriented view -----------------------
-        # orient every edge big -> small, group by the big end
-        ori = e1.select(F.col("v").alias("big"), F.col("u").alias("small"))
-        ms = ori.groupBy("big").agg(F.min("small").alias("__m"))
-        ss = (
-            ori.join(ms, on="big")
-            .select(F.col("small").alias("a"), F.col("__m").alias("b"))
-            .unionByName(ms.select(F.col("big").alias("a"), F.col("__m").alias("b")))
-        )
-        e2 = (
-            ss.filter(F.col("a") != F.col("b"))
-            .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-            .dropDuplicates()
-            .transform(scratch_checkpoint)  # truncate per-round lineage
-        )
-        converged = e2.exceptAll(e).union(e.exceptAll(e2)).isEmpty()
-        # the fixpoint probe was this round's last read of the previous
-        # edge table: its checkpoint blocks are now provably dead
-        release(e)
-        e = e2
-        if converged:
-            break
-    if not converged:
-        # Returning labels from a non-fixpoint edge set would be
-        # silently WRONG (stars not yet rooted at component minima).
-        # O(log n) convergence means max_rounds=50 covers any graph
-        # that fits on hardware; hitting this is a bug or bad input.
-        raise RuntimeError(
-            f"large-star/small-star did not converge in {max_rounds} rounds"
-        )
-    # at fixpoint: stars rooted at component minima -> rep = min neighbor
-    # (the final edge checkpoint feeds the returned plan -> epoch-released)
-    rep = e.groupBy(F.col("v").alias("node")).agg(F.min("u").alias("rep"))
-    return (
-        nodes.select(F.col(id_col).alias("node"))
-        .join(rep, on="node", how="left")
-        .select(
-            F.col("node").alias(id_col),
-            F.coalesce("rep", "node").alias("cluster_rep"),
         )
     )
 
@@ -1473,8 +1301,8 @@ def canonical_per_cluster(
     deterministic). Output carries cluster_rep, the winner's id and
     score, and the cluster size.
 
-    clusters is (id_col, cluster_rep) as produced by neardup_clusters
-    / neardup_clusters_twophase. Scale: one shuffle on cluster_rep;
+    clusters is (id_col, cluster_rep) as produced by neardup_clusters.
+    Scale: one shuffle on cluster_rep;
     the per-cluster window sorts only that cluster's members (near-dup
     clusters are small by construction — a pathological giant cluster
     means the pairing threshold is wrong, not the plan).

@@ -1,8 +1,9 @@
-"""Pandas-UDF operator surface: grouped-map (applyInPandas) and
-grouped-aggregate (pandas_udf) — the Arrow-batched slow path, used
-only where per-group Python semantics are genuinely wanted. Both
-examples here are deliberately SQL-expressible so the DuckDB oracle
-can verify the Arrow round-trip end-to-end.
+"""Arrow-batched Python operator surface: grouped-map (applyInArrow
+for the z-score, applyInPandas for the sessionizer and the Holt
+recurrence), cogrouped applyInPandas, and grouped-aggregate
+(pandas_udf) — the slow path, used only where per-group Python
+semantics are genuinely wanted. Each gated example is paired with a
+DuckDB oracle that verifies the Arrow round-trip end-to-end.
 """
 
 from __future__ import annotations
@@ -17,46 +18,22 @@ from pyspark.sql import functions as F
 def zscore_per_group(
     df: DataFrame, group_col: str, value_col: str, id_col: str
 ) -> DataFrame:
-    """Grouped-map applyInPandas: z-score of value_col within each
-    group (ddof=1). At scale prefer the window-function formulation
+    """Grouped-map z-score of value_col within each group (ddof=1,
+    rounded half-up to 4 dp; NULL for singleton and zero-stddev
+    groups), via Spark 4's applyInArrow: the batch arrives as a
+    pyarrow.Table and the math runs on zero-copy numpy views of the
+    Arrow buffers — no pandas Block consolidation on either side of
+    the exchange. At scale prefer the window-function formulation
     (same semantics, no Python) unless the per-group logic can't be
     expressed in SQL.
 
-    Per-group pandas overhead dominates when groups are tiny (measured
-    24s for 15k ten-row groups at sf0.1), so the Spark grouping key is
-    a HASH BUCKET of the real key — each pandas batch holds many
-    groups and the per-group math runs vectorized via
-    groupby().transform inside the batch (24s -> ~1s, same result).
-    """
-
-    def _z(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = pdf.groupby(group_col)[value_col]
-        mean = g.transform("mean")
-        std = g.transform("std")  # ddof=1; NaN for singleton groups
-        z = (pdf[value_col] - mean) / std
-        z = z.where(std.notna() & (std != 0.0))
-        return pd.DataFrame(
-            {
-                id_col: pdf[id_col],
-                group_col: pdf[group_col],
-                "zscore": np.floor(z * 10000.0 + 0.5) / 10000.0,
-            }
-        )
-
-    out_schema = f"{id_col} long, {group_col} long, zscore double"
-    bucketed = df.withColumn("__bucket", F.pmod(F.xxhash64(group_col), F.lit(256)))
-    return bucketed.groupBy("__bucket").applyInPandas(_z, schema=out_schema)
-
-
-def zscore_per_group_arrow(
-    df: DataFrame, group_col: str, value_col: str, id_col: str
-) -> DataFrame:
-    """Same contract as `zscore_per_group`, via Spark 4's applyInArrow:
-    the batch arrives as a pyarrow.Table and the math runs on zero-copy
-    numpy views of the Arrow buffers — no pandas Block consolidation on
-    either side of the exchange. Group segmentation is one stable
-    argsort + reduceat per batch; same hash-bucketed grouping trick so
-    tiny groups amortize into big batches."""
+    Per-group Python overhead dominates when groups are tiny (measured
+    24s for 15k ten-row groups at sf0.1 with one applyInPandas call
+    per group), so the Spark grouping key is a HASH BUCKET of the real
+    key — each batch holds many groups, segmented by one stable
+    argsort + reduceat. An applyInPandas form of this bucketed
+    function measured 0.96 s against this one's 0.67 s (q57, sf0.1,
+    4 cores, bench.py median of 8)."""
     import pyarrow as pa
 
     def _z(tbl: pa.Table) -> pa.Table:

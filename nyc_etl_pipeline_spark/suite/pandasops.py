@@ -12,36 +12,8 @@ from nyc_etl_pipeline_spark.io import read_testdata
 from nyc_etl_pipeline_spark.operators.pandas_ops import (
     geometric_mean_agg,
     zscore_per_group,
-    zscore_per_group_arrow,
 )
 from nyc_etl_pipeline_spark.suite import QuerySpec
-
-
-def q36_grouped_map_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = read_testdata(spark, sf_dir, "orders")
-    out = zscore_per_group(
-        o.select("o_orderkey", "o_custkey", "o_totalprice"),
-        group_col="o_custkey",
-        value_col="o_totalprice",
-        id_col="o_orderkey",
-    )
-    return out.select(
-        F.col("o_orderkey").alias("orderkey"),
-        F.col("o_custkey").alias("custkey"),
-        "zscore",
-    )
-
-
-_Q36_SQL = """
-SELECT o_orderkey AS orderkey,
-       o_custkey AS custkey,
-       CASE WHEN count(*) OVER w > 1 AND stddev_samp(o_totalprice) OVER w > 0
-            THEN floor(((o_totalprice - avg(o_totalprice) OVER w)
-                        / stddev_samp(o_totalprice) OVER w) * 10000.0 + 0.5) / 10000.0
-            ELSE NULL END AS zscore
-FROM orders
-WINDOW w AS (PARTITION BY o_custkey)
-"""
 
 
 def q37_grouped_agg_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -67,12 +39,11 @@ GROUP BY 1
 
 
 def q57_arrow_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same z-score contract as q36, computed through Spark 4's
+    """Per-customer z-score of order totals through Spark 4's
     applyInArrow (pyarrow.Table in/out, numpy segment math on zero-copy
-    Arrow buffers) — the third Python-batch surface, verified against
-    the identical window-function oracle."""
+    Arrow buffers), verified against the window-function oracle."""
     o = read_testdata(spark, sf_dir, "orders")
-    out = zscore_per_group_arrow(
+    out = zscore_per_group(
         o.select("o_orderkey", "o_custkey", "o_totalprice"),
         group_col="o_custkey",
         value_col="o_totalprice",
@@ -83,6 +54,18 @@ def q57_arrow_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_custkey").alias("custkey"),
         "zscore",
     )
+
+
+_Q57_SQL = """
+SELECT o_orderkey AS orderkey,
+       o_custkey AS custkey,
+       CASE WHEN count(*) OVER w > 1 AND stddev_samp(o_totalprice) OVER w > 0
+            THEN floor(((o_totalprice - avg(o_totalprice) OVER w)
+                        / stddev_samp(o_totalprice) OVER w) * 10000.0 + 0.5) / 10000.0
+            ELSE NULL END AS zscore
+FROM orders
+WINDOW w AS (PARTITION BY o_custkey)
+"""
 
 
 # --------------------------------------------------------------------------
@@ -151,12 +134,10 @@ FROM r WHERE rn = n
 
 
 SPECS = [
-    QuerySpec("q36_grouped_map_zscore", q36_grouped_map_zscore, _Q36_SQL,
-              "applyInPandas grouped-map z-score vs window-function oracle"),
     QuerySpec("q37_grouped_agg_geomean", q37_grouped_agg_geomean, _Q37_SQL,
               "pandas_udf grouped-agg geometric mean vs exp(avg(ln)) oracle"),
-    QuerySpec("q57_arrow_zscore", q57_arrow_zscore, _Q36_SQL,
-              "applyInArrow grouped-map z-score (zero-copy Arrow->numpy) vs same oracle"),
+    QuerySpec("q57_arrow_zscore", q57_arrow_zscore, _Q57_SQL,
+              "applyInArrow grouped-map z-score (zero-copy Arrow->numpy) vs window-function oracle"),
     QuerySpec("q174_holt_smoothing", q174_holt_smoothing, _Q174_SQL,
               "Holt level/trend/forecast recurrence vs recursive-CTE replay oracle"),
 ]

@@ -667,11 +667,17 @@ def q127_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (id < 250) or earlier in the batch. The whole MinHash chain —
     shingle hash, signature constants, band keys, exact verification
     — is replicated in the oracle, so the incremental accept/reject
-    decision itself is under the gate."""
+    decision itself is under the gate. The corpus band index is built
+    inline here; q176/q200 serve the same decision from a maintained
+    one."""
     d = read_testdata(spark, sf_dir, "documents")
+    corpus = d.filter(F.col("doc_id") < INCR_SPLIT)
     survivors = D.incremental_neardup_dedup(
         d.filter(F.col("doc_id") >= INCR_SPLIT),
-        d.filter(F.col("doc_id") < INCR_SPLIT),
+        corpus,
+        D.minhash_band_table(
+            corpus, n=NGRAM_N, num_hashes=MINHASH_NUM, bands=MINHASH_BANDS
+        ),
         n=NGRAM_N,
         num_hashes=MINHASH_NUM,
         bands=MINHASH_BANDS,
@@ -756,8 +762,8 @@ def q176_maintained_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches through `band_index_maintainer` (one replayed, to
     pin exactly-once-by-idempotence inside the gate), and the arriving
     batch joins its bands against the STORED table via
-    `incremental_neardup_dedup_indexed` — corpus text is touched only
-    for candidate ids. Same full-chain oracle family as q127: the
+    `incremental_neardup_dedup` — corpus text is touched only for
+    candidate ids. Same full-chain oracle family as q127: the
     accept/reject decision must be byte-identical whichever way the
     index was built."""
     import tempfile
@@ -783,7 +789,7 @@ def q176_maintained_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _MAINT_BAND_INDEX[sf_dir] = root
     wh = Warehouse(spark, _MAINT_BAND_INDEX[sf_dir])
 
-    survivors = D.incremental_neardup_dedup_indexed(
+    survivors = D.incremental_neardup_dedup(
         batch,
         corpus_docs=corpus,
         corpus_index=wh.read("band_index"),
@@ -863,7 +869,7 @@ def q200_band_compaction_lifecycle(
         _COMPACT_BAND_INDEX[sf_dir] = root
     wh = Warehouse(spark, _COMPACT_BAND_INDEX[sf_dir])
 
-    survivors = D.incremental_neardup_dedup_indexed(
+    survivors = D.incremental_neardup_dedup(
         batch,
         corpus_docs=corpus,
         corpus_index=wh.read("band_index"),

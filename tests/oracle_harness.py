@@ -142,6 +142,11 @@ def compare(name: str, spark_df, oracle_pdf) -> list[str]:
     return compare_pandas(name, spark_df.toPandas(), oracle_pdf)
 
 
+def _selects(query: str, spec_name: str) -> bool:
+    """`q41` selects `q41_neardup_clusters`; a full name selects itself."""
+    return spec_name == query or spec_name.startswith(query + "_")
+
+
 def run(sf_dir: str, only: list[str] | None = None) -> dict[str, list[str]]:
     from nyc_etl_pipeline_spark import get_spark, suite
 
@@ -153,7 +158,7 @@ def run(sf_dir: str, only: list[str] | None = None) -> dict[str, list[str]]:
     con = duck_con(sf_dir)
     results: dict[str, list[str]] = {}
     for spec in suite.all_specs():
-        if only and spec.name not in only:
+        if only and not any(_selects(q, spec.name) for q in only):
             continue
         try:
             sdf = spec.fn(spark, sf_dir)
@@ -181,6 +186,9 @@ if __name__ == "__main__":
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = sys.argv[2:] or None
     res = run(sf, only)
+    for q in only or []:
+        if not any(_selects(q, name) for name in res):
+            res[q] = [f"{q}: no suite query of that name"]
     failed = {k: v for k, v in res.items() if v}
     print(f"\n{len(res) - len(failed)}/{len(res)} queries match at {sf}")
     sys.exit(1 if failed else 0)

@@ -650,11 +650,36 @@ def test_incremental_neardup_candidate_bounded_verification(spark, sf_dir):
     )
     # band vs corpus, band within batch, 2 verification joins, anti
     assert joins >= 5, plan
-    # the candidate-id semi-join prune (measured 70.0 -> 45.6 s at a
-    # 10k batch vs 1M corpus) must gate BOTH array aggregates: without
-    # LeftSemi before collect_set the verification stage aggregates
-    # the whole corpus's shingle arrays
-    assert plan.count("LeftSemi") >= 2, plan
+    # three candidate-id semi-join prunes: corpus DOCUMENTS before
+    # shingling, then both array aggregates (measured 70.0 -> 45.6 s
+    # at a 10k batch vs 1M corpus: without LeftSemi before collect_set
+    # the verification stage aggregates the whole corpus's shingle
+    # arrays)
+    assert plan.count("LeftSemi") >= 3, plan
+    # the corpus prune must sit BELOW a shingle explode: a semi-join
+    # above it (where Catalyst leaves one) still tokenizes every corpus
+    # document for verification
+    assert _explode_over_semi_join(plan), plan
+
+
+def _explode_over_semi_join(plan: str) -> bool:
+    """True if some `Generate explode` node has a LeftSemi join in its
+    subtree (tree depth read from each line's indentation)."""
+    lines = plan.splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-|"))
+
+    for i, line in enumerate(lines):
+        if "Generate explode" not in line:
+            continue
+        d = depth(line)
+        for below in lines[i + 1:]:
+            if depth(below) <= d:
+                break
+            if "LeftSemi" in below:
+                return True
+    return False
 
 
 def test_graph_iteration_rounds_are_equi_joins(spark, sf_dir):

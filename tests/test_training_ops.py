@@ -1,5 +1,5 @@
 """Training-pipeline operators added in round 3: portable sampling,
-contamination, two-phase CC, normalization, PII redaction, and the
+contamination, connected components, normalization, PII redaction, and the
 stream-stream join (batch parity)."""
 
 import pytest
@@ -10,7 +10,7 @@ from nyc_etl_pipeline_spark.io import read_testdata
 from nyc_etl_pipeline_spark.operators import dedup as D
 from nyc_etl_pipeline_spark.operators import sampling
 from nyc_etl_pipeline_spark.operators import text as TX
-from nyc_etl_pipeline_spark.suite.textops import JACCARD_THRESHOLD, NGRAM_N
+from nyc_etl_pipeline_spark.suite.textops import NGRAM_N
 
 
 # ---- portable sampling ---------------------------------------------------
@@ -116,34 +116,26 @@ def test_bloom_tiny_filter_saturates_to_all_hits(spark):
     assert row["n_hit"] == row["n_shingles"] and row["is_contaminated"]
 
 
-# ---- two-phase connected components --------------------------------------
-
-def test_twophase_cc_matches_label_propagation(spark, sf_dir):
-    docs = read_testdata(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(docs, n=NGRAM_N, threshold=JACCARD_THRESHOLD)
-    a = {(r["doc_id"], r["cluster_rep"]) for r in D.neardup_clusters(docs, pairs).collect()}
-    b = {
-        (r["doc_id"], r["cluster_rep"])
-        for r in D.neardup_clusters_twophase(docs, pairs).collect()
-    }
-    assert a == b
-
+# ---- connected components (neardup_clusters) ------------------------------
+# Graph shapes the suite's pair graphs never produce: a long chain and an
+# empty pair list. (The "twophase" prefix keeps the test ids stable.)
 
 def test_twophase_cc_long_chain(spark):
-    """A 12-node path graph — worst case for label propagation
-    (diameter rounds), the case the O(log n) algorithm exists for."""
+    """A 12-node path graph — worst case for label propagation: the
+    minimum id needs 11 rounds to reach the far end (diameter + 1
+    rounds with the fixpoint check)."""
     nodes = spark.createDataFrame([Row(doc_id=i) for i in range(12)])
     pairs = spark.createDataFrame(
         [Row(a_id=i, b_id=i + 1) for i in range(11)]
     )
-    out = {r["doc_id"]: r["cluster_rep"] for r in D.neardup_clusters_twophase(nodes, pairs).collect()}
+    out = {r["doc_id"]: r["cluster_rep"] for r in D.neardup_clusters(nodes, pairs).collect()}
     assert out == {i: 0 for i in range(12)}
 
 
 def test_twophase_cc_empty_and_singletons(spark):
     nodes = spark.createDataFrame([Row(doc_id=i) for i in (5, 7, 9)])
     pairs = spark.createDataFrame([], "a_id long, b_id long")
-    out = {r["doc_id"]: r["cluster_rep"] for r in D.neardup_clusters_twophase(nodes, pairs).collect()}
+    out = {r["doc_id"]: r["cluster_rep"] for r in D.neardup_clusters(nodes, pairs).collect()}
     assert out == {5: 5, 7: 7, 9: 9}
 
 
@@ -291,21 +283,40 @@ def test_sorted_percentiles_singleton_group(spark):
     assert out["b"] == (1.5, 2.0)
 
 
-# ---- applyInArrow parity -------------------------------------------------
+# ---- applyInArrow grouped z-score ----------------------------------------
 
-def test_arrow_zscore_equals_pandas_zscore(spark, sf_dir):
-    from nyc_etl_pipeline_spark.operators.pandas_ops import (
-        zscore_per_group,
-        zscore_per_group_arrow,
-    )
+def test_zscore_per_group_matches_pandas_replica(spark):
+    """The applyInArrow z-score against a pandas groupby replica
+    (ddof=1, NaN -> NULL, 4-dp half-up) on one normal group, one
+    singleton group and one zero-stddev group."""
+    import math
 
-    o = read_testdata(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    kw = dict(group_col="o_custkey", value_col="o_totalprice", id_col="o_orderkey")
-    a = {(r["o_orderkey"], r["zscore"]) for r in zscore_per_group_arrow(o, **kw).collect()}
-    p = {(r["o_orderkey"], r["zscore"]) for r in zscore_per_group(o, **kw).collect()}
-    assert a == p
+    import numpy as np
+    import pandas as pd
+
+    from nyc_etl_pipeline_spark.operators.pandas_ops import zscore_per_group
+
+    rows = [
+        (1, 10, 1.0), (2, 10, 2.0), (3, 10, 4.0), (4, 10, 9.5),  # normal
+        (5, 20, 7.0),                                            # singleton
+        (6, 30, 3.0), (7, 30, 3.0), (8, 30, 3.0),                # zero stddev
+    ]
+    pdf = pd.DataFrame(rows, columns=["k", "g", "v"])
+    grp = pdf.groupby("g")["v"]
+    std = grp.transform("std")
+    z = ((pdf["v"] - grp.transform("mean")) / std).where(std.notna() & (std != 0.0))
+    want = {
+        int(k): (None if math.isnan(x) else float(np.floor(x * 10000.0 + 0.5) / 10000.0))
+        for k, x in zip(pdf["k"], z)
+    }
+
+    df = spark.createDataFrame(rows, "k long, g long, v double")
+    got = {
+        r["k"]: r["zscore"]
+        for r in zscore_per_group(df, group_col="g", value_col="v", id_col="k").collect()
+    }
+    assert got == want
+    assert got[5] is None and got[6] is None and got[1] is not None
 
 
 # ---- stream-stream join --------------------------------------------------
@@ -859,10 +870,11 @@ def test_incremental_neardup_planted_cases(spark):
         Row(doc_id=12, text="spark engines shuffle partitions across executors quickly"),
         Row(doc_id=13, text="spark engines shuffle partitions across executors slowly"),
     ])
+    index = D.minhash_band_table(corpus, n=3, num_hashes=64, bands=32)
     survivors = {
         r["doc_id"]
         for r in D.incremental_neardup_dedup(
-            batch, corpus, n=3, num_hashes=64, bands=32, threshold=0.5
+            batch, corpus, index, n=3, num_hashes=64, bands=32, threshold=0.5
         ).collect()
     }
     assert survivors == {11, 12}
@@ -875,51 +887,45 @@ def test_incremental_neardup_empty_corpus_is_self_dedup(spark):
         Row(doc_id=3, text="unrelated content entirely from another domain"),
     ])
     corpus = batch.limit(0)
+    index = D.minhash_band_table(corpus, n=3, num_hashes=64, bands=32)
     survivors = {
         r["doc_id"]
         for r in D.incremental_neardup_dedup(
-            batch, corpus, n=3, num_hashes=64, bands=32, threshold=0.5
+            batch, corpus, index, n=3, num_hashes=64, bands=32, threshold=0.5
         ).collect()
     }
     assert survivors == {1, 3}
 
 
-def test_incremental_neardup_indexed_matches_self_contained(spark, sf_dir):
-    """The stored-index form (corpus bands from an index table, corpus
-    text pruned to candidates before shingling) must make the IDENTICAL
-    accept/reject decisions as the self-contained form, on real data
-    and on the planted cases."""
-    from pyspark.sql import functions as F
+def test_incremental_neardup_id_clash_with_unshingled_corpus_doc(spark):
+    """Batch and corpus ids must be disjoint, and the probe reads the
+    corpus DOCUMENTS: corpus doc 2 is shorter than n tokens, so it has
+    no shingles and no row in any band index, yet a batch document
+    reusing its id still raises."""
+    corpus = spark.createDataFrame([
+        Row(doc_id=1, text="the quick brown fox jumps over the lazy dog"),
+        Row(doc_id=2, text="too short"),
+    ])
+    index = D.minhash_band_table(corpus, n=3, num_hashes=64, bands=16)
+    assert {r["doc_id"] for r in index.select("doc_id").distinct().collect()} == {1}
 
-    docs = read_testdata(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") < 250)
-    batch = docs.filter(F.col("doc_id") >= 250)
-    index = D.minhash_band_table(corpus, num_hashes=64, bands=16)
-
-    got = {
-        r["doc_id"]
-        for r in D.incremental_neardup_dedup_indexed(
-            batch, corpus, index, num_hashes=64, bands=16, threshold=0.5
-        ).collect()
-    }
-    want = {
-        r["doc_id"]
-        for r in D.incremental_neardup_dedup(
-            batch, corpus, num_hashes=64, bands=16, threshold=0.5
-        ).collect()
-    }
-    assert got == want and want  # identical decisions, non-degenerate
-
-    # id-clash guard carries over to the indexed form
+    batch = spark.createDataFrame([
+        Row(doc_id=2, text="an arriving document that reuses a corpus id"),
+        Row(doc_id=3, text="a wholly original sentence with unique vocabulary"),
+    ])
     with pytest.raises(ValueError, match="disjoint"):
-        D.incremental_neardup_dedup_indexed(corpus.limit(5), corpus, index)
+        D.incremental_neardup_dedup(batch, corpus, index, num_hashes=64, bands=16)
+    # an id shared with an indexed corpus document raises as well
+    with pytest.raises(ValueError, match="disjoint"):
+        D.incremental_neardup_dedup(corpus, corpus, index, num_hashes=64, bands=16)
 
 
 def test_incremental_neardup_with_stored_band_index(spark, sf_dir, tmp_path):
     """The operational workflow at scale: index the corpus ONCE
     (minhash_band_table -> Warehouse), then dedup an arriving batch by
-    joining its bands against the STORED index. Must produce the same
-    candidate pairs the self-contained operator finds vs the corpus."""
+    joining its bands against the STORED index. The stored index must
+    yield the same candidate pairs, and the same accept/reject
+    decisions, as an index built in the same plan."""
     from pyspark.sql import functions as F
 
     from nyc_etl_pipeline_spark.io import Warehouse
@@ -951,6 +957,18 @@ def test_incremental_neardup_with_stored_band_index(spark, sf_dir, tmp_path):
         }
 
     assert cands(stored) == cands(live) and cands(stored)
+
+    def survivors(index):
+        return {
+            r["doc_id"]
+            for r in D.incremental_neardup_dedup(
+                batch, corpus, index, num_hashes=64, bands=16, threshold=0.5
+            ).collect()
+        }
+
+    kept = survivors(stored)
+    assert kept == survivors(live)
+    assert kept and len(kept) < batch.count()  # some dropped, some kept
 
 
 # ---- null/empty text robustness ------------------------------------------
