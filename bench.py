@@ -68,7 +68,27 @@ def _median(xs: list[float]) -> float:
     return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0
 
 
+def _bench_only(only_env: str, names: list[str]) -> set[str] | None:
+    """The SPARK_GRAFT_BENCH_ONLY subset: comma-separated full query
+    names, plus the canaries (so canary_median stays well-defined);
+    None when unset (the full suite). A name that matches no query
+    exits before anything runs, listing every such name."""
+    if not only_env:
+        return None
+    only = set(filter(None, only_env.split(",")))
+    unknown = sorted(only - set(names))
+    if unknown:
+        raise SystemExit(
+            "SPARK_GRAFT_BENCH_ONLY: no suite query named " + ", ".join(unknown)
+        )
+    return only | set(CANARIES)
+
+
 def main() -> None:
+    specs = suite.all_specs()
+    only = _bench_only(
+        os.environ.get("SPARK_GRAFT_BENCH_ONLY", ""), [s.name for s in specs]
+    )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
@@ -87,13 +107,8 @@ def main() -> None:
     for name in TESTDATA:
         read_testdata(spark, sf_dir, name).limit(1).count()
 
-    # iteration aid: comma-separated subset (canaries always included
-    # so canary_median stays well-defined); unset = full suite
-    only_env = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")
-    only = set(filter(None, only_env.split(","))) | set(CANARIES) if only_env else None
-
     timings: dict[str, float] = {}
-    for spec in suite.all_specs():
+    for spec in specs:
         if only is not None and spec.name not in only:
             continue
         best = None

@@ -126,14 +126,11 @@ def main() -> None:
 
     # PQ codes tier: encode once (BLAS path — 16 centroids x 64 dims
     # = 1024 terms, past the codegen cliff), then LUT-ADC search that
-    # never touches a raw vector. The reconstruct-on-the-fly pq_topk
-    # comparison runs on a bounded slice (its per-row interpreted
-    # reconstruction is exactly the cliff the codes path removes).
+    # never touches a raw vector.
     from nyc_etl_pipeline_spark.operators.similarity import (
         pq_codebooks,
         pq_encode,
         pq_topk,
-        pq_topk_codes,
     )
 
     t0 = time.perf_counter()
@@ -143,16 +140,34 @@ def main() -> None:
     codes = pq_encode(vecs, books).persist()
     print(f"pq_encode: {codes.count():,} vectors coded in {time.perf_counter() - t0:.1f}s")
     t0 = time.perf_counter()
-    nq = pq_topk_codes(codes, queries, books, k=10).count()
-    print(f"pq_topk_codes (LUT ADC, full corpus): {nq:,} rows "
-          f"in {time.perf_counter() - t0:.1f}s")
-    slice_n = min(n, 200_000)
-    sl = vecs.filter(F.col("vec_id") < slice_n)
-    t0 = time.perf_counter()
-    nq = pq_topk(sl, queries, k=10, m=8, n_centroids=16, books=books).count()
-    print(f"pq_topk (reconstructing scan, {slice_n:,}-row slice): {nq:,} rows "
+    nq = pq_topk(codes, queries, books, k=10).count()
+    print(f"pq_topk (LUT ADC, full corpus): {nq:,} rows "
           f"in {time.perf_counter() - t0:.1f}s")
     codes.unpersist()
+
+    # IVF-PQ: the coded corpus laid out by the same 64 cells, searched
+    # by probing 4 of them
+    from nyc_etl_pipeline_spark.operators.similarity import (
+        ivfpq_topk_indexed,
+        ivfpq_write_index,
+    )
+
+    with tempfile.TemporaryDirectory() as td:
+        path = f"{td}/ivfpq_index"
+        t0 = time.perf_counter()
+        centers = ivfpq_write_index(
+            vecs, path, books, n_lists=64,
+            cache_key=("vector_scale_probe", n, 64),
+        )
+        print(f"ivfpq_write_index (64 cells): {time.perf_counter() - t0:.1f}s one-time")
+        t0 = time.perf_counter()
+        nq = ivfpq_topk_indexed(
+            spark, path, centers, books, queries, k=10, n_probe=4
+        ).count()
+        print(
+            f"ivfpq_topk_indexed (partition-pruned, 4/64 cells): {nq:,} rows "
+            f"in {time.perf_counter() - t0:.1f}s"
+        )
     spark.stop()
 
 

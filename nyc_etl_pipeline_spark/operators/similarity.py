@@ -48,9 +48,9 @@ def cosine_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exclude_self: bool = True,
 ) -> DataFrame:
-    """Exact top-k neighbors by cosine for each query vector.
+    """Exact top-k neighbors by cosine for each query vector, leaving
+    out the query's own id.
 
     Returns (query_id, neighbor_id, cosine) — cosine rounded to 4,
     ties broken by neighbor id. `queries` must be small (broadcast).
@@ -61,11 +61,12 @@ def cosine_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("__cv")
     )
-    scored = c.join(F.broadcast(q))
-    if exclude_self:
-        scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = scored.select(
-        "query_id", "neighbor_id", cosine(F.col("__qv"), F.col("__cv")).alias("__cos")
+    scored = (
+        c.join(F.broadcast(q))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id", "neighbor_id", cosine(F.col("__qv"), F.col("__cv")).alias("__cos")
+        )
     )
     w = W.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id"))
     return (
@@ -385,25 +386,36 @@ def _ivf_probes(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(query_id, __qv, __cell): each query's n_probe nearest cells by
-    euclidean distance to the literal centers (ties to lowest cell)."""
-    spark = queries.sparkSession
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("__qv")
+    euclidean distance to the literal centers (ties to lowest cell),
+    as one projection per query row (sort its (distance, cell) pairs,
+    keep the first n_probe): no join, no shuffle. The centers are one
+    JSON string the optimizer folds into a literal (exact for floats;
+    one py4j call instead of one per component)."""
+    import json
+
+    cjson = json.dumps([{"cell": i, "cvec": list(map(float, c))} for i, c in enumerate(centers)])
+    cells = F.from_json(F.lit(cjson), "array<struct<cell:int, cvec:array<double>>>")
+    ranked = F.transform(
+        cells,
+        lambda c: F.struct(
+            F.aggregate(
+                F.zip_with(F.col("__qv"), c["cvec"], lambda a, b: (a - b) * (a - b)),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ).alias("d2"),
+            c["cell"].alias("cell"),
+        ),
     )
-    center_rows = [(int(i), list(c)) for i, c in enumerate(centers)]
-    cdf = spark.createDataFrame(center_rows, "cell int, cvec array<double>")
-    dist2 = F.aggregate(
-        F.zip_with(F.col("__qv"), F.col("cvec"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wq = W.partitionBy("query_id").orderBy(F.col("__d2"), F.col("__cell"))
     return (
-        q.join(F.broadcast(cdf))
-        .select("query_id", "__qv", F.col("cell").alias("__cell"), dist2.alias("__d2"))
-        .withColumn("__pr", F.row_number().over(wq))
-        .filter(F.col("__pr") <= n_probe)
-        .select("query_id", "__qv", "__cell")
+        queries.select(
+            F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("__qv")
+        )
+        .select(
+            "query_id",
+            "__qv",
+            F.explode(F.slice(F.sort_array(ranked), 1, n_probe)).alias("__p"),
+        )
+        .select("query_id", "__qv", F.col("__p.cell").alias("__cell"))
     )
 
 
@@ -451,17 +463,27 @@ def ivf_write_index(
     cells are never opened (asserted on the plan's PartitionFilters
     in tests/test_ivf_index.py)."""
     centers = ivf_centroids(corpus, n_lists, vec_col, seed, cache_key)
+    _write_by_cell(
+        corpus.select(
+            F.col(id_col),
+            F.col(vec_col),
+            _nearest_cell(_as_double(F.col(vec_col)), centers).alias("__cell"),
+        ),
+        path,
+    )
+    return centers
+
+
+def _write_by_cell(df: DataFrame, path: str) -> None:
+    """Write `df` as parquet with one partition directory per `__cell`
+    (all of a cell's rows go to one task, so each directory holds one
+    file) — the layout the indexed searches prune on."""
     (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .withColumn(
-            "__cell", _nearest_cell(_as_double(F.col(vec_col)), centers)
-        )
-        .repartition("__cell")
+        df.repartition("__cell")
         .write.partitionBy("__cell")
         .mode("overwrite")
         .parquet(path)
     )
-    return centers
 
 
 def ivf_topk_indexed(
@@ -621,110 +643,7 @@ def pq_codebooks(
     return books
 
 
-def _pq_reconstruct(vec: Column, books: list[list[list[float]]]) -> Column:
-    """Per-subspace nearest-centroid lookup, reconstructed and
-    re-concatenated — one JVM expression per row, centroids embedded
-    as literals (the broadcast-codebook pattern: at scale the books are
-    a few KB and live in the plan, never in a shuffle)."""
-    m = len(books)
-    sub = len(books[0][0])
-    parts = []
-    for s, book in enumerate(books):
-        piece = F.slice(vec, s * sub + 1, sub)
-        dists = []
-        for c in book:
-            cv = F.array(*[F.lit(x) for x in c])
-            dists.append(
-                F.aggregate(
-                    F.zip_with(piece, cv, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            )
-        darr = F.array(*dists)
-        idx = F.array_position(darr, F.array_min(darr))  # 1-based
-        centroid_table = F.array(*[F.array(*[F.lit(x) for x in c]) for c in book])
-        parts.append(F.element_at(centroid_table, idx.cast("int")))
-    return F.concat(*parts)
-
-
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    m: int = 8,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    books: list[list[list[float]]] | None = None,
-    rerank: int = 0,
-) -> DataFrame:
-    """Asymmetric-distance PQ search: raw query vectors scored against
-    PQ-reconstructed corpus vectors (ADC — queries are few, so they
-    stay exact; only the billion-row side is compressed). Same
-    broadcast-probe shape as cosine_topk.
-
-    PQ codes collapse everything finer than the codebook resolution:
-    members of one cell tie, so rank order INSIDE a neighborhood is
-    meaningless (that is PQ's contract — coarse retrieval, 64x less
-    memory). `rerank=r > 0` adds the standard refine stage: keep the
-    top k*r by approximate cosine, re-score ONLY that shortlist with
-    exact cosines (one join back to the raw vectors of k*r*|Q| rows —
-    negligible against the corpus scan), return the true top-k. This
-    is the IVF-PQ+refine architecture: compressed scan for candidate
-    generation, exact math on the shortlist."""
-    if books is None:
-        books = pq_codebooks(corpus, m, n_centroids, vec_col, seed)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("__qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _pq_reconstruct(_as_double(F.col(vec_col)), books).alias("__cv"),
-    )
-    scored = (
-        c.join(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cosine(F.col("__qv"), F.col("__cv")).alias("__cos"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id"))
-    shortlist = k * rerank if rerank > 0 else k
-    top = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= shortlist)
-    )
-    if rerank <= 0:
-        return top.select(
-            "query_id",
-            "neighbor_id",
-            F.round("__cos", 4).alias("acosine"),
-            F.col("__rn").cast("int").alias("rank"),
-        )
-    raw = corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("__raw"))
-    rescored = (
-        top.select("query_id", "neighbor_id")
-        .join(
-            F.broadcast(raw.select(F.col(id_col).alias("query_id"), F.col("__raw").alias("__q"))),
-            on="query_id",
-        )
-        .join(raw.select(F.col(id_col).alias("neighbor_id"), F.col("__raw").alias("__n")), on="neighbor_id")
-        .select("query_id", "neighbor_id", cosine(F.col("__q"), F.col("__n")).alias("__tc"))
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.col("__tc").desc(), F.col("neighbor_id"))
-    return (
-        rescored.withColumn("__rn", F.row_number().over(w2))
-        .filter(F.col("__rn") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("__tc", 4).alias("acosine"),
-            F.col("__rn").cast("int").alias("rank"),
-        )
-    )
-
-
-#: above this many total multiply terms (n_centroids * dim), PQ
+#: above this many total multiply terms (m * n_centroids * sub), PQ
 #: encoding switches from per-subspace literal JVM folds to the
 #: Arrow/BLAS path — the _nearest_cell lesson applies unchanged:
 #: higher-order folds are interpreted, and a realistic 64-dim / m=8 /
@@ -733,18 +652,10 @@ def pq_topk(
 _PQ_ENCODE_EXPR_MAX_TERMS = 512
 
 
-def pq_encode(
-    corpus: DataFrame,
-    books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Encode each vector to its PQ codes: code[s] = argmin_c
-    ||x_s - books[s][c]||^2 (ties to the lowest centroid index, the
-    same first-minimum rule as numpy argmin). Returns
-    (id_col, codes array<int>) — m small ints per vector, the actual
-    64x-compressed representation PQ promises (pq_topk reconstructs
-    on the fly and never materializes it).
+def _pq_codes(vec: Column, books: list[list[list[float]]]) -> Column:
+    """array<int> column of PQ codes: code[s] = argmin_c ||x_s -
+    books[s][c]||^2, ties to the lowest centroid index (the same
+    first-minimum rule as numpy argmin).
 
     Small books run as per-subspace literal JVM expressions (exact
     index-ordered folds, no Python); past _PQ_ENCODE_EXPR_MAX_TERMS
@@ -756,9 +667,9 @@ def pq_encode(
     m = len(books)
     n_centroids = len(books[0])
     sub = len(books[0][0])
-    v = _as_double(F.col(vec_col))
 
     if m * n_centroids * sub <= _PQ_ENCODE_EXPR_MAX_TERMS:
+        v = _as_double(vec)
         codes = []
         for s, book in enumerate(books):
             piece = F.slice(v, s * sub + 1, sub)
@@ -774,7 +685,7 @@ def pq_encode(
                 )
             darr = F.array(*dists)
             codes.append((F.array_position(darr, F.array_min(darr)) - 1).cast("int"))
-        return corpus.select(F.col(id_col), F.array(*codes).alias("codes"))
+        return F.array(*codes)
 
     import numpy as np
     import pandas as pd
@@ -794,24 +705,37 @@ def pq_encode(
             out[:, s] = np.argmin(half_bn[s][None, :] - xs @ B[s].T, axis=1)
         return pd.Series(list(out))
 
+    return pandas_udf(_codes, "array<int>")(vec)
+
+
+def pq_encode(
+    corpus: DataFrame,
+    books: list[list[list[float]]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Encode each vector to its PQ codes (see _pq_codes). Returns
+    (id_col, codes array<int>) — m small ints per vector, the
+    64x-compressed representation that pq_topk scans."""
     return corpus.select(
-        F.col(id_col), pandas_udf(_codes, "array<int>")(F.col(vec_col)).alias("codes")
+        F.col(id_col), _pq_codes(F.col(vec_col), books).alias("codes")
     )
 
 
-def _collect_queries(
-    queries: DataFrame, id_col: str, vec_col: str, max_queries: int
-) -> list:
-    """Bounded driver-side query collect (the ADC LUTs are per-query
-    state); refuses above max_queries instead of silently growing."""
-    qrows = (
-        queries.select(
-            F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("__qv")
-        )
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(qrows) > max_queries:
+def _stored_pq_codes(vec: Column, books: list[list[list[float]]]) -> Column:
+    """The stored code column: array<tinyint>, one byte per subspace."""
+    if len(books[0]) > 128:
+        raise ValueError("PQ index: tinyint codes need n_centroids <= 128")
+    return _pq_codes(vec, books).cast("array<tinyint>")
+
+
+def _collect_queries(q: DataFrame, max_queries: int, per_query: int = 1) -> list:
+    """Bounded driver-side collect of a (query_id, __qv, ...) frame
+    holding exactly `per_query` rows per query (the ADC LUTs are
+    per-query state); refuses above max_queries queries instead of
+    silently growing."""
+    qrows = q.limit((max_queries + 1) * per_query).collect()
+    if len(qrows) > max_queries * per_query:
         raise ValueError(
             f"query side exceeds max_queries={max_queries}; "
             "ADC LUTs are per-query driver-side state — batch the queries"
@@ -870,45 +794,30 @@ def _exact_rerank(
     )
 
 
-def pq_topk_codes(
+def _adc_search(
     codes: DataFrame,
-    queries: DataFrame,
+    qrows: list,
     books: list[list[list[float]]],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rerank: int = 0,
-    corpus: DataFrame | None = None,
-    max_queries: int = 4096,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    rerank: int,
+    corpus: DataFrame | None,
+    member=None,
 ) -> DataFrame:
-    """ADC search over PRE-ENCODED PQ codes via per-query lookup
-    tables — the scan never touches a raw vector and never
-    reconstructs one. For query q: DT[s][c] = q_s . books[s][c] and
-    NSQ[s][c] = ||books[s][c]||^2 are (m x k) tables computed once
-    driver-side; a corpus row's approximate cosine is then m table
-    gathers:
-
-        cos = sum_s DT[s][code_s] / (||q|| * sqrt(sum_s NSQ[s][code_s]))
-
-    (exact for the concatenated reconstruction, because subspaces are
-    orthogonal coordinate blocks). Per Arrow batch the scan does m
-    fancy-index gathers per query over the whole batch — no distance
-    folds — and keeps a local top-k per query (ties: cosine desc,
-    neighbor_id asc), so the shuffle is |batches| * |Q| * k rows, not
-    N * |Q|. This is the scan shape that makes PQ worth storing: m
-    bytes read per corpus row, LUTs in closure, output bounded.
-
-    `rerank=r > 0` rescores the k*r shortlist with exact cosines
-    against `corpus` (required then), as in pq_topk. Results match
-    pq_topk(books=...) exactly on exact-arithmetic data; floats may
-    shift near-ties (same contract note as pq_encode)."""
+    """The one LUT-ADC scan and tail behind pq_topk and
+    ivfpq_topk_indexed. `member` (|Q| x n_lists bool, rows in `qrows`
+    order) restricts each query to the rows of the cells it probed;
+    `codes` then carries `__cell`. Per Arrow batch each query keeps a
+    local top-shortlist, a window keeps the global one, and the tail
+    either rounds the ADC cosine or reranks exactly against `corpus`."""
     import numpy as np
     import pandas as pd
 
-    m = len(books)
-    qrows = _collect_queries(queries, id_col, vec_col, max_queries)
+    if rerank > 0 and corpus is None:
+        raise ValueError("PQ search: rerank > 0 needs the raw corpus")
     qids, DT, NSQ, qnorm = _pq_luts(qrows, books)
-    nq = len(qids)
+    subspaces = np.arange(len(books))[None, :]
     shortlist = k * rerank if rerank > 0 else k
 
     def _scan(batches):
@@ -917,18 +826,23 @@ def pq_topk_codes(
                 continue
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             C = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (B, m)
-            rnorm = np.sqrt(NSQ[np.arange(m)[None, :], C].sum(axis=1))  # (B,)
+            rnorm = np.sqrt(NSQ[subspaces, C].sum(axis=1))  # (B,)
+            cells = None if member is None else pdf["__cell"].to_numpy(dtype=np.int64)
             out_q, out_n, out_c = [], [], []
-            for qi in range(nq):
-                dots = DT[qi][np.arange(m)[None, :], C].sum(axis=1)  # (B,)
-                cos = dots / (qnorm[qi] * rnorm)
-                keep = ids != qids[qi]
-                cid, ccos = ids[keep], cos[keep]
+            for qi, qid in enumerate(qids):
+                keep = ids != qid
+                if member is None:  # one excluded row: cheaper than copying C[keep]
+                    cos = DT[qi][subspaces, C].sum(axis=1) / (qnorm[qi] * rnorm)
+                    cid, cos = ids[keep], cos[keep]
+                else:  # most rows are outside the probed cells: gather the kept ones
+                    keep &= member[qi][cells]
+                    cid = ids[keep]
+                    cos = DT[qi][subspaces, C[keep]].sum(axis=1) / (qnorm[qi] * rnorm[keep])
                 # ties: cosine desc then id asc — lexsort is stable
-                order = np.lexsort((cid, -ccos))[:shortlist]
-                out_q.append(np.full(len(order), qids[qi], dtype=np.int64))
+                order = np.lexsort((cid, -cos))[:shortlist]
+                out_q.append(np.full(len(order), qid, dtype=np.int64))
                 out_n.append(cid[order])
-                out_c.append(ccos[order])
+                out_c.append(cos[order])
             yield pd.DataFrame(
                 {
                     "query_id": np.concatenate(out_q),
@@ -944,16 +858,64 @@ def pq_topk_codes(
     top = scored.withColumn("__rn", F.row_number().over(w)).filter(
         F.col("__rn") <= shortlist
     )
-    if rerank <= 0:
-        return top.select(
-            "query_id",
-            "neighbor_id",
-            F.round("__cos", 4).alias("acosine"),
-            F.col("__rn").cast("int").alias("rank"),
-        )
-    if corpus is None:
-        raise ValueError("pq_topk_codes: rerank > 0 needs the raw corpus")
-    return _exact_rerank(top, corpus, id_col, vec_col, k)
+    if rerank > 0:
+        return _exact_rerank(top, corpus, id_col, vec_col, k)
+    return top.select(
+        "query_id",
+        "neighbor_id",
+        F.round("__cos", 4).alias("acosine"),
+        F.col("__rn").cast("int").alias("rank"),
+    )
+
+
+def pq_topk(
+    codes: DataFrame,
+    queries: DataFrame,
+    books: list[list[list[float]]],
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    rerank: int = 0,
+    corpus: DataFrame | None = None,
+    max_queries: int = 4096,
+) -> DataFrame:
+    """Asymmetric-distance (ADC) PQ search over PQ codes (pq_encode's
+    output, or a pq_write_index table read back): raw query vectors
+    against compressed corpus rows — queries are few, so they stay
+    exact; only the billion-row side is compressed. The scan never
+    touches a raw vector and never reconstructs one. For query q:
+    DT[s][c] = q_s . books[s][c] and NSQ[s][c] = ||books[s][c]||^2 are
+    (m x k) tables computed once driver-side; a corpus row's
+    approximate cosine is then m table gathers:
+
+        cos = sum_s DT[s][code_s] / (||q|| * sqrt(sum_s NSQ[s][code_s]))
+
+    (exact for the concatenated reconstruction, because subspaces are
+    orthogonal coordinate blocks). Per Arrow batch the scan does m
+    fancy-index gathers per query over the whole batch — no distance
+    folds — and keeps a local top-k per query (ties: cosine desc,
+    neighbor_id asc; the query's own id is left out), so the shuffle is
+    |batches| * |Q| * k rows, not N * |Q|. Returns (query_id,
+    neighbor_id, acosine rounded to 4, rank).
+
+    PQ codes collapse everything finer than the codebook resolution:
+    members of one cell tie, so rank order INSIDE a neighborhood is
+    meaningless (that is PQ's contract — coarse retrieval, 64x less
+    memory) and the id tie rule picks among them. `rerank=r > 0` adds
+    the standard refine stage: keep the top k*r by ADC cosine,
+    re-score ONLY that shortlist with exact cosines against `corpus`
+    (required then; one join back to the raw vectors of k*r*|Q| rows —
+    negligible against the corpus scan), return the true top-k. This
+    is the IVF-PQ+refine architecture: compressed scan for candidate
+    generation, exact math on the shortlist. The queries are collected
+    to the driver; more than `max_queries` raises."""
+    qrows = _collect_queries(
+        queries.select(
+            F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("__qv")
+        ),
+        max_queries,
+    )
+    return _adc_search(codes, qrows, books, k, id_col, vec_col, rerank, corpus)
 
 
 def pq_write_index(
@@ -968,17 +930,11 @@ def pq_write_index(
     form of the 64x memory tier. The codebooks are the index metadata
     and travel separately (a few KB of floats — store them with the
     path, as ivf_write_index does with its centers). Search with
-    `pq_topk_codes(spark.read.parquet(path), ...)`; compose with
-    ivf_write_index layout for IVF-PQ (partition-pruned scan over
-    coded cells)."""
-    if len(books[0]) > 128:
-        raise ValueError("pq_write_index: tinyint codes need n_centroids <= 128")
-    (
-        pq_encode(corpus, books, id_col, vec_col)
-        .select(F.col(id_col), F.col("codes").cast("array<tinyint>").alias("codes"))
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    `pq_topk(spark.read.parquet(path), ...)`; ivfpq_write_index adds
+    the IVF cell layout (partition-pruned scan over coded cells)."""
+    corpus.select(
+        F.col(id_col), _stored_pq_codes(F.col(vec_col), books).alias("codes")
+    ).write.mode("overwrite").parquet(path)
 
 
 def ivfpq_write_index(
@@ -995,28 +951,21 @@ def ivfpq_write_index(
     (a) assigned to its nearest coarse cell (the IVF half — cells
     become parquet partition directories, so probing is partition
     pruning) and (b) stored ONLY as its m-byte PQ code (the PQ half —
-    the raw vector never hits the index). A probed search reads
-    n_probe/n_lists of an already-64x-compressed table; with
-    n_lists=1024 and m=8 a billion 64-dim float32 vectors index into
-    ~8 GB of codes spread over prunable directories. Returns the
-    coarse centers; store them AND the codebooks with the path — they
-    are the index metadata."""
+    the raw vector never hits the index); both come from one
+    projection over the corpus. A probed search reads n_probe/n_lists
+    of an already-64x-compressed table; with n_lists=1024 and m=8 a
+    billion 64-dim float32 vectors index into ~8 GB of codes spread
+    over prunable directories. Returns the coarse centers; store them
+    AND the codebooks with the path — they are the index metadata."""
+    codes = _stored_pq_codes(F.col(vec_col), books)
     centers = ivf_centroids(corpus, n_lists, vec_col, seed, cache_key)
-    if len(books[0]) > 128:
-        raise ValueError("ivfpq_write_index: tinyint codes need n_centroids <= 128")
-    coded = pq_encode(corpus, books, id_col, vec_col).select(
-        F.col(id_col), F.col("codes").cast("array<tinyint>").alias("codes")
-    )
-    assigned = corpus.select(
-        F.col(id_col),
-        _nearest_cell(_as_double(F.col(vec_col)), centers).alias("__cell"),
-    )
-    (
-        coded.join(assigned, on=id_col)
-        .repartition("__cell")
-        .write.partitionBy("__cell")
-        .mode("overwrite")
-        .parquet(path)
+    _write_by_cell(
+        corpus.select(
+            F.col(id_col),
+            codes.alias("codes"),
+            _nearest_cell(_as_double(F.col(vec_col)), centers).alias("__cell"),
+        ),
+        path,
     )
     return centers
 
@@ -1035,85 +984,34 @@ def ivfpq_topk_indexed(
     corpus: DataFrame | None = None,
     max_queries: int = 4096,
 ) -> DataFrame:
-    """Search a stored IVF-PQ index: the union of all probed cell ids
-    is pushed as a static partition filter (unprobed directories are
-    never opened), then one LUT-ADC scan scores each surviving code
-    row against exactly the queries that probed its cell — a
-    (|Q| x n_lists) boolean membership matrix in the scan closure
-    keeps that per-row, per-query masking a vectorized gather. Same
-    tie rules as pq_topk_codes (cosine desc, neighbor id asc);
-    `rerank` adds the exact refine stage against `corpus`."""
+    """Search a stored IVF-PQ index: each query's probed cells come
+    from _ivf_probes (the rule ivf_topk_indexed uses: distance, then
+    lowest cell), their union is pushed as a static partition filter
+    (unprobed directories are never opened), and pq_topk's ADC scan
+    scores each surviving code row against exactly the queries that
+    probed its cell — a (|Q| x n_lists) boolean membership matrix in
+    the scan closure keeps that per-row, per-query masking a
+    vectorized gather. Same tie rules and `rerank` stage as pq_topk."""
     import numpy as np
-    import pandas as pd
 
-    m = len(books)
-    qrows = _collect_queries(queries, id_col, vec_col, max_queries)
-    qids, DT, NSQ, qnorm = _pq_luts(qrows, books)
-    nq = len(qids)
-    # each query's n_probe nearest cells, driver-side (centers are
-    # literals; |Q| is bounded) — same distance + tie rule as
-    # _ivf_probes: squared euclidean, ties to the lowest cell id.
-    C = np.asarray(centers, dtype=np.float64)
-    member = np.zeros((nq, len(centers)), dtype=bool)
-    probed_cells: set[int] = set()
-    for qi, r in enumerate(qrows):
-        qv = np.asarray(r["__qv"], dtype=np.float64)
-        d2 = ((C - qv[None, :]) ** 2).sum(axis=1)
-        near = np.argsort(d2, kind="stable")[:n_probe]  # stable = lowest id on ties
-        member[qi, near] = True
-        probed_cells.update(int(c) for c in near)
+    # one collect of the probe rows (query_id, __qv, __cell) yields both
+    # the query vectors and their cells: the query source is read once
+    probes = _collect_queries(
+        _ivf_probes(queries, centers, n_probe, id_col, vec_col),
+        max_queries,
+        min(n_probe, len(centers)),
+    )
+    qrows = list({r["query_id"]: r for r in probes}.values())
+    row_of = {r["query_id"]: i for i, r in enumerate(qrows)}
+    member = np.zeros((len(qrows), len(centers)), dtype=bool)
+    for r in probes:
+        member[row_of[r["query_id"]], r["__cell"]] = True
     codes = spark.read.parquet(path).filter(
-        F.col("__cell").isin(sorted(probed_cells))
+        F.col("__cell").isin(sorted({int(r["__cell"]) for r in probes}))
     )
-    shortlist = k * rerank if rerank > 0 else k
-
-    def _scan(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            cells = pdf["__cell"].to_numpy(dtype=np.int64)
-            Cm = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            rnorm = np.sqrt(NSQ[np.arange(m)[None, :], Cm].sum(axis=1))
-            out_q, out_n, out_c = [], [], []
-            for qi in range(nq):
-                keep = member[qi][cells] & (ids != qids[qi])
-                if not keep.any():
-                    continue
-                cid = ids[keep]
-                dots = DT[qi][np.arange(m)[None, :], Cm[keep]].sum(axis=1)
-                cos = dots / (qnorm[qi] * rnorm[keep])
-                order = np.lexsort((cid, -cos))[:shortlist]
-                out_q.append(np.full(len(order), qids[qi], dtype=np.int64))
-                out_n.append(cid[order])
-                out_c.append(cos[order])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "__cos": np.concatenate(out_c),
-                }
-            )
-
-    scored = codes.mapInPandas(
-        _scan, schema="query_id long, neighbor_id long, __cos double"
+    return _adc_search(
+        codes, qrows, books, k, id_col, vec_col, rerank, corpus, member
     )
-    w = W.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id"))
-    top = scored.withColumn("__rn", F.row_number().over(w)).filter(
-        F.col("__rn") <= shortlist
-    )
-    if rerank <= 0:
-        return top.select(
-            "query_id",
-            "neighbor_id",
-            F.round("__cos", 4).alias("acosine"),
-            F.col("__rn").cast("int").alias("rank"),
-        )
-    if corpus is None:
-        raise ValueError("ivfpq_topk_indexed: rerank > 0 needs the raw corpus")
-    return _exact_rerank(top, corpus, id_col, vec_col, k)
 
 
 def plane_sign_vectors(n_planes: int, dim: int) -> list[list[float]]:

@@ -155,12 +155,11 @@ FROM ranked WHERE rn <= {TOPK_K}
 """
 
 
-# Product quantization (similarity.pq_topk) is deliberately NOT a gate
-# query: the driver's embeddings fixture is near-uniform noise, which
-# is the one distribution PQ cannot compress (measured recall ~0.2 at
-# 32-bit codes — any passing tolerance would be vacuous). PQ's premise
-# is cluster structure; tests/test_training_ops pins recall >= 0.9 on
-# deterministically-clustered vectors instead, where the premise holds.
+# Product quantization is gated by q101, not on the embeddings fixture:
+# that fixture is near-uniform noise, the one distribution PQ cannot
+# compress (measured recall ~0.2 at 32-bit codes — any passing
+# tolerance would be vacuous). PQ's premise is cluster structure, so
+# q101 runs PQ on its own deterministically-clustered vectors.
 
 
 def q56_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -270,9 +269,7 @@ def q101_pq_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     books = SIM.pq_codebooks(
         v, m=PQ_M, n_centroids=PQ_CODEBOOK, vec_col="embedding", seed=7
     )
-    pq = SIM.pq_topk(
-        v, queries, k=PQ_TOPK, m=PQ_M, n_centroids=PQ_CODEBOOK, books=books
-    )
+    pq = SIM.pq_topk(SIM.pq_encode(v, books), queries, books, k=PQ_TOPK)
     qclus = v.select(
         F.col("vec_id").alias("query_id"), F.col("cluster").alias("q_cluster")
     )

@@ -225,15 +225,18 @@ def test_pq_topk_on_clustered_vectors(spark):
     queries = emb.filter(F.col("vec_id") < 5)
     exact = SIM.cosine_topk(emb, queries, k=5)
 
+    books = SIM.pq_codebooks(emb)
+    codes = SIM.pq_encode(emb, books)
+
     # coarse retrieval: every PQ neighbor must come from the query's
     # true cluster (rank order inside a cell is meaningless by design)
-    coarse = SIM.pq_topk(emb, queries, k=5)
+    coarse = SIM.pq_topk(codes, queries, books, k=5)
     for r in coarse.collect():
         assert r["neighbor_id"] % 20 == r["query_id"] % 20, r
 
     # with the standard refine stage (exact re-scoring of the k*r
     # shortlist) full exact-topk recall comes back
-    refined = SIM.pq_topk(emb, queries, k=5, rerank=5)
+    refined = SIM.pq_topk(codes, queries, books, k=5, rerank=5, corpus=emb)
     e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["neighbor_id"]) for r in refined.collect()}
     recall = len(e & a) / len(e)
