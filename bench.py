@@ -29,6 +29,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from nyc_etl_pipeline_spark import get_spark, suite  # noqa: E402
+
 
 def _host_driver_mem() -> str:
     """~30% of host RAM within [1, 16] GiB. In local mode the driver
@@ -38,11 +40,6 @@ def _host_driver_mem() -> str:
         mem_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
     return f"{max(1, min(16, int(mem_kb * 0.3 / (1 << 20))))}g"
 
-
-# respect an explicit caller override
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _host_driver_mem())
-
-from nyc_etl_pipeline_spark import get_spark, suite  # noqa: E402
 
 BENCH_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
 
@@ -95,7 +92,12 @@ def main() -> None:
 
     spark = get_spark(
         app_name="nyc-etl-pipeline-spark-bench",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
+        extra_conf={
+            "spark.ui.showConsoleProgress": "false",
+            # an explicit SPARK_GRAFT_DRIVER_MEM wins over the host default
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or _host_driver_mem(),
+        },
     )
 
     # Warm the JVM + parquet footers once so the first timed query

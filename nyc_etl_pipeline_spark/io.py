@@ -154,13 +154,6 @@ def read_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return reader.parquet(path)
 
 
-def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
-
-
 def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """Header CSV scan with explicit schema (no inferSchema job).
 
@@ -226,7 +219,9 @@ class Warehouse:
 
     def overwrite_partitions(self, df: DataFrame, table: str, partition_by: list[str]) -> None:
         """Replace only the partitions present in ``df`` (idempotent
-        incremental load). Requires the table to already exist."""
+        incremental load). An absent table is created: the first write
+        gives the same rows and partition directories as
+        ``overwrite(df, table, partition_by)``."""
         (
             df.write.mode("overwrite")
             .partitionBy(*partition_by)

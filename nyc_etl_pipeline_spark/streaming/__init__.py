@@ -11,13 +11,11 @@ operators in suite/events.py — same results, incremental execution.
 from nyc_etl_pipeline_spark.streaming.events import (
     run_available_now,
     stream_session_windows,
-    stream_sliding_counts,
     stream_tumbling_counts,
 )
 
 __all__ = [
     "run_available_now",
     "stream_tumbling_counts",
-    "stream_sliding_counts",
     "stream_session_windows",
 ]

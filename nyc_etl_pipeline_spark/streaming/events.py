@@ -103,20 +103,6 @@ def stream_tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> Data
     )
 
 
-def stream_sliding_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "15 minutes"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("total_value"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
 def stream_session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Native streaming sessionization: session_window merges events
     within `gap` into one growing window per user — the streaming
@@ -240,33 +226,6 @@ def stream_stream_join_outer(
         "l_ts",
         "r_event_id",
         "r_ts",
-    )
-
-
-def stream_to_warehouse(
-    agg: DataFrame,
-    warehouse,
-    table: str,
-    checkpoint_dir: str,
-    partition_by: list[str] | None = None,
-):
-    """Exactly-once streaming sink into a Warehouse parquet table via
-    foreachBatch + idempotent partition overwrite: replays of a failed
-    epoch rewrite the same partitions instead of appending duplicates
-    (the streaming analogue of the engine's Q6 fix)."""
-
-    def write_batch(df: DataFrame, _epoch_id: int) -> None:
-        if partition_by:
-            warehouse.overwrite_partitions(df, table, partition_by)
-        else:
-            warehouse.overwrite(df, table)
-
-    return (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 

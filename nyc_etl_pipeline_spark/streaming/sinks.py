@@ -185,15 +185,36 @@ def stream_to_warehouse(
     return writer.start()
 
 
+def _batch_partition_writer(
+    warehouse, table: str, partial, partition_by=("batch_id",)
+):
+    """The foreachBatch `write_batch(batch_df, batch_id)` every
+    maintainer below shares: `partial(batch_df)` is the batch's
+    mergeable partial state, tagged with its batch_id and written by
+    dynamic partition overwrite (`Warehouse.overwrite_partitions`,
+    which also creates an absent table). A replayed batch therefore
+    rewrites its own partition instead of double-counting —
+    exactly-once by idempotent partition rewrite, no commit log
+    needed. availableNow can fire an empty batch 0; writing it would
+    create a data-less partitioned dir that breaks later reads, so an
+    empty batch writes nothing."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        tagged = partial(batch_df).withColumn("batch_id", F.lit(int(batch_id)))
+        warehouse.overwrite_partitions(tagged, table, list(partition_by))
+
+    return write_batch
+
+
 def sketch_maintainer(warehouse, table: str, token_col: str = "token"):
     """foreachBatch function maintaining a corpus count-min sketch
-    incrementally: each micro-batch writes its PARTIAL sketch into a
-    batch_id partition of a Warehouse table (dynamic partition
-    overwrite), so a replayed batch overwrites its own partition
-    instead of double-counting — exactly-once by idempotent partition
-    rewrite, no commit log needed. The queryable corpus sketch is the
-    cell-wise sum over all partitions (`merged_sketch`), bounded by
-    depth*width*n_batches rows until a compaction folds history.
+    incrementally: each micro-batch's PARTIAL sketch lands in its own
+    batch_id partition (`_batch_partition_writer`). The queryable
+    corpus sketch is the cell-wise sum over all partitions
+    (`merged_sketch`), bounded by depth*width*n_batches rows until a
+    compaction folds history.
 
     This is the streaming face of the mergeable-summary family
     (operators/sketches.py, operators/incremental.py): partial states
@@ -202,20 +223,9 @@ def sketch_maintainer(warehouse, table: str, token_col: str = "token"):
     """
     from nyc_etl_pipeline_spark.operators import sketches as SKC
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            # availableNow can fire an empty batch 0; writing it would
-            # create a data-less partitioned dir that breaks later reads
-            return
-        partial = SKC.cms_build(batch_df, token_col=token_col).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        if warehouse.exists(table):
-            warehouse.overwrite_partitions(partial, table, ["batch_id"])
-        else:
-            warehouse.overwrite(partial, table, partition_by=["batch_id"])
-
-    return write_batch
+    return _batch_partition_writer(
+        warehouse, table, lambda df: SKC.cms_build(df, token_col=token_col)
+    )
 
 
 def merged_sketch(warehouse, table: str) -> DataFrame:
@@ -231,27 +241,16 @@ def mart_maintainer(warehouse, table: str, keys: list[str], measures: list[str])
     """foreachBatch function maintaining an aggregate MART
     incrementally — the streaming face of operators/incremental.py
     (q120): each micro-batch's mergeable partial states
-    (sum/cnt/min/max per key) land in their own batch_id partition via
-    dynamic partition overwrite, so replay rewrites rather than
-    double-counts (same exactly-once-by-idempotence contract as
-    `sketch_maintainer`). `merged_mart` is the queryable finalized
+    (sum/cnt/min/max per key) land in their own batch_id partition
+    (`_batch_partition_writer`). `merged_mart` is the queryable finalized
     view; `Warehouse.compact` (or a periodic rewrite of the merged
     result into a fresh table) folds partition history when batch
     count grows."""
     from nyc_etl_pipeline_spark.operators import incremental as INC
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # see sketch_maintainer: empty batch 0 must not write
-        partial = INC.partial_aggregate(batch_df, keys, measures).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        if warehouse.exists(table):
-            warehouse.overwrite_partitions(partial, table, ["batch_id"])
-        else:
-            warehouse.overwrite(partial, table, partition_by=["batch_id"])
-
-    return write_batch
+    return _batch_partition_writer(
+        warehouse, table, lambda df: INC.partial_aggregate(df, keys, measures)
+    )
 
 
 def merged_mart(warehouse, table: str, keys: list[str], measures: list[str]) -> DataFrame:
@@ -270,10 +269,7 @@ def mg_maintainer(
     summary incrementally: each micro-batch's partial summaries
     (operators/sketches.mg_partial_summaries — candidate rows plus
     the NULL-token sentinel carrying the batch's exact row count)
-    land in a batch_id partition via dynamic partition overwrite, so
-    a replayed batch rewrites its own partition instead of
-    double-counting — the same exactly-once-by-idempotence contract
-    as `sketch_maintainer`.
+    land in a batch_id partition (`_batch_partition_writer`).
 
     MG summaries merge associatively with errors that ADD over
     disjoint inputs (<= n_b/(k+1) per batch, total <= n/(k+1)), so
@@ -286,18 +282,13 @@ def mg_maintainer(
     """
     from nyc_etl_pipeline_spark.operators import sketches as SKC
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # see sketch_maintainer: empty batch 0 must not write
-        partial = SKC.mg_partial_summaries(
-            batch_df, col=token_col, k_summary=k_summary
-        ).withColumn("batch_id", F.lit(int(batch_id)))
-        if warehouse.exists(table):
-            warehouse.overwrite_partitions(partial, table, ["batch_id"])
-        else:
-            warehouse.overwrite(partial, table, partition_by=["batch_id"])
-
-    return write_batch
+    return _batch_partition_writer(
+        warehouse,
+        table,
+        lambda df: SKC.mg_partial_summaries(
+            df, col=token_col, k_summary=k_summary
+        ),
+    )
 
 
 def merged_mg_summary(
@@ -328,10 +319,7 @@ def ivf_maintainer(
     literal assignment — the serving-time contract: the quantizer is
     versioned with the index and refreshed only by an offline rebuild,
     exactly as ivf_write_index stores it) and land in
-    (batch_id, __cell) partitions via dynamic partition overwrite, so
-    a replayed batch rewrites its own partitions instead of
-    duplicating vectors — the same exactly-once-by-idempotence
-    contract as `mg_maintainer`/`sketch_maintainer`.
+    (batch_id, __cell) partitions (`_batch_partition_writer`).
 
     Search stays partition-pruned: __cell remains a partition column
     (second level under batch_id), so `maintained_ivf_topk`'s probed-
@@ -348,26 +336,14 @@ def ivf_maintainer(
         _nearest_cell,
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # empty batch 0 must not create an empty table
-        assigned = (
-            batch_df.select(F.col(id_col), F.col(vec_col))
-            .withColumn(
-                "__cell", _nearest_cell(_as_double(F.col(vec_col)), centers)
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)))
+    def assign(batch_df: DataFrame) -> DataFrame:
+        return batch_df.select(F.col(id_col), F.col(vec_col)).withColumn(
+            "__cell", _nearest_cell(_as_double(F.col(vec_col)), centers)
         )
-        if warehouse.exists(table):
-            warehouse.overwrite_partitions(
-                assigned, table, ["batch_id", "__cell"]
-            )
-        else:
-            warehouse.overwrite(
-                assigned, table, partition_by=["batch_id", "__cell"]
-            )
 
-    return write_batch
+    return _batch_partition_writer(
+        warehouse, table, assign, partition_by=("batch_id", "__cell")
+    )
 
 
 def maintained_ivf_topk(
@@ -419,8 +395,7 @@ def band_index_maintainer(
     incrementally — the streaming completion of the near-dup dedup
     lifecycle: each arriving micro-batch's band table
     (dedup.minhash_band_table, the same construction q23/q127 gate)
-    lands in a batch_id partition via dynamic partition overwrite
-    (exactly-once by idempotence, the mg_maintainer contract).
+    lands in a batch_id partition (`_batch_partition_writer`).
 
     The maintained table is exactly what the incremental near-dup
     gate equi-joins its batch bands against
@@ -431,29 +406,19 @@ def band_index_maintainer(
     grows per batch without ever rescanning history."""
     from nyc_etl_pipeline_spark.operators.dedup import minhash_band_table
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # empty batch 0 must not create an empty table
-        bt = minhash_band_table(
-            batch_df, id_col, text_col, n, num_hashes, bands
-        ).withColumn("batch_id", F.lit(int(batch_id)))
-        if warehouse.exists(table):
-            warehouse.overwrite_partitions(bt, table, ["batch_id"])
-        else:
-            warehouse.overwrite(bt, table, partition_by=["batch_id"])
-
-    return write_batch
+    return _batch_partition_writer(
+        warehouse,
+        table,
+        lambda df: minhash_band_table(df, id_col, text_col, n, num_hashes, bands),
+    )
 
 
 def hll_maintainer(warehouse, table: str, keys: list[str], value_col: str):
     """foreachBatch function maintaining per-key HLL distinct-count
     sketches incrementally — the streaming face of the q80 rollup and
-    the last member of the mergeable-summary maintainer family
-    (sketch_maintainer / mart_maintainer / mg_maintainer share the
-    contract): each micro-batch's per-key Datasketches HLL binaries
-    land in a batch_id partition via dynamic partition overwrite, so a
-    replayed batch rewrites its own partition instead of double-
-    counting (exactly-once by idempotence — though HLL registers are
+    the last member of the mergeable-summary maintainer family: each
+    micro-batch's per-key Datasketches HLL binaries land in a batch_id
+    partition (`_batch_partition_writer` — though HLL registers are
     max-merged, so even a true double-count could not move the
     estimate; the contract is kept uniform anyway).
 
@@ -462,18 +427,13 @@ def hll_maintainer(warehouse, table: str, keys: list[str], value_col: str):
     estimate, and a new batch containing only already-seen values is a
     provable no-op (subset registers never exceed the union's)."""
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # see sketch_maintainer: empty batch 0 must not write
-        partial = batch_df.groupBy(*keys).agg(
+    return _batch_partition_writer(
+        warehouse,
+        table,
+        lambda df: df.groupBy(*keys).agg(
             F.hll_sketch_agg(value_col).alias("hll_sketch")
-        ).withColumn("batch_id", F.lit(int(batch_id)))
-        if warehouse.exists(table):
-            warehouse.overwrite_partitions(partial, table, ["batch_id"])
-        else:
-            warehouse.overwrite(partial, table, partition_by=["batch_id"])
-
-    return write_batch
+        ),
+    )
 
 
 def merged_hll(warehouse, table: str, keys: list[str]) -> DataFrame:

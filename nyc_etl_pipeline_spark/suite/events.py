@@ -19,6 +19,7 @@ from nyc_etl_pipeline_spark.functions import dec_avg, dec_sum
 from nyc_etl_pipeline_spark.functions import round_half_up as R
 from nyc_etl_pipeline_spark.functions import sql_dec_avg, sql_round_half_up
 from nyc_etl_pipeline_spark.suite import QuerySpec
+from nyc_etl_pipeline_spark.suite.maintained import grow
 
 
 def q13_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1598,11 +1599,6 @@ FROM agg
 HLL_MAINT_BATCHES = 3
 HLL_MAINT_TOL = 0.10  # 5x the lgK=12 rsd; the sketch is deterministic
 
-# sf_dir -> temp warehouse root (same memoization contract as
-# q175/q176: the maintainer machinery — 3 batches + 1 replay — runs on
-# the first invocation per process; best-of-2 times the serving read).
-_MAINT_HLL_INDEX: dict[str, str] = {}
-
 
 def q187_maintained_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type distinct-user estimates from the streaming
@@ -1611,26 +1607,15 @@ def q187_maintained_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a from-scratch batch union of identically-sliced partials —
     the replay-safety + storage-round-trip invariant a 100 TB rollup
     deployment depends on."""
-    import tempfile
-
-    from nyc_etl_pipeline_spark.io import Warehouse
     from nyc_etl_pipeline_spark.streaming.sinks import hll_maintainer, merged_hll
 
     e = read_testdata(spark, sf_dir, "events")
-    if sf_dir not in _MAINT_HLL_INDEX:
-        root = tempfile.mkdtemp(prefix="maintained_hll_")
-        wh = Warehouse(spark, root)
-        write_batch = hll_maintainer(wh, "hll", ["event_type"], "user_id")
-        for b in range(HLL_MAINT_BATCHES):
-            write_batch(
-                e.filter(F.pmod(F.col("user_id"), F.lit(HLL_MAINT_BATCHES)) == b), b
-            )
-        write_batch(
-            e.filter(F.pmod(F.col("user_id"), F.lit(HLL_MAINT_BATCHES)) == 0), 0
-        )  # retry replay: idempotent partition overwrite
-        _MAINT_HLL_INDEX[sf_dir] = root
-    wh = Warehouse(spark, _MAINT_HLL_INDEX[sf_dir])
-
+    wh = grow(
+        spark, sf_dir, "maintained_hll",
+        lambda wh: hll_maintainer(wh, "hll", ["event_type"], "user_id"),
+        lambda b: e.filter(F.pmod(F.col("user_id"), F.lit(HLL_MAINT_BATCHES)) == b),
+        HLL_MAINT_BATCHES,
+    )
     maintained = merged_hll(wh, "hll", ["event_type"])
     batch_built = (
         e.withColumn("__b", F.pmod(F.col("user_id"), F.lit(HLL_MAINT_BATCHES)))
@@ -1753,34 +1738,30 @@ SPECS = [
 
 MART_MAINT_BATCHES = 3
 
-# sf_dir -> temp warehouse root (q187 memoization contract).
-_MAINT_MART_INDEX: dict[str, str] = {}
-
 
 def q195_maintained_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type (sum/cnt/min/max/avg of value, n_rows) from the
     streaming mart maintainer's stored batch partials — one merge
     aggregation over O(keys x batches) rows, never the event stream."""
-    import tempfile
+    return _maintained_mart(spark, sf_dir, "maintained_mart", MART_MAINT_BATCHES)
 
-    from nyc_etl_pipeline_spark.io import Warehouse
+
+def _maintained_mart(
+    spark: SparkSession, sf_dir: str, tag: str, nb: int,
+    compact_table: str | None = None,
+) -> DataFrame:
+    """The per-event-type mart `mart_maintainer` grew from `nb` user_id
+    slices of the events (q195, q197), finalized by `merged_mart`."""
     from nyc_etl_pipeline_spark.streaming.sinks import mart_maintainer, merged_mart
 
     keys, measures = ["event_type"], ["value"]
     e = read_testdata(spark, sf_dir, "events")
-    if sf_dir not in _MAINT_MART_INDEX:
-        root = tempfile.mkdtemp(prefix="maintained_mart_")
-        wh = Warehouse(spark, root)
-        write_batch = mart_maintainer(wh, "mart", keys, measures)
-        for b in range(MART_MAINT_BATCHES):
-            write_batch(
-                e.filter(F.pmod(F.col("user_id"), F.lit(MART_MAINT_BATCHES)) == b), b
-            )
-        write_batch(
-            e.filter(F.pmod(F.col("user_id"), F.lit(MART_MAINT_BATCHES)) == 0), 0
-        )  # retry replay: idempotent partition overwrite
-        _MAINT_MART_INDEX[sf_dir] = root
-    wh = Warehouse(spark, _MAINT_MART_INDEX[sf_dir])
+    wh = grow(
+        spark, sf_dir, tag,
+        lambda wh: mart_maintainer(wh, "mart", keys, measures),
+        lambda b: e.filter(F.pmod(F.col("user_id"), F.lit(nb)) == b),
+        nb, compact_table=compact_table,
+    )
     return merged_mart(wh, "mart", keys, measures)
 
 
@@ -1823,9 +1804,6 @@ SPECS.append(
 
 MART_LIFECYCLE_BATCHES = 4
 
-# sf_dir -> temp warehouse root (q187 memoization contract).
-_MART_LIFECYCLE_INDEX: dict[str, str] = {}
-
 
 def q197_mart_compaction_lifecycle(
     spark: SparkSession, sf_dir: str
@@ -1834,47 +1812,10 @@ def q197_mart_compaction_lifecycle(
     replay: one merge aggregation over the stored partials, with a
     small-file compaction folded into the middle of the batch
     history."""
-    import tempfile
-
-    from nyc_etl_pipeline_spark.io import Warehouse
-    from nyc_etl_pipeline_spark.streaming.sinks import (
-        mart_maintainer,
-        merged_mart,
+    return _maintained_mart(
+        spark, sf_dir, "mart_lifecycle", MART_LIFECYCLE_BATCHES,
+        compact_table="mart",
     )
-
-    keys, measures = ["event_type"], ["value"]
-    e = read_testdata(spark, sf_dir, "events")
-    nb = MART_LIFECYCLE_BATCHES
-    if sf_dir not in _MART_LIFECYCLE_INDEX:
-        root = tempfile.mkdtemp(prefix="mart_lifecycle_")
-        wh = Warehouse(spark, root)
-        write_batch = mart_maintainer(wh, "mart", keys, measures)
-        for b in (0, 1):
-            write_batch(
-                e.filter(F.pmod(F.col("user_id"), F.lit(nb)) == b), b
-            )
-        # fold the small-file history mid-stream; must keep batch_id
-        # partition dirs (the replay contract's load-bearing invariant)
-        wh.compact("mart", target_file_mb=512)
-        # explicit raise, not `assert` (stripped under python -O) —
-        # this is the replay contract's load-bearing invariant
-        kept = wh.partition_columns("mart")
-        if kept != ["batch_id"]:
-            raise RuntimeError(
-                f"compact broke the mart's partition layout: {kept!r}"
-            )
-        for b in (2, 3):
-            write_batch(
-                e.filter(F.pmod(F.col("user_id"), F.lit(nb)) == b), b
-            )
-        # retry replay AFTER the compaction: idempotent rewrite, and a
-        # pre-compaction batch replayed post-compaction (batch 1) must
-        # overwrite its compacted partition rather than double-count
-        write_batch(e.filter(F.pmod(F.col("user_id"), F.lit(nb)) == 2), 2)
-        write_batch(e.filter(F.pmod(F.col("user_id"), F.lit(nb)) == 1), 1)
-        _MART_LIFECYCLE_INDEX[sf_dir] = root
-    wh = Warehouse(spark, _MART_LIFECYCLE_INDEX[sf_dir])
-    return merged_mart(wh, "mart", keys, measures)
 
 
 SPECS.append(

@@ -565,11 +565,12 @@ def q181_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     time, so the join runs with no shuffle exchange on either side
     (plan-asserted in tests/test_io_formats.py) — the write-once
     co-location contract this gate proves is RESULT-preserving."""
-    import tempfile
+    import os
 
     from nyc_etl_pipeline_spark.io import Warehouse
+    from nyc_etl_pipeline_spark.suite.maintained import scratch_root
 
-    wh = Warehouse(spark, tempfile.mkdtemp(prefix="bucketed_q181_"))
+    wh = Warehouse(spark, os.path.join(scratch_root(), "bucketed_q181"))
     wh.overwrite_bucketed(
         read_testdata(spark, sf_dir, "orders"), "q181_orders_b",
         ["o_custkey"], BUCKETS_Q181, sort_cols=["o_custkey"],

@@ -14,6 +14,7 @@ from nyc_etl_pipeline_spark.operators import text as TX
 from nyc_etl_pipeline_spark.functions import round_half_up as R
 from nyc_etl_pipeline_spark.functions import sql_md5_long, sql_round_half_up
 from nyc_etl_pipeline_spark.suite import QuerySpec
+from nyc_etl_pipeline_spark.suite.maintained import grow
 
 NGRAM_N = 3
 JACCARD_THRESHOLD = 0.5
@@ -748,12 +749,26 @@ WHERE d.doc_id >= {INCR_SPLIT}
 # at 128/32 measured 24.0 s of the sf0.1 suite run.
 MAINT_NEARDUP_HASHES, MAINT_NEARDUP_BANDS = 64, 16
 
-# sf_dir -> temp warehouse root with the maintained band index. Built
-# once per process (2 micro-batches + 1 replay — the machinery proof
-# always runs under the driver's correctness pass); the bench's
-# best-of-2 then times the SERVING join, not index re-construction
-# (VERDICT r9 item 3).
-_MAINT_BAND_INDEX: dict[str, str] = {}
+def _band_index_writer(wh):
+    from nyc_etl_pipeline_spark.streaming.sinks import band_index_maintainer
+
+    return band_index_maintainer(
+        wh, "band_index", n=NGRAM_N,
+        num_hashes=MAINT_NEARDUP_HASHES, bands=MAINT_NEARDUP_BANDS,
+    )
+
+
+def _serve_band_index(wh, batch: DataFrame, corpus: DataFrame) -> DataFrame:
+    survivors = D.incremental_neardup_dedup(
+        batch,
+        corpus_docs=corpus,
+        corpus_index=wh.read("band_index"),
+        n=NGRAM_N,
+        num_hashes=MAINT_NEARDUP_HASHES,
+        bands=MAINT_NEARDUP_BANDS,
+        threshold=JACCARD_THRESHOLD,
+    )
+    return survivors.select("doc_id", "lang", "source")
 
 
 def q176_maintained_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -766,39 +781,18 @@ def q176_maintained_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate ids. Same full-chain oracle family as q127: the
     accept/reject decision must be byte-identical whichever way the
     index was built."""
-    import tempfile
-
-    from nyc_etl_pipeline_spark.io import Warehouse
-    from nyc_etl_pipeline_spark.streaming.sinks import band_index_maintainer
-
     d = read_testdata(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") < INCR_SPLIT)
     batch = d.filter(F.col("doc_id") >= INCR_SPLIT)
-
-    if sf_dir not in _MAINT_BAND_INDEX:
-        root = tempfile.mkdtemp(prefix="maintained_band_")
-        wh = Warehouse(spark, root)
-        write_batch = band_index_maintainer(
-            wh, "band_index", n=NGRAM_N,
-            num_hashes=MAINT_NEARDUP_HASHES, bands=MAINT_NEARDUP_BANDS,
-        )
-        half = INCR_SPLIT // 2
-        write_batch(corpus.filter(F.col("doc_id") < half), 0)
-        write_batch(corpus.filter(F.col("doc_id") >= half), 1)
-        write_batch(corpus.filter(F.col("doc_id") < half), 0)  # retry replay
-        _MAINT_BAND_INDEX[sf_dir] = root
-    wh = Warehouse(spark, _MAINT_BAND_INDEX[sf_dir])
-
-    survivors = D.incremental_neardup_dedup(
-        batch,
-        corpus_docs=corpus,
-        corpus_index=wh.read("band_index"),
-        n=NGRAM_N,
-        num_hashes=MAINT_NEARDUP_HASHES,
-        bands=MAINT_NEARDUP_BANDS,
-        threshold=JACCARD_THRESHOLD,
+    half = INCR_SPLIT // 2
+    wh = grow(
+        spark, sf_dir, "maintained_band", _band_index_writer,
+        lambda b: corpus.filter(
+            F.col("doc_id") < half if b == 0 else F.col("doc_id") >= half
+        ),
+        2,
     )
-    return survivors.select("doc_id", "lang", "source")
+    return _serve_band_index(wh, batch, corpus)
 
 
 # --------------------------------------------------------------------------
@@ -817,9 +811,6 @@ def q176_maintained_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BAND_LIFECYCLE_BATCHES = 4
 
-# sf_dir -> temp warehouse root (q187/q197 memoization contract).
-_COMPACT_BAND_INDEX: dict[str, str] = {}
-
 
 def q200_band_compaction_lifecycle(
     spark: SparkSession, sf_dir: str
@@ -827,58 +818,16 @@ def q200_band_compaction_lifecycle(
     """q176's incremental near-dup decision, but with a small-file
     compaction folded into the middle of the stored band index's batch
     history: maintain -> compact -> maintain -> replay, then serve."""
-    import tempfile
-
-    from nyc_etl_pipeline_spark.io import Warehouse
-    from nyc_etl_pipeline_spark.streaming.sinks import band_index_maintainer
-
     d = read_testdata(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") < INCR_SPLIT)
     batch = d.filter(F.col("doc_id") >= INCR_SPLIT)
     nb = BAND_LIFECYCLE_BATCHES
-
-    if sf_dir not in _COMPACT_BAND_INDEX:
-        root = tempfile.mkdtemp(prefix="band_lifecycle_")
-        wh = Warehouse(spark, root)
-        write_batch = band_index_maintainer(
-            wh, "band_index", n=NGRAM_N,
-            num_hashes=MAINT_NEARDUP_HASHES, bands=MAINT_NEARDUP_BANDS,
-        )
-
-        def part(b: int) -> DataFrame:
-            return corpus.filter(F.pmod(F.col("doc_id"), F.lit(nb)) == b)
-
-        write_batch(part(0), 0)
-        write_batch(part(1), 1)
-        # fold the small-file history mid-stream; must keep batch_id
-        # partition dirs (the replay contract's load-bearing invariant
-        # — explicit raise, not `assert`: q197's contract)
-        wh.compact("band_index", target_file_mb=512)
-        kept = wh.partition_columns("band_index")
-        if kept != ["batch_id"]:
-            raise RuntimeError(
-                f"compact broke the band index's partition layout: {kept!r}"
-            )
-        write_batch(part(2), 2)
-        write_batch(part(3), 3)
-        # retry replay AFTER the compaction: a post-compaction batch
-        # (idempotent rewrite) and a pre-compaction batch (must
-        # overwrite its compacted partition, not double-count)
-        write_batch(part(2), 2)
-        write_batch(part(1), 1)
-        _COMPACT_BAND_INDEX[sf_dir] = root
-    wh = Warehouse(spark, _COMPACT_BAND_INDEX[sf_dir])
-
-    survivors = D.incremental_neardup_dedup(
-        batch,
-        corpus_docs=corpus,
-        corpus_index=wh.read("band_index"),
-        n=NGRAM_N,
-        num_hashes=MAINT_NEARDUP_HASHES,
-        bands=MAINT_NEARDUP_BANDS,
-        threshold=JACCARD_THRESHOLD,
+    wh = grow(
+        spark, sf_dir, "band_lifecycle", _band_index_writer,
+        lambda b: corpus.filter(F.pmod(F.col("doc_id"), F.lit(nb)) == b),
+        nb, compact_table="band_index",
     )
-    return survivors.select("doc_id", "lang", "source")
+    return _serve_band_index(wh, batch, corpus)
 
 
 # --------------------------------------------------------------------------

@@ -9,6 +9,7 @@ from nyc_etl_pipeline_spark.io import read_testdata
 from nyc_etl_pipeline_spark.operators import similarity as SIM
 from nyc_etl_pipeline_spark.functions import round_half_up as R
 from nyc_etl_pipeline_spark.suite import QuerySpec
+from nyc_etl_pipeline_spark.suite.maintained import grow
 
 TOPK_K = 5
 TOPK_QUERIES = 5  # vec_id < 5
@@ -626,14 +627,6 @@ FROM sel{MMR_K}
 
 MAINT_IVF_BATCHES = 3
 
-# sf_dir -> temp warehouse root holding the maintained index. The
-# maintainer machinery (3 micro-batches + 1 replay) runs on the FIRST
-# invocation in any process — the driver's correctness run always
-# executes it — while repeat invocations (the bench's best-of-2)
-# reuse the stored table, so the benched cost is the SERVING plan,
-# not re-running fixture plumbing (VERDICT r9 item 3).
-_MAINT_IVF_INDEX: dict[str, str] = {}
-
 
 def q175_maintained_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k search over the IVF index a streaming `ivf_maintainer`
@@ -642,9 +635,6 @@ def q175_maintained_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-identical to the from-scratch SQL replication — proving the
     maintained (batch_id, __cell)-partitioned table searches exactly
     like a batch-built index."""
-    import tempfile
-
-    from nyc_etl_pipeline_spark.io import Warehouse
     from nyc_etl_pipeline_spark.streaming.sinks import (
         ivf_maintainer,
         maintained_ivf_topk,
@@ -659,18 +649,12 @@ def q175_maintained_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     queries = emb.filter(F.col("vec_id") < TOPK_QUERIES)
 
-    if sf_dir not in _MAINT_IVF_INDEX:
-        root = tempfile.mkdtemp(prefix="maintained_ivf_")
-        wh = Warehouse(spark, root)
-        write_batch = ivf_maintainer(wh, "ivf_index", centers)
-        for b in range(MAINT_IVF_BATCHES):
-            write_batch(
-                emb.filter(F.pmod(F.col("vec_id"), F.lit(MAINT_IVF_BATCHES)) == b), b
-            )
-        write_batch(emb.filter(F.pmod(F.col("vec_id"), F.lit(MAINT_IVF_BATCHES)) == 0), 0)
-        _MAINT_IVF_INDEX[sf_dir] = root
-    wh = Warehouse(spark, _MAINT_IVF_INDEX[sf_dir])
-
+    wh = grow(
+        spark, sf_dir, "maintained_ivf",
+        lambda wh: ivf_maintainer(wh, "ivf_index", centers),
+        lambda b: emb.filter(F.pmod(F.col("vec_id"), F.lit(MAINT_IVF_BATCHES)) == b),
+        MAINT_IVF_BATCHES,
+    )
     return maintained_ivf_topk(
         wh, "ivf_index", centers, queries, k=TOPK_K, n_probe=IVF_N_PROBE
     )

@@ -4,21 +4,26 @@ before any session starts or query runs."""
 from __future__ import annotations
 
 import importlib
+import os
+import sys
 
 import pytest
 
 from nyc_etl_pipeline_spark import suite
 
 
-def _bench(monkeypatch):
-    # importing bench defaults SPARK_GRAFT_DRIVER_MEM; keep that out of
-    # the environment later sessions in this process read
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
-    return importlib.import_module("bench")
+def test_importing_bench_leaves_environment_unchanged(monkeypatch):
+    # the host-sized driver heap is bench.main()'s session conf, not a
+    # default exported to every later session in the importing process
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.delitem(sys.modules, "bench", raising=False)
+    before = dict(os.environ)
+    importlib.import_module("bench")
+    assert dict(os.environ) == before
 
 
-def test_bench_only_rejects_names_that_match_no_query(monkeypatch):
-    bench = _bench(monkeypatch)
+def test_bench_only_rejects_names_that_match_no_query():
+    bench = importlib.import_module("bench")
     names = [s.name for s in suite.all_specs()]
     assert bench._bench_only("", names) is None
     picked = bench._bench_only("q101_pq_clustered", names)

@@ -200,6 +200,20 @@ def test_idempotent_partition_overwrite(spark, green_raw, tmp_path):
     n2 = wh.read("trips_silver").count()
     assert n1 == n2 == 6
 
+    # on an absent table, overwrite_partitions creates what a full
+    # partitioned overwrite would: same rows, same partition dirs
+    wh.overwrite_partitions(g, "dynamic_first", ["month"])
+    wh.overwrite(g, "static_first", partition_by=["month"])
+    dyn, sta = wh.read("dynamic_first"), wh.read("static_first")
+    assert dyn.exceptAll(sta).count() == sta.exceptAll(dyn).count() == 0
+    assert dyn.count() == sta.count() == 6
+
+    def dirs(t):
+        return sorted(p.name for p in (tmp_path / t).iterdir() if p.is_dir())
+
+    assert dirs("dynamic_first") == dirs("static_first")
+    assert "month=1" in dirs("static_first")
+
 
 def test_merge_dim_keys_matches_upsert_dim(spark):
     """The Engine's driver-side dim merge and the distributed upsert_dim

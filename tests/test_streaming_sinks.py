@@ -6,7 +6,6 @@ from nyc_etl_pipeline_spark.io import Warehouse, read_testdata
 from nyc_etl_pipeline_spark.streaming.events import (
     read_event_stream,
     stream_enrich_static,
-    stream_to_warehouse,
 )
 
 
@@ -37,25 +36,6 @@ def test_stream_static_join_matches_batch(spark, sf_dir):
         .collect()
     }
     assert got == want
-
-
-def test_stream_to_warehouse_idempotent(spark, sf_dir, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    stream = read_event_stream(spark, sf_dir)
-    agg = stream.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 3).alias("total")
-    )
-    q = stream_to_warehouse(agg, wh, "event_counts", str(tmp_path / "ck1"))
-    q.awaitTermination()
-    first = {r["event_type"]: r["n"] for r in wh.read("event_counts").collect()}
-    assert len(first) == 5
-
-    # re-run over the same input with a FRESH checkpoint (simulating a
-    # replay): the overwrite sink must not duplicate rows
-    q2 = stream_to_warehouse(agg, wh, "event_counts", str(tmp_path / "ck2"))
-    q2.awaitTermination()
-    second = {r["event_type"]: r["n"] for r in wh.read("event_counts").collect()}
-    assert second == first
 
 
 def test_stream_dedup_drops_replayed_events(spark, sf_dir, tmp_path):
