@@ -33,7 +33,7 @@ table — the composition the individual operators exist for:
                              semantics, downsample-only)
   9. weighted downsample    (optional corpus-size target: A-Res
                              quality-weighted sample, q111 semantics)
- 10. leakage-safe split     (train/val/test, portable hash of the
+ 10. leakage-safe split     (train/val/test, keyed md5 of the
                              near-dup CLUSTER at a looser threshold
                              than the dedup stage — documents too
                              similar to sit on both sides of a
@@ -254,13 +254,13 @@ def curate(
 
     # 9. optional weighted downsample to a target corpus size — longer
     # (already-quality-gated) documents are proportionally likelier to
-    # survive; deterministic under retries (A-Res on the portable md5)
+    # survive; deterministic under retries (A-Res on the keyed md5)
     if target_corpus_size is not None:
         curated = sampling.weighted_sample(
             curated, ["doc_id"], "n_tokens", target_corpus_size
         )
 
-    # 10. leakage-safe deterministic split (portable: auditable outside
+    # 10. leakage-safe deterministic split (keyed md5: auditable outside
     # Spark). The boundary guard re-clusters the SURVIVORS at a looser
     # Jaccard than the dedup stage: pairs below the dedup threshold
     # rightly kept as distinct documents are still too similar to
@@ -274,7 +274,6 @@ def curate(
         curated,
         guard_clusters,
         {"train": 0.9, "val": 0.05, "test": 0.05},
-        portable=True,
     )
     return {
         name: assigned.filter(F.col("split") == name).drop("split", "cluster_rep")

@@ -107,6 +107,39 @@ def parquet_timestamp_unit(path: str, column: str) -> str | None:
     return _ts_unit_cached(f, column, os.stat(f).st_mtime_ns)
 
 
+def read_parquet_typed(
+    reader, path: str, schema: T.StructType, sample: str | None = None
+) -> DataFrame:
+    """`reader.schema(schema).parquet(path)` for a batch
+    (`spark.read`) or streaming (`spark.readStream`) reader, with
+    every timestamp column footer-sniffed (`sample`, default `path`).
+
+    TIMESTAMP(NANOS) is the one unit Spark cannot read natively — with
+    spark.sql.legacy.parquet.nanosAsLong it arrives as a ns-since-epoch
+    long, truncated to micros with integer `div` (not `/`, which would
+    round through double and lose precision above 2^53 ns) — matching
+    how DuckDB reads the same column. MICROS/MILLIS take the plain
+    typed read."""
+    from pyspark.sql import functions as F
+
+    nanos_cols = [
+        f.name
+        for f in schema.fields
+        if isinstance(f.dataType, T.TimestampType)
+        and parquet_timestamp_unit(sample or path, f.name) == "nanos"
+    ]
+    phys = T.StructType(
+        [
+            T.StructField(f.name, T.LongType() if f.name in nanos_cols else f.dataType)
+            for f in schema.fields
+        ]
+    )
+    df = reader.schema(phys).parquet(path)
+    for c in nanos_cols:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
+    return df
+
+
 def read_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver testdata table with its declared schema.
 
@@ -114,44 +147,17 @@ def read_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     across thousands of files at scale and (b) fails fast on drift.
     Column pruning/pushdown still reach the parquet scan.
 
-    Timestamp columns are footer-sniffed per regeneration:
-    TIMESTAMP(NANOS) is the one unit Spark cannot read natively — with
-    spark.sql.legacy.parquet.nanosAsLong it arrives as a ns-since-epoch
-    long, truncated to micros with integer `div` (not `/`, which would
-    round through double and lose precision above 2^53 ns) — matching
-    how DuckDB reads the same column. MICROS/MILLIS take the plain
-    typed read. The events fixture has already drifted NANOS→MICROS
-    between rounds; this handles ANY of the tables' timestamp columns
-    drifting either way.
+    Timestamp columns are footer-sniffed per regeneration
+    (`read_parquet_typed`): the events fixture has already drifted
+    NANOS→MICROS between rounds; this handles ANY of the tables'
+    timestamp columns drifting either way.
     """
     ensure_session_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     schema = schemas.TESTDATA.get(name)
-    if schema is not None:
-        ts_cols = [f.name for f in schema.fields if isinstance(f.dataType, T.TimestampType)]
-        nanos_cols = {
-            c for c in ts_cols if parquet_timestamp_unit(path, c) == "nanos"
-        }
-        if nanos_cols:
-            from pyspark.sql import functions as F
-
-            phys = T.StructType(
-                [
-                    T.StructField(
-                        f.name,
-                        T.LongType() if f.name in nanos_cols else f.dataType,
-                    )
-                    for f in schema.fields
-                ]
-            )
-            df = spark.read.schema(phys).parquet(path)
-            for c in nanos_cols:
-                df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
-            return df.select(*[f.name for f in schema.fields])
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+    if schema is None:
+        return spark.read.parquet(path)
+    return read_parquet_typed(spark.read, path, schema)
 
 
 def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:

@@ -184,8 +184,8 @@ def dsir_importance(
                 F.concat(F.col("toks"), ngrams_from_tokens(F.col("toks"), 2))
             ).alias("feat"),
         )
-        # portable=True: md5-derived bucket, replicable in any engine
-        # (the oracle path). portable=False: xxhash64, Spark-only but
+        # portable: md5-derived bucket, replicable in any engine (the
+        # oracle path). Not portable: xxhash64, Spark-only but
         # ~1.6x end-to-end measured at 1M docs (73.6 -> 45.8 s) — the knob for a production 100 TB
         # run where no cross-engine replay is needed.
         h = (

@@ -7,9 +7,9 @@ inherently sequential (each bin boundary depends on where the previous
 bin started), so it cannot be one window cumsum — the scale design is
 **shard-parallel, sequential-within-shard**:
 
-- each doc hashes to one of `n_shards` shards (portable md5, same
-  convention as `sampling._bucket(portable=True)` so the assignment is
-  reproducible outside Spark);
+- each doc hashes to one of `n_shards` shards: pmod of the keyed md5
+  every sampling decision uses (`sampling._keyed_hash`), so the
+  assignment is reproducible outside Spark;
 - within a shard, docs are packed greedily in deterministic `id_col`
   order by an Arrow-batched `applyInPandas` — only `(id, n_tokens,
   shard)` is shipped, never the text payload (~16 bytes/doc: a
@@ -33,28 +33,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from nyc_etl_pipeline_spark.functions import md5_long
+from nyc_etl_pipeline_spark.operators.sampling import _keyed_hash
 
 PACK_SCHEMA = (
     "doc_id bigint, shard int, n_tokens bigint, "
     "seq_id bigint, seq_offset bigint, oversized boolean"
 )
-
-
-def portable_shard(id_col: Column, n_shards: int, salt: str) -> Column:
-    """Portable md5 shard in [0, n_shards) — replicable in any engine:
-    first 60 bits of md5(salt \\x1f id) mod n_shards (mirrors
-    sampling.sql_bucket)."""
-    joined = F.concat_ws("\x1f", F.lit(salt), id_col.cast("string"))
-    return F.pmod(md5_long(joined), F.lit(n_shards)).cast("int")
-
-
-def sql_shard(id_expr: str, n_shards: int, salt: str) -> str:
-    """DuckDB fragment computing the identical shard."""
-    return (
-        f"CAST(CAST('0x' || substr(md5(concat_ws(chr(31), '{salt}', "
-        f"CAST({id_expr} AS VARCHAR))), 1, 15) AS BIGINT) % {n_shards} AS INTEGER)"
-    )
 
 
 def pack_greedy(
@@ -81,7 +65,7 @@ def pack_greedy(
 
     base = df.select(
         F.col(id_col).cast("long").alias("doc_id"),
-        portable_shard(F.col(id_col), n_shards, salt).alias("shard"),
+        F.pmod(_keyed_hash([id_col], salt), F.lit(n_shards)).cast("int").alias("shard"),
         tokens_col.cast("long").alias("n_tokens"),
     )
 

@@ -14,20 +14,13 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 
-def profile(df: DataFrame, approx_distinct: bool = False) -> DataFrame:
-    """-> (column, n_rows, n_nulls, n_distinct) per column.
-
-    approx_distinct=True swaps exact countDistinct for HLL
-    (approx_count_distinct) — the right call at scale where a 2%
-    estimate is worth avoiding a per-column shuffle.
-    """
+def profile(df: DataFrame) -> DataFrame:
+    """-> (column, n_rows, n_nulls, n_distinct) per column, with exact
+    distinct counts."""
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in df.columns:
         aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"__nulls_{c}"))
-        if approx_distinct:
-            aggs.append(F.approx_count_distinct(c).alias(f"__dist_{c}"))
-        else:
-            aggs.append(F.countDistinct(c).alias(f"__dist_{c}"))
+        aggs.append(F.countDistinct(c).alias(f"__dist_{c}"))
     wide = df.agg(*aggs)
     stacked = wide.select(
         F.explode(

@@ -7,7 +7,9 @@ pipelines.
   on speculative retries);
 - consistent across tables: sampling orders and lineitem by the same
   order key keeps referential integrity in the sample;
-- no coordination: pure per-row projection, no shuffle.
+- no coordination: pure per-row projection, no shuffle;
+- reproducible outside Spark: every decision derives from one keyed
+  md5 (`_keyed_hash`), which `sql_keyed_hash` renders for DuckDB.
 """
 
 from __future__ import annotations
@@ -15,31 +17,36 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from nyc_etl_pipeline_spark.functions import md5_long
+from nyc_etl_pipeline_spark.functions import md5_long, sql_md5_long
 
 _BUCKETS = 1_000_000
 
 
-def _bucket(key_cols: list[str], salt: str, portable: bool = False) -> Column:
-    """Stable bucket in [0, 1M). Default is xxhash64 (fastest JVM
-    path). `portable=True` hashes md5 over salt + stringified keys
-    joined with unit separator \\x1f — bit-identical in any engine
-    with md5 (see `sql_bucket`), at ~2-3x the hash cost; use it when
-    split assignment must be reproducible OUTSIDE Spark (audits,
-    cross-engine pipelines)."""
-    if portable:
-        joined = F.concat_ws("\x1f", F.lit(salt), *[F.col(c).cast("string") for c in key_cols])
-        return F.pmod(md5_long(joined), F.lit(_BUCKETS))
-    return F.pmod(F.xxhash64(F.lit(salt), *[F.col(c) for c in key_cols]), F.lit(_BUCKETS))
+def _keyed_hash(key_cols: list[str], salt: str) -> Column:
+    """The one sampling hash: md5_long over salt and the stringified
+    keys joined with the unit separator \x1f. Every keep, split, shard
+    and priority decision in this module and in `packing` derives from
+    it, and `sql_keyed_hash` is its bit-identical DuckDB twin, so each
+    decision is reproducible outside Spark (oracles, audits)."""
+    joined = F.concat_ws("\x1f", F.lit(salt), *[F.col(c).cast("string") for c in key_cols])
+    return md5_long(joined)
+
+
+def sql_keyed_hash(key_exprs: list[str], salt: str) -> str:
+    """DuckDB fragment computing the identical `_keyed_hash`."""
+    joined = ", ".join(f"CAST({e} AS VARCHAR)" for e in key_exprs)
+    return sql_md5_long(f"concat_ws(chr(31), '{salt}', {joined})")
+
+
+def _bucket(key_cols: list[str], salt: str) -> Column:
+    """Stable bucket in [0, 1M) of the keyed hash (see `sql_bucket`)."""
+    return F.pmod(_keyed_hash(key_cols, salt), F.lit(_BUCKETS))
 
 
 def sql_bucket(key_exprs: list[str], salt: str) -> str:
-    """DuckDB fragment computing the identical portable bucket."""
-    joined = ", ".join(f"CAST({e} AS VARCHAR)" for e in key_exprs)
-    return (
-        f"CAST('0x' || substr(md5(concat_ws(chr(31), '{salt}', {joined})), 1, 15) AS BIGINT) "
-        f"% {_BUCKETS}"
-    )
+    """DuckDB fragment computing the identical bucket (the hash is
+    non-negative, so `%` equals Spark's pmod)."""
+    return f"{sql_keyed_hash(key_exprs, salt)} % {_BUCKETS}"
 
 
 def sample(
@@ -47,13 +54,12 @@ def sample(
     key_cols: list[str],
     fraction: float,
     salt: str = "v1",
-    portable: bool = False,
 ) -> DataFrame:
     """Deterministic ~fraction sample keyed on key_cols. Same key ->
     same in/out decision, always."""
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0,1], got {fraction}")
-    return df.filter(_bucket(key_cols, salt, portable) < int(fraction * _BUCKETS))
+    return df.filter(_bucket(key_cols, salt) < int(fraction * _BUCKETS))
 
 
 def _split_bounds(weights: dict[str, float]) -> list[tuple[str, int, int]]:
@@ -82,13 +88,12 @@ def split(
     key_cols: list[str],
     weights: dict[str, float],
     salt: str = "v1",
-    portable: bool = False,
 ) -> dict[str, DataFrame]:
     """Disjoint, exhaustive named splits (e.g. train/val/test).
     Weights must sum to 1. Each key lands in exactly one split,
     deterministically — adding rows later never moves existing keys
     between splits (stable assignment under dataset growth)."""
-    bucket = _bucket(key_cols, salt, portable)
+    bucket = _bucket(key_cols, salt)
     return {
         name: df.filter((bucket >= lo_b) & (bucket < hi_b))
         for name, lo_b, hi_b in _split_bounds(weights)
@@ -100,14 +105,13 @@ def assign_split(
     key_cols: list[str],
     weights: dict[str, float],
     salt: str = "v1",
-    portable: bool = False,
     out_col: str = "split",
 ) -> DataFrame:
     """Split ASSIGNMENT as a column (one pass over the data) instead of
     `split`'s per-split filtered frames — the shape joins and audits
     need. Identical bucket + bounds as `split`, so the two agree row
     for row. Pure projection: no shuffle, linear at any scale."""
-    bucket = _bucket(key_cols, salt, portable)
+    bucket = _bucket(key_cols, salt)
     expr = None
     for name, lo_b, hi_b in _split_bounds(weights):
         cond = (bucket >= lo_b) & (bucket < hi_b)
@@ -133,7 +137,6 @@ def leakage_safe_assign(
     id_col: str = "doc_id",
     rep_col: str = "cluster_rep",
     salt: str = "v1",
-    portable: bool = False,
     out_col: str = "split",
 ) -> DataFrame:
     """Cluster-aware train/val/test assignment: hash the near-dup
@@ -158,7 +161,7 @@ def leakage_safe_assign(
     joined = df.join(
         clusters.select(id_col, rep_col), on=id_col, how="left"
     ).withColumn(rep_col, rep)
-    return assign_split(joined, [rep_col], weights, salt, portable, out_col)
+    return assign_split(joined, [rep_col], weights, salt, out_col)
 
 
 def split_leakage_audit(
@@ -200,7 +203,6 @@ def stratified_sample(
     key_cols: list[str],
     default_fraction: float = 1.0,
     salt: str = "v1",
-    portable: bool = False,
 ) -> DataFrame:
     """Deterministic per-stratum sampling — the corpus-rebalancing
     step (downsample overrepresented languages/sources). The keep
@@ -216,7 +218,7 @@ def stratified_sample(
             raise ValueError(f"fraction for {name!r} must be in [0,1], got {frac}")
     if not 0.0 <= default_fraction <= 1.0:
         raise ValueError(f"default_fraction must be in [0,1], got {default_fraction}")
-    bucket = _bucket(key_cols, salt, portable)
+    bucket = _bucket(key_cols, salt)
     threshold = F.lit(int(default_fraction * _BUCKETS))
     for name, frac in sorted(fractions.items()):
         threshold = F.when(
@@ -230,7 +232,6 @@ def shard_shuffle(
     key_cols: list[str],
     n_shards: int,
     salt: str = "v1",
-    portable: bool = False,
 ) -> DataFrame:
     """Deterministic global shuffle for training-example ordering:
     adds `shard` (hash bucket in [0, n_shards)) and `pos` (dense 1-based
@@ -249,7 +250,7 @@ def shard_shuffle(
 
     if n_shards <= 0:
         raise ValueError(f"n_shards must be positive, got {n_shards}")
-    b = _bucket(key_cols, salt, portable)
+    b = _bucket(key_cols, salt)
     w = W.partitionBy("shard").orderBy("__bkt", *key_cols)
     return (
         df.withColumn("__bkt", b)
@@ -280,7 +281,7 @@ def per_key_topn_sample(
     """Deterministic N rows per key — the per-domain/per-source
     rebalancing cut ("keep at most N docs from every domain").
 
-    Priority = portable md5 over (salt, id_cols): uniform,
+    Priority = the keyed md5 over (salt, id_cols): uniform,
     reproducible in any engine, and independent of the key, so a row
     keeps the same priority if keys are relabeled. Keep the n lowest
     priorities per key (id tie-break for exactness).
@@ -295,8 +296,7 @@ def per_key_topn_sample(
         raise ValueError(f"n must be positive, got {n}")
     from pyspark.sql import Window as W
 
-    joined = F.concat_ws("\x1f", F.lit(salt), *[F.col(c).cast("string") for c in id_cols])
-    pr = md5_long(joined)
+    pr = _keyed_hash(id_cols, salt)
     w = W.partitionBy(*key_cols).orderBy(F.col("__pr").asc(), *[F.col(c).asc() for c in id_cols])
     return (
         df.withColumn("__pr", pr)
@@ -317,7 +317,7 @@ def weighted_sample(
     inclusion probability proportional to weight (Efraimidis-Spirakis
     A-Res: key = u^(1/w) with u uniform, keep the n largest keys).
 
-    u derives from the portable md5 bucket over (salt, id_cols):
+    u derives from the keyed md5 bucket over (salt, id_cols):
     reproducible across engines, runs, and task retries — a
     rand()-based weighted sample silently changes membership under
     speculative re-execution. Rows with non-positive weight are
@@ -332,8 +332,7 @@ def weighted_sample(
     """
     if n <= 0:
         raise ValueError(f"n must be positive, got {n}")
-    joined = F.concat_ws("\x1f", F.lit(salt), *[F.col(c).cast("string") for c in id_cols])
-    u = (F.pmod(md5_long(joined), F.lit(_BUCKETS)).cast("double") + 0.5) / _BUCKETS
+    u = (_bucket(id_cols, salt).cast("double") + 0.5) / _BUCKETS
     key = F.pow(u, F.lit(1.0) / F.col(weight_col).cast("double"))
     return (
         df.filter(F.col(weight_col) > 0)
@@ -392,14 +391,12 @@ def _threshold_filter(
     source_col: str,
     key_cols: list[str],
     salt: str,
-    portable: bool,
 ) -> DataFrame:
     """Broadcast the per-source thresholds back and keep rows whose
     stable bucket falls under their source's cutoff. Pure
     projection+filter after a broadcast join: no shuffle of the
-    corpus, retry-stable, reproducible outside Spark with
-    portable=True."""
-    bucket = _bucket(key_cols, salt, portable)
+    corpus, retry-stable, reproducible outside Spark."""
+    bucket = _bucket(key_cols, salt)
     return (
         df.join(F.broadcast(thr.select(source_col, "threshold")), on=source_col)
         .filter(bucket < F.col("threshold"))
@@ -421,7 +418,7 @@ def mixture_fractions(
     decision, not a sampling one, and duplicating rows here would
     silently break dedup invariants downstream).
 
-    Output: (source, n_src, threshold) where threshold is the portable
+    Output: (source, n_src, threshold) where threshold is the keyed
     md5-bucket cutoff in [0, 1M]. One tiny aggregate over the corpus;
     the expression order of the float math is fixed so any engine
     reproduces the exact integer threshold (see suite/training.py
@@ -437,13 +434,12 @@ def mixture_sample(
     total_out: int,
     key_cols: list[str],
     salt: str = "v1",
-    portable: bool = False,
 ) -> DataFrame:
     """Deterministic mixture-weighted downsample: join each row to its
     source's threshold (broadcast — thresholds are one row per source)
     and keep rows whose stable bucket falls under it."""
     thr = mixture_fractions(df, source_col, weights, total_out)
-    return _threshold_filter(df, thr, source_col, key_cols, salt, portable)
+    return _threshold_filter(df, thr, source_col, key_cols, salt)
 
 
 def token_budget_fractions(
@@ -481,12 +477,11 @@ def token_budget_sample(
     total_tokens: int,
     key_cols: list[str],
     salt: str = "v1",
-    portable: bool = False,
 ) -> DataFrame:
     """Deterministic token-budget downsample (same broadcast-threshold
     + stable-bucket filter shape as mixture_sample)."""
     thr = token_budget_fractions(df, source_col, token_count_col, weights, total_tokens)
-    return _threshold_filter(df, thr, source_col, key_cols, salt, portable)
+    return _threshold_filter(df, thr, source_col, key_cols, salt)
 
 
 def largest_remainder_plan(

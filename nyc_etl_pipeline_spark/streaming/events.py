@@ -16,34 +16,6 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-# Physical schema of a TIMESTAMP(NANOS) events parquet (ts surfaced as
-# a ns long via spark.sql.legacy.parquet.nanosAsLong). Only used when
-# the footer sniff says the file really is NANOS; MICROS/MILLIS files
-# are read with the typed schema directly.
-_EVENTS_PHYS = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-_EVENTS_TYPED = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
 
 def open_event_stream(
     spark: SparkSession, directory: str, glob: str = "*.parquet", sample: str | None = None
@@ -56,21 +28,15 @@ def open_event_stream(
     `sample` optionally names one file/dir to sniff; defaults to
     `directory` itself.
     """
-    from nyc_etl_pipeline_spark.io import ensure_session_confs, parquet_timestamp_unit
+    from nyc_etl_pipeline_spark import schemas
+    from nyc_etl_pipeline_spark.io import ensure_session_confs, read_parquet_typed
 
     ensure_session_confs(spark)
-    unit = parquet_timestamp_unit(sample or directory, "ts")
-    if unit == "nanos":
-        return (
-            spark.readStream.schema(_EVENTS_PHYS)
-            .option("pathGlobFilter", glob)
-            .parquet(directory)
-            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        )
-    return (
-        spark.readStream.schema(_EVENTS_TYPED)
-        .option("pathGlobFilter", glob)
-        .parquet(directory)
+    return read_parquet_typed(
+        spark.readStream.option("pathGlobFilter", glob),
+        directory,
+        schemas.TESTDATA["events"],
+        sample=sample,
     )
 
 
@@ -230,8 +196,7 @@ def stream_stream_join_outer(
 
 
 def run_available_now(
-    agg: DataFrame, query_name: str, checkpoint_dir: str | None = None,
-    output_mode: str = "complete",
+    agg: DataFrame, query_name: str, output_mode: str = "complete"
 ) -> DataFrame:
     """Execute a streaming aggregation over all currently-available
     input (Trigger.AvailableNow), collect results via the memory sink,
@@ -239,19 +204,21 @@ def run_available_now(
     the batch forms; 'append' would withhold windows newer than the
     watermark at end-of-input. Stream-stream joins require 'append'
     (inner-join matches emit immediately; the watermark only governs
-    state eviction, so availableNow still yields every match)."""
-    spark = agg.sparkSession
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="spark_ckpt_")
-    q = (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    state eviction, so availableNow still yields every match).
+
+    A memory sink cannot resume from a checkpoint, so the checkpoint
+    lives in a temporary directory removed once the query ends."""
+    with tempfile.TemporaryDirectory(prefix="spark_ckpt_") as ckpt:
+        q = (
+            agg.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(query_name)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return agg.sparkSession.table(query_name)
 
 
 # --------------------------------------------------------------------------

@@ -160,7 +160,6 @@ def stream_to_warehouse(
     warehouse,
     table: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Exactly-once streaming append into a Warehouse parquet table
     via Spark's FILE sink — the streaming half of the lakehouse write
@@ -171,18 +170,17 @@ def stream_to_warehouse(
     from the same checkpoint resumes exactly where it stopped.
 
     Returns the started StreamingQuery; caller awaits termination.
-    available_now=True drains everything currently available then
+    The availableNow trigger drains everything currently available then
     stops — the incremental-batch trigger a scheduled ingest job uses.
     """
-    writer = (
+    return (
         df.writeStream.format("parquet")
         .option("path", warehouse.path(table))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _batch_partition_writer(

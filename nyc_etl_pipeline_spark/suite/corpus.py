@@ -284,12 +284,12 @@ def q81_per_key_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "source", "lang", "n_chars", "sample_rank")
 
 
-from nyc_etl_pipeline_spark.functions import sql_md5_long as _sql_md5_long  # noqa: E402
+from nyc_etl_pipeline_spark.operators.sampling import sql_keyed_hash  # noqa: E402
 
 _Q81_SQL = f"""
 WITH pr AS (
   SELECT doc_id, source, lang, n_chars,
-         {_sql_md5_long("concat_ws(chr(31), '" + SAMPLE_SALT + "', CAST(doc_id AS VARCHAR))")} AS p
+         {sql_keyed_hash(["doc_id"], SAMPLE_SALT)} AS p
   FROM documents
 ),
 ranked AS (

@@ -40,10 +40,10 @@ CONTAM_THRESHOLD = 0.5
 
 def q50_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-keyed split assignment over documents: stable under
-    retries, dataset growth, and engine changes (portable md5 bucket).
+    retries, dataset growth, and engine changes (keyed md5 bucket).
     Output is per-split membership stats — count + id checksum."""
     docs = read_testdata(spark, sf_dir, "documents")
-    parts = sampling.split(docs, ["doc_id"], SPLIT_WEIGHTS, salt=SPLIT_SALT, portable=True)
+    parts = sampling.split(docs, ["doc_id"], SPLIT_WEIGHTS, salt=SPLIT_SALT)
     tagged = None
     for name, part in parts.items():
         t = part.select(F.lit(name).alias("split"), "doc_id")
@@ -449,7 +449,7 @@ def _q65_sql() -> str:
     # The greedy recurrence is sequential within a shard; the oracle
     # replays it with a recursive CTE that advances every shard one
     # row per iteration.
-    shard = packing.sql_shard("doc_id", PACK_SHARDS, PACK_SALT)
+    shard = f"CAST({sampling.sql_keyed_hash(['doc_id'], PACK_SALT)} % {PACK_SHARDS} AS INTEGER)"
     return f"""
 WITH RECURSIVE ordered AS (
   SELECT doc_id,
@@ -498,7 +498,6 @@ def q66_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_cols=["doc_id"],
         default_fraction=REBALANCE_DEFAULT,
         salt=REBALANCE_SALT,
-        portable=True,
     )
     return kept.select("doc_id", "lang", "source")
 
@@ -587,7 +586,7 @@ def q68_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange is the hash partition on shard; ordering is per-shard)."""
     docs = read_testdata(spark, sf_dir, "documents")
     out = sampling.shard_shuffle(
-        docs, ["doc_id"], SHUFFLE_SHARDS, salt=SHUFFLE_SALT, portable=True
+        docs, ["doc_id"], SHUFFLE_SHARDS, salt=SHUFFLE_SALT
     )
     return out.select("doc_id", "shard", "pos")
 
@@ -825,13 +824,13 @@ def q126_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source membership report of a mixture-weighted downsample:
     sources get examples proportional to their target weights (src0
     oversampled 4x vs src2), unlisted sources drop entirely, and no
-    source is ever upsampled. The keep decision is the portable md5
+    source is ever upsampled. The keep decision is the keyed md5
     bucket, so the oracle replicates the exact kept set — counts AND
     id checksum are gated."""
     docs = read_testdata(spark, sf_dir, "documents")
     kept = sampling.mixture_sample(
         docs, "source", MIX_WEIGHTS, MIX_TOTAL, ["doc_id"],
-        salt=MIX_SALT, portable=True,
+        salt=MIX_SALT,
     )
     return kept.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_kept"), F.sum("doc_id").alias("id_sum")
@@ -891,7 +890,7 @@ def q138_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/sampling.token_budget_sample): each source's keep
     fraction is its token budget (total * w / wsum) over its current
     token count, so the kept corpus realizes the target token mix in
-    expectation while the kept SET is exactly deterministic (portable
+    expectation while the kept SET is exactly deterministic (keyed
     md5 keep decision — counts, kept tokens, and id checksum all
     value-hash gated)."""
     docs = read_testdata(spark, sf_dir, "documents").withColumn(
@@ -899,7 +898,7 @@ def q138_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     kept = sampling.token_budget_sample(
         docs, "source", "n_tokens", TB_WEIGHTS, TB_TOTAL_TOKENS, ["doc_id"],
-        salt=TB_SALT, portable=True,
+        salt=TB_SALT,
     )
     return kept.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_kept"),
@@ -1082,7 +1081,7 @@ LS_SALT = "leak-r8"
 def q167_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-aware split membership report: connected components
     over the exact n-gram-Jaccard pair graph (q18/q41), then the
-    portable md5 bucket of the CLUSTER REPRESENTATIVE decides the
+    keyed md5 bucket of the CLUSTER REPRESENTATIVE decides the
     split for every member. Gated on per-split doc count, distinct
     cluster count, and id checksum."""
     docs = read_testdata(spark, sf_dir, "documents")
@@ -1090,7 +1089,7 @@ def q167_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters = D.neardup_clusters(docs, pairs)
     assigned = sampling.leakage_safe_assign(
         docs.select("doc_id"), clusters, SPLIT_WEIGHTS,
-        salt=LS_SALT, portable=True,
+        salt=LS_SALT,
     )
     return assigned.groupBy("split").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1136,11 +1135,11 @@ def q168_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         n=NGRAM_N, threshold=JACCARD_THRESHOLD,
     ).transform(scratch_checkpoint)  # feeds both CC and the audit joins: materialize once
     naive = sampling.assign_split(
-        docs, ["doc_id"], SPLIT_WEIGHTS, salt=SPLIT_SALT, portable=True
+        docs, ["doc_id"], SPLIT_WEIGHTS, salt=SPLIT_SALT
     )
     clusters = D.neardup_clusters(docs, pairs, id_col="doc_id")
     safe = sampling.leakage_safe_assign(
-        docs, clusters, SPLIT_WEIGHTS, salt=LS_SALT, portable=True
+        docs, clusters, SPLIT_WEIGHTS, salt=LS_SALT
     )
 
     def side(assigned: DataFrame, id_alias: str, out: str) -> DataFrame:

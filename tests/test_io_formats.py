@@ -162,6 +162,24 @@ def test_read_testdata_handles_nanos_regeneration(spark, sf_dir, tmp_path):
     )
     assert canon(back) == canon(orig)
 
+    # the streaming events read shares the derivation: drained over a
+    # NANOS copy it equals the batch read of the same copy
+    from nyc_etl_pipeline_spark.io import parquet_timestamp_unit
+    from nyc_etl_pipeline_spark.streaming import run_available_now
+    from nyc_etl_pipeline_spark.streaming.events import read_event_stream
+
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    j = ev.schema.get_field_index("ts")
+    ev_ns = ev.set_column(j, pa.field("ts", pa.timestamp("ns")), ev.column(j).cast(pa.timestamp("ns")))
+    pq.write_table(ev_ns, str(tmp_path / "events.parquet"), store_schema=False)
+    assert parquet_timestamp_unit(str(tmp_path / "events.parquet"), "ts") == "nanos"
+    streamed = run_available_now(
+        read_event_stream(spark, str(tmp_path)), "t_nanos_events", output_mode="append"
+    )
+    batch = read_testdata(spark, str(tmp_path), "events")
+    assert dict(streamed.dtypes)["ts"] == "timestamp"
+    assert canon(streamed) == canon(batch) == canon(read_testdata(spark, sf_dir, "events"))
+
 
 def test_footer_sniff_partitioned_layout(spark, sf_dir, tmp_path):
     """parquet_timestamp_unit must find a footer inside a

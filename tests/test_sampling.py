@@ -136,7 +136,7 @@ def test_token_budget_sample_contracts(spark, sf_dir):
     weights = {"src0": 1.0, "src1": 1.0}
     total = 5000
     kept = S.token_budget_sample(
-        docs, "source", "n_tokens", weights, total, ["doc_id"], portable=True
+        docs, "source", "n_tokens", weights, total, ["doc_id"]
     )
     by_src = {
         r["source"]: (r["n"], r["tok"])
@@ -162,12 +162,12 @@ def test_token_budget_sample_contracts(spark, sf_dir):
             )
     # overwhelming weight -> under budget -> keeps everything
     all_kept = S.token_budget_sample(
-        docs, "source", "n_tokens", {"src0": 1.0}, 10**9, ["doc_id"], portable=True
+        docs, "source", "n_tokens", {"src0": 1.0}, 10**9, ["doc_id"]
     )
     assert all_kept.count() == docs.filter(F.col("source") == "src0").count()
     # determinism
     again = S.token_budget_sample(
-        docs, "source", "n_tokens", weights, total, ["doc_id"], portable=True
+        docs, "source", "n_tokens", weights, total, ["doc_id"]
     )
     assert sorted(r["doc_id"] for r in kept.select("doc_id").collect()) == sorted(
         r["doc_id"] for r in again.select("doc_id").collect()
@@ -184,7 +184,6 @@ def test_token_budget_zero_token_source_keeps_all(spark):
     )
     kept = S.token_budget_sample(
         df, "source", "n_tokens", {"s0": 1.0, "s1": 1.0}, 5, ["doc_id"],
-        portable=True,
     )
     rows = {(r["doc_id"], r["source"]) for r in kept.collect()}
     assert {(1, "s0"), (2, "s0")} <= rows  # zero-token source fully kept
@@ -233,7 +232,7 @@ def test_leakage_safe_assign_keeps_clusters_together(spark):
             .collect()
         )
         assert all(r["n_splits"] == 1 for r in per_cluster), salt
-        # exhaustive and portable-free default both produce no NULLs
+        # exhaustive: no doc is left without a split
         assert assigned.filter(F.col("split").isNull()).count() == 0
         assert S.split_leakage_audit(pairs, assigned).count() == 0
 
@@ -272,12 +271,12 @@ def test_naive_split_leaks_on_real_corpus_and_safe_does_not(spark, sf_dir):
     ).localCheckpoint()
     naive = S.assign_split(
         docs.select("doc_id"), ["doc_id"], SPLIT_WEIGHTS,
-        salt=SPLIT_SALT, portable=True,
+        salt=SPLIT_SALT,
     )
     clusters = D.neardup_clusters(docs, pairs)
     safe = S.leakage_safe_assign(
         docs.select("doc_id"), clusters, SPLIT_WEIGHTS,
-        salt=LS_SALT, portable=True,
+        salt=LS_SALT,
     )
     assert S.split_leakage_audit(pairs, naive).count() > 0
     assert S.split_leakage_audit(pairs, safe).count() == 0

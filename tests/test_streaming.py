@@ -31,6 +31,18 @@ def test_stream_tumbling_matches_batch(spark, sf_dir):
     assert got == want
 
 
+def test_run_available_now_removes_its_checkpoint(spark, sf_dir, tmp_path, monkeypatch):
+    """The memory-sink drain checkpoints into a temporary directory
+    and removes it once the query ends, so no spark_ckpt_* directory
+    outlives the call."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = run_available_now(stream_tumbling_counts(read_event_stream(spark, sf_dir)), "t_ckpt")
+    assert out.count() > 0
+    assert list(tmp_path.glob("spark_ckpt_*")) == []
+
+
 def test_stream_sessionize_matches_batch(spark, sf_dir):
     stream = read_event_stream(spark, sf_dir)
     out = run_available_now(stream_session_windows(stream), "t_sessions")

@@ -18,7 +18,7 @@ from nyc_etl_pipeline_spark.suite.textops import NGRAM_N
 def test_portable_split_disjoint_exhaustive_stable(spark, sf_dir):
     docs = read_testdata(spark, sf_dir, "documents")
     parts = sampling.split(
-        docs, ["doc_id"], {"train": 0.8, "val": 0.1, "test": 0.1}, portable=True
+        docs, ["doc_id"], {"train": 0.8, "val": 0.1, "test": 0.1}
     )
     n_total = docs.count()
     ids = {name: {r["doc_id"] for r in p.select("doc_id").collect()} for name, p in parts.items()}
@@ -26,22 +26,50 @@ def test_portable_split_disjoint_exhaustive_stable(spark, sf_dir):
     assert not (ids["train"] & ids["val"]) and not (ids["train"] & ids["test"])
     # stable: recomputing yields the identical assignment
     again = sampling.split(
-        docs, ["doc_id"], {"train": 0.8, "val": 0.1, "test": 0.1}, portable=True
+        docs, ["doc_id"], {"train": 0.8, "val": 0.1, "test": 0.1}
     )
     assert {r["doc_id"] for r in again["val"].select("doc_id").collect()} == ids["val"]
-    # and portable=True matches plain-Python md5 arithmetic
+    # and the bucket matches plain-Python md5 arithmetic
     from nyc_etl_pipeline_spark.functions import py_md5_long
 
     some_id = next(iter(ids["train"]))
     assert py_md5_long(f"v1\x1f{some_id}") % 1_000_000 < 800_000
 
 
-def test_portable_and_fast_buckets_both_uniform(spark, sf_dir):
+def test_sampling_defaults_hash_keyed_md5(spark, sf_dir):
+    """sample, split, shard_shuffle and pack_greedy's shard all derive
+    from one keyed hash at their defaults: md5_long(salt \x1f key),
+    replicated here in plain Python. The bucket is that hash mod 1M;
+    a sampling shard is the bucket mod n, a packing shard the hash
+    mod n."""
+    from nyc_etl_pipeline_spark.functions import py_md5_long
+    from nyc_etl_pipeline_spark.operators import packing
+
     docs = read_testdata(spark, sf_dir, "documents")
-    for portable in (False, True):
-        s = sampling.sample(docs, ["doc_id"], 0.5, portable=portable)
-        frac = s.count() / docs.count()
-        assert 0.35 < frac < 0.65, f"portable={portable} fraction {frac}"
+    ids = [r["doc_id"] for r in docs.select("doc_id").collect()]
+    bucket = {i: py_md5_long(f"v1\x1f{i}") % 1_000_000 for i in ids}
+
+    kept = {r["doc_id"] for r in sampling.sample(docs, ["doc_id"], 0.5).collect()}
+    assert kept == {i for i in ids if bucket[i] < 500_000}
+    assert 0.35 < len(kept) / len(ids) < 0.65  # uniform enough to sample by
+
+    parts = sampling.split(docs, ["doc_id"], {"train": 0.8, "val": 0.1, "test": 0.1})
+    bounds = {"train": (0, 800_000), "val": (800_000, 900_000), "test": (900_000, 1_000_000)}
+    for name, (lo, hi) in bounds.items():
+        got = {r["doc_id"] for r in parts[name].select("doc_id").collect()}
+        assert got == {i for i in ids if lo <= bucket[i] < hi}, name
+
+    shuffled = sampling.shard_shuffle(docs.select("doc_id"), ["doc_id"], 16)
+    assert {r["doc_id"]: r["shard"] for r in shuffled.collect()} == {
+        i: bucket[i] % 16 for i in ids
+    }
+
+    packed = packing.pack_greedy(
+        docs, "doc_id", TX.whitespace_token_count(F.col("text")), budget=96, n_shards=16
+    )
+    assert {r["doc_id"]: r["shard"] for r in packed.select("doc_id", "shard").collect()} == {
+        i: py_md5_long(f"pack-v1\x1f{i}") % 16 for i in ids
+    }
 
 
 # ---- contamination -------------------------------------------------------
@@ -491,7 +519,7 @@ def test_stratified_sample_per_stratum_rates_and_stability(spark, sf_dir):
     docs = read_testdata(spark, sf_dir, "documents")
     fracs = {"en": 0.4, "fr": 0.9}
     kept = sampling.stratified_sample(
-        docs, "lang", fracs, ["doc_id"], default_fraction=1.0, salt="t", portable=True
+        docs, "lang", fracs, ["doc_id"], default_fraction=1.0, salt="t"
     )
     base = {r["lang"]: r["n"] for r in docs.groupBy("lang").agg(F.count("*").alias("n")).collect()}
     got = {r["lang"]: r["n"] for r in kept.groupBy("lang").agg(F.count("*").alias("n")).collect()}
@@ -507,7 +535,7 @@ def test_stratified_sample_per_stratum_rates_and_stability(spark, sf_dir):
     en_kept = {r["doc_id"] for r in kept.filter(F.col("lang") == "en").collect()}
     flipped = sampling.stratified_sample(
         docs.withColumn("lang", F.lit("en")), "lang", fracs, ["doc_id"],
-        default_fraction=1.0, salt="t", portable=True,
+        default_fraction=1.0, salt="t",
     )
     all_kept_as_en = {r["doc_id"] for r in flipped.collect()}
     assert en_kept == {d for d in all_kept_as_en
