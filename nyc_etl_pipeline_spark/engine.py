@@ -241,9 +241,9 @@ class Engine:
         watermark. A watermark misses batches consisting solely of
         late rows (e.g. a re-delivered earlier month's file whose
         timestamps all precede the max already loaded); a content
-        digest catches any change. The reference's watermark operator
-        (gold.py:56-65) is still provided as
-        `pipeline.latest_pickup_watermark` and `build_fact(watermark=)`.
+        digest catches any change. The reference's max-watermark + filter
+        shape (gold.py:56-65) stays under the oracle gate as suite
+        query q05 on `orders`; the Engine does not use it.
 
         Affected months are rebuilt COMPLETELY from silver and swapped
         in with partition overwrite. (Appending just the new rows would

@@ -29,112 +29,160 @@ score axis instead of partitioning by group.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from nyc_etl_pipeline_spark.hygiene import scratch_checkpoint
 
 from nyc_etl_pipeline_spark.functions import dec_sum, round_half_up, sql_double
 
+# Range buckets of the ungrouped two-pass running sum (and of
+# kendall_tau's x axis). Bounds only balance the per-bucket windows —
+# every choice gives the same values — so the count is fixed here, not
+# read from the session.
+_BUCKETS = 32
 
-def _quantile_bounds(
-    df: DataFrame, col: str, num_buckets: int | None
-) -> list[float]:
-    """approxQuantile bucket boundaries for the two-pass global rank —
-    a bounded driver-side list (<= num_buckets-1 floats; default:
-    session shuffle partitions). Exact for ANY boundary choice —
-    boundaries only affect balance."""
-    spark = df.sparkSession
-    p = num_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+def _quantile_bounds(df: DataFrame, col: str) -> list[float]:
+    """approxQuantile bucket boundaries for the two-pass running sum —
+    a bounded driver-side list (<= _BUCKETS-1 floats). Exact for ANY
+    boundary choice — boundaries only affect balance."""
     probe = df.select(F.col(col).cast("double").alias("__sd"))
-    qs = [i / p for i in range(1, p)]
+    qs = [i / _BUCKETS for i in range(1, _BUCKETS)]
     return sorted(set(probe.approxQuantile("__sd", qs, 0.001))) if qs else []
+
+
+def _bucket_sql(col: str, bounds: list[float], descending: bool = False) -> str:
+    """SQL range bucket of `col` under literal `bounds`: a flat sum of
+    literal comparisons, NOT a lambda over an array literal — the
+    higher-order-function form mis-binds when the input is a persisted
+    relation (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND inside the offsets
+    window, cached input only). A pure expression, so
+    independent recomputes of two subtrees cannot disagree; built as
+    one string because nested Columns cost ~6-10 py4j round-trips per
+    bound (the _minhash_signature_cols lesson).
+
+    Ascending needs no special case: NULL lands in bucket 0 and NaN in
+    the last, Spark's asc order (NULLS FIRST, NaN greatest).
+    Descending keeps NaN in bucket 0 (every `value < bound` is false),
+    matching the NaN-first desc order, and routes NULL to a dedicated
+    FINAL bucket, matching desc's NULLS LAST (parking NULL in bucket
+    0, processed FIRST, made ungrouped desc running sums diverge from
+    the grouped desc window whenever NULLs were present)."""
+    v = f"CAST({col} AS DOUBLE)"
+    op = "<" if descending else ">"
+    bucket = " + ".join(
+        f"(CASE WHEN {v} {op} {sql_double(b)} THEN 1 ELSE 0 END)" for b in bounds
+    ) or "0"
+    if descending:
+        return f"CASE WHEN {col} IS NULL THEN {len(bounds) + 1} ELSE {bucket} END"
+    return bucket
 
 
 def _bucketed_global_cum(
     per_value: DataFrame,
     value_col: str,
-    tie_cols: str | list[str],
+    sum_cols: list[str],
     bounds: list[float],
     descending: bool = False,
 ) -> DataFrame:
-    """TWO-PASS range-bucketed GLOBAL cumulative count over distinct
+    """TWO-PASS range-bucketed GLOBAL running sums over distinct
     values — never a single-partition window: each distinct value maps
-    to a bucket via a pure literal expression (deterministic, so
-    independent recomputes of the two subtrees cannot disagree), local
-    prefix sums run per bucket in parallel, and the <= |buckets|-row
-    prefix-offset table broadcasts back.
-
-    `tie_cols` as a str adds `__cum` = running count of that column in
-    `value_col` order (ascending by default, descending with
-    `descending=True`), inclusive. As a list, adds one running count
-    per column named `__cum_<col>` — all sharing the single local
-    window (average_precision needs cumN AND cumTP from one pass).
-    The bucket id is retained as `__b` (processing order: bucket 0
-    first) for callers that need bucket-ordered recombination.
-
-    The bucket expression is a flat sum of literal comparisons, NOT a
-    lambda over an array literal: the higher-order-function form
-    mis-binds when the input is a persisted relation (r10 probe:
-    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND inside the offsets window,
-    cached input only). Descending keeps NaN in bucket 0 (every
-    `value < bound` is false), matching Spark's NaN-greatest desc
-    sort order — and routes NULL to a dedicated FINAL bucket,
-    matching desc's NULLS-LAST (ADVICE r11: `NULL < bound` is NULL →
-    otherwise(0) had parked NULLs in bucket 0, processed FIRST, so
-    ungrouped desc cumulative counts diverged from the grouped desc
-    window whenever NULL values were present; ascending needs no
-    special case — NULL lands in bucket 0 and asc order is
-    NULLS-FIRST, already the grouped placement)."""
-    single = isinstance(tie_cols, str)
-    cols = [tie_cols] if single else list(tie_cols)
-    if bounds:
-        bucket = None
-        for b in bounds:
-            cmp = (
-                F.col(value_col).cast("double") < F.lit(float(b))
-                if descending
-                else F.col(value_col).cast("double") > F.lit(float(b))
-            )
-            term = F.when(cmp, 1).otherwise(0)
-            bucket = term if bucket is None else bucket + term
-    else:
-        bucket = F.lit(0)
-    if descending:
-        bucket = F.when(
-            F.col(value_col).isNull(), F.lit(len(bounds) + 1)
-        ).otherwise(bucket)
-    bucketed = per_value.withColumn("__b", bucket)
-    order = F.col(value_col).desc() if descending else F.col(value_col).asc()
-    w_loc = (
-        W.partitionBy("__b")
-        .orderBy(order)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    to a bucket `__b` via `_bucket_sql` (processing order: bucket 0
+    first), local prefix sums run per bucket in parallel, and the
+    <= |buckets|-row table of bucket offsets and totals broadcasts
+    back. Adds `__cum_<c>` (inclusive running sum in `value_col` order)
+    and `__tot_<c>` (the whole table's sum) per `sum_cols` column."""
+    order = f"{value_col} {'DESC' if descending else 'ASC'}"
+    bucketed = per_value.selectExpr(
+        "*", f"{_bucket_sql(value_col, bounds, descending)} AS __b"
     )
-    local = bucketed.select(
-        "*", *[F.sum(c).over(w_loc).alias(f"__loc_{c}") for c in cols]
+    local = bucketed.selectExpr(
+        "*",
+        *[
+            f"sum({c}) OVER (PARTITION BY __b ORDER BY {order} ROWS BETWEEN"
+            f" UNBOUNDED PRECEDING AND CURRENT ROW) AS __loc_{c}"
+            for c in sum_cols
+        ],
     )
-    # bucket-count prefix offsets: <= |buckets| rows, so the
+    # bucket prefix offsets and totals: <= |buckets| rows, so the
     # no-partition window here is bounded by construction
-    w_off = W.orderBy(F.col("__b").asc()).rowsBetween(W.unboundedPreceding, -1)
-    offsets = (
-        bucketed.groupBy("__b")
-        .agg(*[F.sum(c).alias(f"__bt_{c}") for c in cols])
-        .select(
-            "__b",
+    w_off = "ORDER BY __b ASC ROWS BETWEEN UNBOUNDED PRECEDING AND"
+    offsets = bucketed.groupBy("__b").agg(
+        *[F.expr(f"sum({c}) AS __bt_{c}") for c in sum_cols]
+    ).selectExpr(
+        "__b",
+        *[
+            f"coalesce(sum(__bt_{c}) OVER ({w_off} 1 PRECEDING), 0) AS __off_{c}"
+            for c in sum_cols
+        ],
+        *[
+            f"sum(__bt_{c}) OVER ({w_off} UNBOUNDED FOLLOWING) AS __tot_{c}"
+            for c in sum_cols
+        ],
+    )
+    return (
+        local.join(F.broadcast(offsets), "__b")
+        .selectExpr("*", *[f"__loc_{c} + __off_{c} AS __cum_{c}" for c in sum_cols])
+        .drop(*[f"__loc_{c}" for c in sum_cols], *[f"__off_{c}" for c in sum_cols])
+    )
+
+
+def _running_sums(
+    per_value: DataFrame,
+    gcols: list[str],
+    order_col: str,
+    sum_cols: list[str],
+    descending: bool = False,
+) -> DataFrame:
+    """The one running-sum path of every rank metric. `per_value` has
+    one row per distinct (group..., `order_col`) value; each
+    `sum_cols` column gains its inclusive running sum `__cum_<c>` in
+    `order_col` order (ascending, or descending with
+    `descending=True`) and its group total `__tot_<c>`.
+
+      * grouped — ONE window partitioned by the group columns (the
+        running and the whole-partition frame share its sort), so
+        totals need no second aggregate or join back. Single-partition
+        PER GROUP: see the module docstring's skew bound;
+      * ungrouped (`gcols` empty) — the table is checkpointed (the
+        quantile probe, the local pass and the offsets all read it, and
+        Catalyst plans are trees: each reference would otherwise carry
+        and recompute the whole upstream lineage — the kendall_tau
+        lesson), bounds are probed on its DISTINCT values, the balance
+        the local windows need, and `_bucketed_global_cum` runs. The
+        bucket id `__b` is kept for bucket-ordered recombination.
+
+    Window and sum expressions are SQL strings: a group column is
+    quoted, the internal value and sum columns need no quoting."""
+    if gcols:
+        part = ", ".join("`" + c.replace("`", "``") + "`" for c in gcols)
+        spec = (
+            f"PARTITION BY {part} ORDER BY {order_col}"
+            f" {'DESC' if descending else 'ASC'} ROWS BETWEEN UNBOUNDED PRECEDING AND"
+        )
+        return per_value.selectExpr(
+            "*",
+            *[f"sum({c}) OVER ({spec} CURRENT ROW) AS __cum_{c}" for c in sum_cols],
             *[
-                F.coalesce(F.sum(f"__bt_{c}").over(w_off), F.lit(0)).alias(
-                    f"__off_{c}"
-                )
-                for c in cols
+                f"sum({c}) OVER ({spec} UNBOUNDED FOLLOWING) AS __tot_{c}"
+                for c in sum_cols
             ],
         )
-    )
-    out = local.join(F.broadcast(offsets), "__b")
-    for c in cols:
-        name = "__cum" if single else f"__cum_{c}"
-        out = out.withColumn(name, F.col(f"__loc_{c}") + F.col(f"__off_{c}"))
-    return out.drop(*[f"__loc_{c}" for c in cols], *[f"__off_{c}" for c in cols])
+    per_value = per_value.transform(scratch_checkpoint)
+    bounds = _quantile_bounds(per_value, order_col)
+    return _bucketed_global_cum(per_value, order_col, sum_cols, bounds, descending)
+
+
+def _join_groups(
+    left: DataFrame, right: DataFrame, gcols: list[str], how: str = "inner"
+) -> DataFrame:
+    """`right`, one row per group, onto `left`'s rows: an equi-join on
+    the group columns (the strategy left to AQE in case of huge group
+    counts), or — ungrouped, where `right` is one global row — a
+    broadcast cross join."""
+    if gcols:
+        return left.join(right, on=gcols, how=how)
+    return left.crossJoin(F.broadcast(right))
 
 
 def roc_auc(
@@ -142,7 +190,6 @@ def roc_auc(
     score_col: str,
     label_col: str,
     group_cols: list[str] | None = None,
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Per-group ROC-AUC = P(score of a random positive > score of a
     random negative) + ½·P(equal), computed by the Mann-Whitney rank
@@ -156,24 +203,15 @@ def roc_auc(
     the value is exact for any tie structure and any partitioning;
     groups with no positives or no negatives get NULL (AUC undefined).
 
-    Both paths first collapse rows to (group, score) → (tie_count,
-    pos_count), so rank arithmetic runs over distinct scores, and
-    rmin(s) = cum_count(s) - tie(s) + 1 where cum_count is the
-    running row count in ascending score order:
-
-      * grouped — one cumulative-sum window per group over its
-        distinct scores (single-partition per group; see module
-        docstring's skew bound);
-      * ungrouped (`group_cols=None`) — a TWO-PASS range-bucketed
-        global rank, never a single-partition window: bucket
-        boundaries come from approxQuantile (a bounded driver-side
-        list, ≤ num_buckets-1 floats), each distinct score maps to a
-        bucket via a pure literal-array expression (deterministic, so
-        independent recomputes of the two subtrees can't disagree),
-        local prefix sums run per bucket in parallel, and bucket
-        prefix OFFSETS — a ≤ num_buckets-row table — are broadcast
-        back. Exact for any boundary choice; boundaries only affect
-        balance. Costs one extra scan of `df` for the quantile probe.
+    Rows first collapse to (group, score) → (tie_count, pos_count),
+    so rank arithmetic runs over distinct scores, and rmin(s) =
+    cum_count(s) - tie(s) + 1 where cum_count is the running row
+    count in ascending score order, from `_running_sums`: one window
+    per group, or ungrouped (`group_cols=None`) a TWO-PASS
+    range-bucketed global rank — never a single-partition window
+    (approxQuantile bucket bounds, parallel per-bucket prefix sums, a
+    broadcast ≤ _BUCKETS-row offset table). Exact for any boundary
+    choice; boundaries only affect balance.
 
     Returns (group..., n_pos, n_neg, auc rounded 6).
     """
@@ -183,28 +221,12 @@ def roc_auc(
         F.count(F.lit(1)).cast("bigint").alias("__tie"),
         F.sum(lab).cast("bigint").alias("__pos"),
     )
-    if gcols:
-        w_cum = (
-            W.partitionBy(*[F.col(c) for c in gcols])
-            .orderBy(F.col("__s").asc())
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        cum = per_score.withColumn("__cum", F.sum("__tie").over(w_cum))
-    else:
-        # the two-pass helper references per_score twice (local pass +
-        # offsets) — checkpoint so the corpus-scale aggregate runs
-        # once and both passes read the resolution-bounded blocks; the
-        # quantile probe then runs over DISTINCT scores, which is the
-        # balance the local windows actually need (the kendall_tau
-        # lineage lesson; boundaries never affect values)
-        per_score = per_score.transform(scratch_checkpoint)
-        bounds = _quantile_bounds(per_score, "__s", num_buckets)
-        cum = _bucketed_global_cum(per_score, "__s", "__tie", bounds)
+    cum = _running_sums(per_score, gcols, "__s", ["__tie"])
     stats = cum.select(
         *gcols,
         "__tie",
         "__pos",
-        (F.col("__cum") - F.col("__tie") + 1).alias("__rmin"),
+        (F.col("__cum___tie") - F.col("__tie") + 1).alias("__rmin"),
     )
     agg = stats.groupBy(*gcols).agg(
         F.sum("__pos").alias("n_pos"),
@@ -231,7 +253,6 @@ def roc_curve(
     score_col: str,
     label_col: str,
     group_cols: list[str] | None = None,
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Per-group ROC curve POINTS — the curve `roc_auc` integrates:
     one row per distinct score (threshold), descending, with
@@ -245,10 +266,10 @@ def roc_curve(
     points has area exactly equal to `roc_auc`'s tie-averaged value).
 
     Exactness: rows collapse to (group, score) → (tie_count,
-    pos_count) first, cumulative TP and N come from ONE cumulative
-    window over distinct scores in descending order (cumFP = cumN −
-    cumTP), and the only float ops are the two final divisions by the
-    group's constant totals — order-free, rounded half-up to 6 dp,
+    pos_count) first, cumulative TP and N and the group's totals come
+    from ONE `_running_sums` pass over distinct scores in descending
+    order (cumFP = cumN − cumTP), and the only float ops are the two
+    final divisions by those totals — order-free, rounded half-up to 6 dp,
     fully oracle-replicable. Groups lacking positives (tpr undefined)
     or negatives (fpr undefined) yield NULL for that coordinate,
     mirroring roc_auc's NULL contract.
@@ -257,9 +278,9 @@ def roc_curve(
     the cumulative window serializes |distinct scores in the group|
     through one task (bounded by score resolution, not corpus size);
     UNGROUPED (`group_cols=None`), the cumulative pass is the shared
-    two-pass range-bucketed `_bucketed_global_cum` (descending — NULL
-    scores route to the final bucket, the NULLS-LAST placement), so
-    no stage is single-partition. Output volume is |distinct scores|
+    two-pass range-bucketed running sum (descending — NULL scores
+    route to the final bucket, the NULLS-LAST placement), so no stage
+    is single-partition. Output volume is |distinct scores|
     per group — resolution-bounded by the same argument.
 
     Returns (group..., score, n_pos, n_neg, tpr, fpr), descending
@@ -267,70 +288,26 @@ def roc_curve(
     """
     gcols = group_cols or []
     lab = F.col(label_col).cast("bigint")
-    # the per-score table feeds the cumulative pass AND the totals —
-    # checkpointed so the corpus-scale aggregate runs once and both
-    # branches read the resolution-bounded blocks (the kendall_tau
-    # lineage-truncation lesson)
-    per_score = (
-        df.groupBy(*gcols, F.col(score_col).alias("score"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("__tie"),
-            F.sum(lab).cast("bigint").alias("__pos"),
-        )
-        .transform(scratch_checkpoint)
+    per_score = df.groupBy(*gcols, F.col(score_col).alias("score")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("__tie"),
+        F.sum(lab).cast("bigint").alias("__pos"),
     )
-    if gcols:
-        w_cum = (
-            W.partitionBy(*[F.col(c) for c in gcols])
-            .orderBy(F.col("score").desc())
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        cum = per_score.select(
-            *gcols,
-            "score",
-            "__tie",
-            "__pos",
-            F.sum("__tie").over(w_cum).alias("__cn"),
-            F.sum("__pos").over(w_cum).alias("__cp"),
-        )
-    else:
-        # bounds probed on the checkpointed per-score table, not the
-        # raw input: one fewer corpus pass, and the local windows run
-        # over DISTINCT scores — balancing by distinct-value count is
-        # the balance that actually matters there (boundaries never
-        # affect values, only balance)
-        bounds = _quantile_bounds(per_score, "score", num_buckets)
-        cum = _bucketed_global_cum(
-            per_score, "score", ["__tie", "__pos"], bounds, descending=True
-        ).select(
-            "score",
-            "__tie",
-            "__pos",
-            F.col("__cum___tie").alias("__cn"),
-            F.col("__cum___pos").alias("__cp"),
-        )
-    totals = per_score.groupBy(*gcols).agg(
-        F.sum("__pos").cast("bigint").alias("n_pos"),
-        (F.sum("__tie") - F.sum("__pos")).cast("bigint").alias("n_neg"),
+    cum = _running_sums(
+        per_score, gcols, "score", ["__tie", "__pos"], descending=True
     )
-    if gcols:
-        joined = cum.join(totals, on=gcols)
-    else:
-        joined = cum.crossJoin(F.broadcast(totals))
-    return joined.select(
+    n_pos = F.col("__tot___pos")
+    n_neg = F.col("__tot___tie") - F.col("__tot___pos")
+    return cum.select(
         *gcols,
         "score",
-        "n_pos",
-        "n_neg",
+        n_pos.cast("bigint").alias("n_pos"),
+        n_neg.cast("bigint").alias("n_neg"),
         F.when(
-            F.col("n_pos") > 0,
-            round_half_up(F.col("__cp") / F.col("n_pos"), 6),
+            n_pos > 0, round_half_up(F.col("__cum___pos") / n_pos, 6)
         ).alias("tpr"),
         F.when(
-            F.col("n_neg") > 0,
-            round_half_up(
-                (F.col("__cn") - F.col("__cp")) / F.col("n_neg"), 6
-            ),
+            n_neg > 0,
+            round_half_up((F.col("__cum___tie") - F.col("__cum___pos")) / n_neg, 6),
         ).alias("fpr"),
     )
 
@@ -340,7 +317,6 @@ def average_precision(
     score_col: str,
     label_col: str,
     group_cols: list[str] | None = None,
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Per-group average precision — the area under the step-
     interpolated precision-recall curve, the imbalanced-class
@@ -369,10 +345,9 @@ def average_precision(
     bounds it at ~10⁶ rows regardless of corpus size); feed
     near-continuous scores through a rounding first if a group's
     distinct count is unbounded. UNGROUPED (`group_cols=None`), both
-    passes are two-pass range-bucketed (shared with `roc_auc` /
-    `spearman_corr`): cumN and cumTP ride ONE descending
-    `_bucketed_global_cum` (parallel per-bucket prefix sums +
-    broadcast offsets), and the ordered fold becomes per-bucket
+    passes are two-pass range-bucketed: cumN, cumTP and the totals
+    ride ONE descending `_running_sums` pass (parallel per-bucket
+    prefix sums + broadcast offsets), and the ordered fold becomes per-bucket
     DESC-sorted term ARRAYS concatenated in bucket order and folded
     once — the fold sees the identical term sequence as the grouped
     form (same sort key, same left-to-right association), so
@@ -388,99 +363,47 @@ def average_precision(
         F.count(F.lit(1)).cast("bigint").alias("__tie"),
         F.sum(lab).cast("bigint").alias("__pos"),
     )
-    if gcols:
-        w_cum = (
-            W.partitionBy(*[F.col(c) for c in gcols])
-            .orderBy(F.col("__s").desc())
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        cum = per_score.select(
-            *gcols,
-            "__s",
-            "__tie",
-            "__pos",
-            F.sum("__tie").over(w_cum).alias("__cn"),
-            F.sum("__pos").over(w_cum).alias("__cp"),
-        )
-    else:
-        # three consumers (quantile probe, two-pass cum, totals) —
-        # checkpoint so the corpus-scale aggregate runs once (the
-        # kendall_tau lineage lesson; r12 probe read 42.8 s for
-        # ungrouped AP at 10M vs roc_auc's 8.0 from exactly this)
-        per_score = per_score.transform(scratch_checkpoint)
-        bounds = _quantile_bounds(per_score, "__s", num_buckets)
-        cum = _bucketed_global_cum(
-            per_score, "__s", ["__tie", "__pos"], bounds, descending=True
-        ).select(
-            "__b",
-            "__s",
-            "__tie",
-            "__pos",
-            F.col("__cum___tie").alias("__cn"),
-            F.col("__cum___pos").alias("__cp"),
-        )
-    term = (F.col("__pos") * F.col("__cp")).cast("double") / F.col(
-        "__cn"
+    cum = _running_sums(
+        per_score, gcols, "__s", ["__tie", "__pos"], descending=True
+    )
+    term = (F.col("__pos") * F.col("__cum___pos")).cast("double") / F.col(
+        "__cum___tie"
     ).cast("double")
+    step = F.when(F.col("__pos") > 0, F.struct(F.col("__s"), term.alias("__t")))
+
+    def fold(terms: F.Column) -> F.Column:
+        return F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x.getField("__t"))
+
     if gcols:
         agg = cum.groupBy(*gcols).agg(
             F.sum("__pos").cast("bigint").alias("n_pos"),
             (F.sum("__tie") - F.sum("__pos")).cast("bigint").alias("n_neg"),
-            F.aggregate(
-                F.sort_array(
-                    F.collect_list(
-                        F.when(
-                            F.col("__pos") > 0,
-                            F.struct(F.col("__s"), term.alias("__t")),
-                        )
-                    ),
-                    asc=False,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x.getField("__t"),
+            fold(F.sort_array(F.collect_list(step), asc=False)).alias("__apsum"),
+        )
+    else:
+        # per-bucket DESC-sorted term arrays (parallel), then ONE
+        # bucket-ordered concatenation folded left-to-right — the exact
+        # term sequence of the grouped sort_array fold. Totals are the
+        # running-sum pass's own (constant per row).
+        per_bucket = cum.groupBy("__b").agg(
+            F.max("__tot___pos").alias("__tp"),
+            F.max("__tot___tie").alias("__tn"),
+            F.sort_array(F.collect_list(step), asc=False).alias("__arr"),
+        )
+        agg = per_bucket.agg(
+            F.max("__tp").cast("bigint").alias("n_pos"),
+            (F.max("__tn") - F.max("__tp")).cast("bigint").alias("n_neg"),
+            fold(
+                F.flatten(
+                    F.sort_array(
+                        F.collect_list(F.struct(F.col("__b"), F.col("__arr"))),
+                        asc=True,
+                    ).getField("__arr")
+                )
             ).alias("__apsum"),
         )
-        return agg.select(
-            *gcols,
-            "n_pos",
-            "n_neg",
-            F.when(
-                F.col("n_pos") > 0,
-                round_half_up(F.col("__apsum") / F.col("n_pos"), 6),
-            ).alias("ap"),
-        )
-    # ungrouped: per-bucket DESC-sorted term arrays (parallel), then
-    # ONE bucket-ordered concatenation folded left-to-right — the
-    # exact term sequence of the grouped sort_array fold. Totals come
-    # straight off the checkpointed per-score table (same sums, no
-    # window/offsets traversal).
-    counts = per_score.agg(
-        F.sum("__pos").cast("bigint").alias("n_pos"),
-        (F.sum("__tie") - F.sum("__pos")).cast("bigint").alias("n_neg"),
-    )
-    per_bucket = (
-        cum.filter(F.col("__pos") > 0)
-        .groupBy("__b")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("__s"), term.alias("__t"))),
-                asc=False,
-            ).alias("__arr")
-        )
-    )
-    folded = per_bucket.agg(
-        F.aggregate(
-            F.flatten(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("__b"), F.col("__arr"))),
-                    asc=True,
-                ).getField("__arr")
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x.getField("__t"),
-        ).alias("__apsum")
-    )
-    return counts.crossJoin(F.broadcast(folded)).select(
+    return agg.select(
+        *gcols,
         "n_pos",
         "n_neg",
         F.when(
@@ -544,13 +467,7 @@ def calibration_report(
         # move the last ulp of the final division
         dec_sum(F.col("n") * F.abs(F.col("__acc") - F.col("__conf"))).alias("__gap"),
     )
-    if gcols:
-        # totals is one row per group — usually broadcastable, but
-        # leave the strategy to AQE in case of huge group counts
-        joined = per_bin.join(totals, on=gcols)
-    else:
-        joined = per_bin.crossJoin(F.broadcast(totals))
-    return joined.select(
+    return _join_groups(per_bin, totals, gcols).select(
         *gcols,
         F.col("bin").cast("bigint").alias("bin"),
         "n",
@@ -596,12 +513,12 @@ def spearman_corr(
     contract.
 
     Scale shape / skew bound: two distinct-value rank passes + three
-    hash aggregates per group. Grouped, each rank window serializes
-    |distinct values of one variable in the group| through one task
-    (same contract as grouped roc_auc — bounded by score resolution,
-    not corpus size); UNGROUPED, both marginals use the two-pass
-    range-bucketed global rank (`_bucketed_global_cum`, shared with
-    ungrouped roc_auc) — never a single-partition window. Groups
+    hash aggregates per group, each rank pass the shared
+    `_running_sums`. Grouped, each rank window serializes |distinct
+    values of one variable in the group| through one task (same
+    contract as grouped roc_auc — bounded by score resolution, not
+    corpus size); UNGROUPED, both marginals use the two-pass
+    range-bucketed global rank — never a single-partition window. Groups
     where either variable is constant get NULL (undefined).
 
     Returns (group..., n, rho rounded 6).
@@ -610,35 +527,14 @@ def spearman_corr(
     df = df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
 
     def _marg(col: str, alias: str) -> DataFrame:
-        per = df.groupBy(*gcols, F.col(col).alias(f"__v_{alias}")).agg(
+        v = f"__v_{alias}"
+        per = df.groupBy(*gcols, F.col(col).alias(v)).agg(
             F.count(F.lit(1)).cast("bigint").alias("__t")
         )
-        if gcols:
-            w = (
-                W.partitionBy(*[F.col(c) for c in gcols])
-                .orderBy(F.col(f"__v_{alias}").asc())
-                .rowsBetween(W.unboundedPreceding, W.currentRow)
-            )
-            return per.select(
-                *gcols,
-                f"__v_{alias}",
-                (2 * F.sum("__t").over(w) - F.col("__t") + 1).alias(
-                    f"__2r_{alias}"
-                ),
-            )
-        # ungrouped: the two-pass range-bucketed global rank — the
-        # roc_auc escape hatch, shared helper; never a
-        # single-partition window over the distinct values. The
-        # marginal's distinct-value aggregate feeds the quantile
-        # probe + both helper passes — checkpoint so it runs once
-        # (the kendall_tau lineage lesson).
-        per = per.transform(scratch_checkpoint)
-        cum = _bucketed_global_cum(
-            per, f"__v_{alias}", "__t", _quantile_bounds(per, f"__v_{alias}", None)
-        )
-        return cum.select(
-            f"__v_{alias}",
-            (2 * F.col("__cum") - F.col("__t") + 1).alias(f"__2r_{alias}"),
+        return _running_sums(per, gcols, v, ["__t"]).select(
+            *gcols,
+            v,
+            (2 * F.col("__cum___t") - F.col("__t") + 1).alias(f"__2r_{alias}"),
         )
 
     joint = df.groupBy(
@@ -870,7 +766,6 @@ def topk_calibration(
     label_col: str,
     ks: list[int],
     group_cols: list[str] | None = None,
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Head-of-ranking calibration: for each requested k, over the
     top-k highest-scored rows per group, the mean confidence vs the
@@ -892,7 +787,7 @@ def topk_calibration(
 
     Exactness: rows collapse to (group, score) -> (tie_count,
     pos_count, decimal score mass) first; cumulative rows/positives/
-    mass ride ONE cumulative pass over distinct scores descending;
+    mass ride ONE `_running_sums` pass over distinct scores descending;
     the boundary row per (group, k) is the min-cum qualifying row
     (cum is strictly increasing over a group's distinct scores, so
     min_by is unambiguous); conf/precision/gap are the only float
@@ -901,8 +796,8 @@ def topk_calibration(
     Scale shape / skew bound: the grouped cumulative window
     serializes |distinct scores in the group| through one task
     (resolution-bounded — the roc_auc contract); ungrouped uses the
-    shared two-pass range-bucketed `_bucketed_global_cum`
-    (descending), so no stage is single-partition. The k list is a
+    shared two-pass range-bucketed running sum (descending), so no
+    stage is single-partition. The k list is a
     bounded literal relation broadcast into a nested-loop prefix
     probe (|distinct scores| x |ks| candidate rows, collapsed by one
     hash aggregate) — ks is driver-provided and small by contract.
@@ -932,33 +827,15 @@ def topk_calibration(
             "__mass", F.col("__s").cast("decimal(28,6)") * F.col("__tie")
         )
     )
-    if gcols:
-        w_cum = (
-            W.partitionBy(*[F.col(c) for c in gcols])
-            .orderBy(F.col("__s").desc())
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        cum = per_score.select(
-            *gcols,
-            "__s",
-            F.sum("__tie").over(w_cum).alias("__cn"),
-            F.sum("__pos").over(w_cum).alias("__cp"),
-            F.sum("__mass").over(w_cum).alias("__cs"),
-        )
-    else:
-        bounds = _quantile_bounds(df, score_col, num_buckets)
-        cum = _bucketed_global_cum(
-            per_score,
-            "__s",
-            ["__tie", "__pos", "__mass"],
-            bounds,
-            descending=True,
-        ).select(
-            "__s",
-            F.col("__cum___tie").alias("__cn"),
-            F.col("__cum___pos").alias("__cp"),
-            F.col("__cum___mass").alias("__cs"),
-        )
+    cum = _running_sums(
+        per_score, gcols, "__s", ["__tie", "__pos", "__mass"], descending=True
+    ).select(
+        *gcols,
+        "__s",
+        F.col("__cum___tie").alias("__cn"),
+        F.col("__cum___pos").alias("__cp"),
+        F.col("__cum___mass").alias("__cs"),
+    )
     ks_df = df.sparkSession.createDataFrame(
         [(k,) for k in ks_int], "k bigint"
     )
@@ -1097,8 +974,7 @@ def cohen_kappa(
         .agg(F.count(F.lit(1)).cast("bigint").alias("__cn"))
         .transform(scratch_checkpoint)
     )
-    gb = lambda *cs: cells.groupBy(*cs) if cs else cells.groupBy()  # noqa: E731
-    totals = gb(*gcols).agg(
+    totals = cells.groupBy(*gcols).agg(
         F.sum("__cn").cast("bigint").alias("__n"),
         F.coalesce(
             F.sum(F.when(F.col("__a") == F.col("__b"), F.col("__cn"))),
@@ -1122,10 +998,7 @@ def cohen_kappa(
             ).alias("__pe_num")
         )
     )
-    if gcols:
-        fin = totals.join(pe_num, gcols, "left")
-    else:
-        fin = totals.crossJoin(F.broadcast(pe_num))
+    fin = _join_groups(totals, pe_num, gcols, "left")
     # inner-join marginals can only drop the pe contribution of classes
     # one side never uses (product 0); a missing row means NO class was
     # shared, so pe_num is 0, not NULL
@@ -1154,7 +1027,6 @@ def kendall_tau(
     x_col: str,
     y_col: str,
     group_cols: list[str] | None = None,
-    num_buckets: int = 32,
 ) -> DataFrame:
     """Exact Kendall's tau-b between two numeric columns — the
     concordance companion of spearman_corr (Spearman moves with any
@@ -1234,50 +1106,34 @@ def kendall_tau(
         d = c.cast("decimal(19,0)")
         return ((d * (d - 1)).cast("decimal(38,0)") / 2).cast("decimal(38,0)")
 
-    gb = lambda d, *cs: d.groupBy(*cs) if cs else d.groupBy()  # noqa: E731
-    tie_x = gb(cells, *gcols, "__x").agg(F.sum("__n").alias("__nx"))
-    tie_y = gb(cells, *gcols, "__y").agg(F.sum("__n").alias("__ny"))
-    totals_parts = [
-        gb(cells, *gcols).agg(
-            F.sum("__n").alias("n"),
-            F.sum(_pairs(F.col("__n"))).alias("__t_both"),
+    tie_x = cells.groupBy(*gcols, "__x").agg(F.sum("__n").alias("__nx"))
+    tie_y = cells.groupBy(*gcols, "__y").agg(F.sum("__n").alias("__ny"))
+    totals = _join_groups(
+        _join_groups(
+            cells.groupBy(*gcols).agg(
+                F.sum("__n").alias("n"),
+                F.sum(_pairs(F.col("__n"))).alias("__t_both"),
+            ),
+            tie_x.groupBy(*gcols).agg(F.sum(_pairs(F.col("__nx"))).alias("__t_x")),
+            gcols,
         ),
-        gb(tie_x, *gcols).agg(F.sum(_pairs(F.col("__nx"))).alias("__t_x")),
-        gb(tie_y, *gcols).agg(F.sum(_pairs(F.col("__ny"))).alias("__t_y")),
-    ]
-    if gcols:
-        totals = totals_parts[0].join(totals_parts[1], gcols).join(
-            totals_parts[2], gcols
-        )
-    else:
-        totals = (
-            totals_parts[0]
-            .crossJoin(F.broadcast(totals_parts[1]))
-            .crossJoin(F.broadcast(totals_parts[2]))
-        )
+        tie_y.groupBy(*gcols).agg(F.sum(_pairs(F.col("__ny"))).alias("__t_y")),
+        gcols,
+    )
 
     # --- x-range buckets (literal bounds; equal x never splits) -----
-    # bucket/mass/cum expressions build as parsed SQL strings — the
+    # bucket/mass expressions build as parsed SQL strings — the
     # nested-Column comprehensions cost ~6-10 py4j round-trips per
-    # bucket per site (~0.7 s of driver time per plan build at the
-    # default 32 buckets); same operators, value-identical (the
+    # bucket per site (~0.7 s of driver time per plan build at 32
+    # buckets); same operators, value-identical (the
     # _minhash_signature_cols lesson)
-    bounds = _quantile_bounds(cells, "__x", num_buckets)
-    if bounds:
-        bucket = F.expr(
-            " + ".join(
-                f"(CASE WHEN __x > {sql_double(b)} THEN 1 ELSE 0 END)"
-                for b in bounds
-            )
-        )
-    else:
-        bucket = F.lit(0)
+    bounds = _quantile_bounds(cells, "__x")
     n_b = len(bounds) + 1
-    cells_q = cells.withColumn("__q", bucket)
+    cells_q = cells.selectExpr("*", f"{_bucket_sql('__x', bounds)} AS __q")
 
     # --- cross-bucket dominance via per-(group, y) bucket masses ----
     mass_cols = [f"__m{i}" for i in range(n_b)]
-    per_y = gb(cells_q, *gcols, "__y").agg(
+    per_y = cells_q.groupBy(*gcols, "__y").agg(
         *[
             F.expr(
                 f"CAST(coalesce(sum(CASE WHEN __q = {i} THEN __n END), 0)"
@@ -1286,32 +1142,7 @@ def kendall_tau(
             for i in range(n_b)
         ]
     )
-    if gcols:
-        quoted = ["`" + c.replace("`", "``") + "`" for c in gcols]
-        over = (
-            "OVER (PARTITION BY " + ", ".join(quoted)
-            + " ORDER BY __y ASC ROWS BETWEEN UNBOUNDED PRECEDING"
-            " AND CURRENT ROW)"
-        )
-        cum = per_y.selectExpr(
-            *quoted,
-            "__y",
-            *mass_cols,
-            *[f"sum({c}) {over} AS __cum_{c}" for c in mass_cols],
-        )
-        tot_b = gb(per_y, *gcols).agg(
-            *[F.expr(f"sum({c})").alias(f"__tot_{c}") for c in mass_cols]
-        )
-        cum = cum.join(tot_b, gcols)
-    else:
-        y_bounds = _quantile_bounds(cells, "__y", num_buckets)
-        cum = _bucketed_global_cum(per_y, "__y", mass_cols, y_bounds).drop(
-            "__b"
-        )
-        tot_b = per_y.groupBy().agg(
-            *[F.sum(c).alias(f"__tot_{c}") for c in mass_cols]
-        )
-        cum = cum.crossJoin(F.broadcast(tot_b))
+    cum = _running_sums(per_y, gcols, "__y", mass_cols)
     # per distinct y: arrays over buckets of (mass strictly above y,
     # mass strictly below y); the cell's prefix over buckets < q is a
     # bounded fold
@@ -1342,18 +1173,15 @@ def kendall_tau(
         ).otherwise(zero)
 
     nd = F.col("__n").cast("decimal(19,0)")
-    cross = gb(
-        joined.select(
-            *gcols,
-            (nd * _prefix("__gt").cast("decimal(19,0)"))
-            .cast("decimal(38,0)")
-            .alias("__d_term"),
-            (nd * _prefix("__lt").cast("decimal(19,0)"))
-            .cast("decimal(38,0)")
-            .alias("__c_term"),
-        ),
+    cross = joined.select(
         *gcols,
-    ).agg(
+        (nd * _prefix("__gt").cast("decimal(19,0)"))
+        .cast("decimal(38,0)")
+        .alias("__d_term"),
+        (nd * _prefix("__lt").cast("decimal(19,0)"))
+        .cast("decimal(38,0)")
+        .alias("__c_term"),
+    ).groupBy(*gcols).agg(
         F.sum("__d_term").alias("__d_cross"),
         F.sum("__c_term").alias("__c_cross"),
     )
@@ -1427,17 +1255,13 @@ def kendall_tau(
     within_raw = cells_q.groupBy(*gcols, "__q").applyInPandas(
         _inversions, schema=kernel_schema
     )
-    within = gb(within_raw, *gcols).agg(
+    within = within_raw.groupBy(*gcols).agg(
         F.sum("__c_in").alias("__c_in"),
         F.sum("__d_in").alias("__d_in"),
     )
-
-    if gcols:
-        fin = totals.join(cross, gcols, "left").join(within, gcols, "left")
-    else:
-        fin = totals.crossJoin(F.broadcast(cross)).crossJoin(
-            F.broadcast(within)
-        )
+    fin = _join_groups(
+        _join_groups(totals, cross, gcols, "left"), within, gcols, "left"
+    )
 
     dz = F.lit(0).cast("decimal(38,0)")
     c_all = F.coalesce(F.col("__c_cross"), dz) + F.coalesce(

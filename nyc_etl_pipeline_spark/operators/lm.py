@@ -146,7 +146,6 @@ def dsir_importance(
     alpha: float = 1.0,
     text_col: str = "text",
     id_col: str = "doc_id",
-    portable: bool = True,
 ) -> DataFrame:
     """DSIR-style importance weights for data selection (Xie et al.
     2023, "Data Selection for Language Models via Importance
@@ -184,16 +183,9 @@ def dsir_importance(
                 F.concat(F.col("toks"), ngrams_from_tokens(F.col("toks"), 2))
             ).alias("feat"),
         )
-        # portable: md5-derived bucket, replicable in any engine (the
-        # oracle path). Not portable: xxhash64, Spark-only but
-        # ~1.6x end-to-end measured at 1M docs (73.6 -> 45.8 s) — the knob for a production 100 TB
-        # run where no cross-engine replay is needed.
-        h = (
-            md5_long(F.col("feat"))
-            if portable
-            else F.xxhash64(F.col("feat"))
+        return feats.select(
+            "doc", F.pmod(md5_long(F.col("feat")), F.lit(n_buckets)).alias("b")
         )
-        return feats.select("doc", F.pmod(h, F.lit(n_buckets)).alias("b"))
 
     ct = (
         bucketed(target)

@@ -3,7 +3,7 @@
 silver  — clean/unify raw trip records       (reference assets/silver.py)
 dims    — dimension builds + incremental upsert (reference assets/gold.py dims,
           Databases/create_datamart.sql)
-fact    — star-schema fact build, watermark incremental (reference gold.py)
+fact    — star-schema fact build                (reference gold.py)
 reports — monthly/weekly denormalized marts  (reference assets/platinum.py)
 """
 
@@ -17,7 +17,7 @@ from nyc_etl_pipeline_spark.pipeline.dims import (
     upsert_dim,
     zone_dim,
 )
-from nyc_etl_pipeline_spark.pipeline.fact import build_fact, latest_pickup_watermark
+from nyc_etl_pipeline_spark.pipeline.fact import build_fact
 from nyc_etl_pipeline_spark.pipeline.reports import (
     monthly_from_base,
     shared_report_base,
@@ -34,7 +34,6 @@ __all__ = [
     "upsert_dim",
     "zone_dim",
     "build_fact",
-    "latest_pickup_watermark",
     "shared_report_base",
     "monthly_from_base",
     "weekly_from_base",

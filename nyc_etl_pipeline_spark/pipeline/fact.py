@@ -1,7 +1,10 @@
-"""Gold layer: star-schema fact build + watermark incremental load.
+"""Gold layer: star-schema fact build.
 
-Reference: assets/gold.py:256-347 (insert_fact_table) and :56-65
-(get_latest_time_pickup_dw). Differences, all documented:
+Reference: assets/gold.py:256-347 (insert_fact_table). The
+reference's max-pickup watermark load (:56-65, :278) is not used:
+`Engine.run_fact` detects changed months from per-month content
+digests, which also catch late rows a watermark would miss.
+Differences, all documented:
 
 - union of green/yellow silver is by name (Q3 fix; the reference's
   positional union at gold.py:273 would throw on its own yellow schema
@@ -17,13 +20,8 @@ Reference: assets/gold.py:256-347 (insert_fact_table) and :56-65
 
 from __future__ import annotations
 
-import datetime
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# Watermark default when the fact table is empty (gold.py:60).
-WATERMARK_EPOCH = datetime.datetime(2000, 1, 1)
 
 _MEASURES = [
     "passenger_count",
@@ -38,46 +36,13 @@ _MEASURES = [
 ]
 
 
-def latest_pickup_watermark(fact: DataFrame | None, dim_date: DataFrame) -> datetime.datetime:
-    """Max pickup date already in the warehouse, else 2000-01-01.
-
-    Reference gold.py:56-65: join fact.date_puID -> dim_date.dateID and
-    take max(date). The join is broadcast (dim_date = 365 rows); the
-    aggregate is a partial/final max — no full shuffle.
-    """
-    if fact is None:
-        return WATERMARK_EPOCH
-    joined = fact.select("date_puID").join(
-        F.broadcast(dim_date.select("dateID", "date")),
-        fact["date_puID"] == dim_date["dateID"],
-        "inner",
-    )
-    row = joined.agg(F.max("date").alias("mx")).first()
-    if row is None or row["mx"] is None:
-        return WATERMARK_EPOCH
-    mx = row["mx"]
-    if isinstance(mx, datetime.datetime):
-        return mx
-    return datetime.datetime.combine(mx, datetime.time())
-
-
-def build_fact(
-    trips: DataFrame,
-    dim_date: DataFrame,
-    dim_type: DataFrame,
-    watermark: datetime.datetime | None = None,
-) -> DataFrame:
+def build_fact(trips: DataFrame, dim_date: DataFrame, dim_type: DataFrame) -> DataFrame:
     """Unified silver trips -> fact_nyc rows (FACT_NYC schema).
 
     ``trips`` should already be the by-name union of all taxi colors.
-    Rows at or before ``watermark`` are excluded (P6, gold.py:278);
-    rows whose pickup/dropoff date is missing from ``dim_date`` are
+    Rows whose pickup/dropoff date is missing from ``dim_date`` are
     dropped by the inner joins (Q10).
     """
-    df = trips
-    if watermark is not None:
-        df = df.filter(F.col("pickup_datetime") > F.lit(watermark))
-
     pu = F.broadcast(
         dim_date.select(F.col("dateID").alias("date_puID"), F.col("date").alias("__pu_date"))
     )
@@ -85,7 +50,7 @@ def build_fact(
         dim_date.select(F.col("dateID").alias("date_doID"), F.col("date").alias("__do_date"))
     )
     df = (
-        df.withColumn("__pu_date", F.to_date("pickup_datetime"))
+        trips.withColumn("__pu_date", F.to_date("pickup_datetime"))
         .withColumn("__do_date", F.to_date("dropoff_datetime"))
         .join(pu, on="__pu_date", how="inner")
         .join(do, on="__do_date", how="inner")

@@ -45,16 +45,19 @@ def test_auc_per_group_independence(spark):
     assert got == {"a": 1.0, "b": 0.0}
 
 
-def test_auc_ungrouped_two_pass_equals_grouped_constant_key(spark):
+def test_auc_ungrouped_two_pass_equals_grouped_constant_key(spark, monkeypatch):
     # the ungrouped path (range-bucketed two-pass global rank) must be
     # bit-identical to the grouped per-key window with one constant key
     import random
+
+    from nyc_etl_pipeline_spark.operators import evalmetrics
 
     rng = random.Random(11)
     rows = [(round(rng.random(), 2), rng.randint(0, 1)) for _ in range(500)]
     rows.append((rows[0][0], 1 - rows[0][1]))
     df = spark.createDataFrame(rows, "s double, y int")
-    ung = roc_auc(df, "s", "y", num_buckets=7).collect()[0]
+    monkeypatch.setattr(evalmetrics, "_BUCKETS", 7)
+    ung = roc_auc(df, "s", "y").collect()[0]
     grp = (
         roc_auc(df.withColumn("g", F.lit("k")), "s", "y", ["g"])
         .collect()[0]
@@ -63,8 +66,27 @@ def test_auc_ungrouped_two_pass_equals_grouped_constant_key(spark):
         grp["n_pos"], grp["n_neg"], grp["auc"],
     )
     # degenerate bucket counts (1 bucket == no boundaries) still exact
-    one = roc_auc(df, "s", "y", num_buckets=1).collect()[0]
+    monkeypatch.setattr(evalmetrics, "_BUCKETS", 1)
+    one = roc_auc(df, "s", "y").collect()[0]
     assert one["auc"] == ung["auc"]
+
+
+def test_quantile_bounds_independent_of_shuffle_partitions(spark):
+    # bounds only balance the two-pass running sum, so their count is
+    # the module constant, not the session's shuffle setting
+    from nyc_etl_pipeline_spark.operators import evalmetrics
+
+    df = spark.range(1000).select((F.col("id") / 1000.0).alias("v"))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    got = []
+    try:
+        for n in ("3", "50"):
+            spark.conf.set("spark.sql.shuffle.partitions", n)
+            got.append(evalmetrics._quantile_bounds(df, "v"))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert got[0] == got[1]
+    assert len(got[0]) == evalmetrics._BUCKETS - 1
 
 
 def test_auc_grouped_with_dominant_group(spark):
@@ -208,9 +230,10 @@ def test_roc_curve_step_area_equals_roc_auc(spark):
     assert abs(area - want) < 5e-6  # 6-dp rounded coordinates
 
 
-def test_roc_curve_ungrouped_two_pass_equals_grouped_constant_key(spark):
+def test_roc_curve_ungrouped_two_pass_equals_grouped_constant_key(spark, monkeypatch):
     import random
 
+    from nyc_etl_pipeline_spark.operators import evalmetrics
     from nyc_etl_pipeline_spark.operators.evalmetrics import roc_curve
 
     rng = random.Random(19)
@@ -220,9 +243,8 @@ def test_roc_curve_ungrouped_two_pass_equals_grouped_constant_key(spark):
     def key(t):  # None-safe sort (the NULL-score row)
         return tuple((v is None, v) for v in t)
 
-    ung = sorted(
-        map(tuple, roc_curve(df, "s", "y", num_buckets=7).collect()), key=key
-    )
+    monkeypatch.setattr(evalmetrics, "_BUCKETS", 7)
+    ung = sorted(map(tuple, roc_curve(df, "s", "y").collect()), key=key)
     grp = sorted(
         (
             tuple(r)[1:]  # strip the constant key
@@ -233,6 +255,28 @@ def test_roc_curve_ungrouped_two_pass_equals_grouped_constant_key(spark):
         key=key,
     )
     assert ung == grp
+
+
+def test_roc_curve_grouped_registers_no_scratch(spark):
+    # grouped, running sums and group totals come from one window, so
+    # the per-score table has one consumer and is not checkpointed
+    from nyc_etl_pipeline_spark import hygiene
+    from nyc_etl_pipeline_spark.operators.evalmetrics import roc_curve
+
+    df = spark.createDataFrame(
+        [("a", 0.9, 1), ("a", 0.1, 0), ("b", 0.5, 1), ("b", 0.5, 0)],
+        "g string, s double, y int",
+    )
+    before = hygiene.registered_count()
+    out = roc_curve(df, "s", "y", ["g"])
+    assert hygiene.registered_count() == before
+    got = {(r["g"], r["score"]): (r["n_pos"], r["n_neg"], r["tpr"], r["fpr"])
+           for r in out.collect()}
+    assert got == {
+        ("a", 0.9): (1, 1, 1.0, 0.0),
+        ("a", 0.1): (1, 1, 1.0, 1.0),
+        ("b", 0.5): (1, 1, 1.0, 1.0),
+    }
 
 
 # --------------------------------------------------------------------------
@@ -642,9 +686,10 @@ def test_topk_calibration_grouped_and_small_groups(spark):
     assert by[("a", 5)]["threshold"] == 0.4
 
 
-def test_topk_calibration_ungrouped_two_pass_equals_grouped_constant_key(spark):
+def test_topk_calibration_ungrouped_two_pass_equals_grouped_constant_key(spark, monkeypatch):
     import random
 
+    from nyc_etl_pipeline_spark.operators import evalmetrics
     from nyc_etl_pipeline_spark.operators.evalmetrics import topk_calibration
 
     rng = random.Random(23)
@@ -652,12 +697,8 @@ def test_topk_calibration_ungrouped_two_pass_equals_grouped_constant_key(spark):
     rows += [(None, 1), (None, 0)]  # NULL scores: dropped by contract
     df = spark.createDataFrame(rows, "s double, y int")
     ks = [1, 7, 50, 300, 600]
-    ung = sorted(
-        map(
-            tuple,
-            topk_calibration(df, "s", "y", ks=ks, num_buckets=7).collect(),
-        )
-    )
+    monkeypatch.setattr(evalmetrics, "_BUCKETS", 7)
+    ung = sorted(map(tuple, topk_calibration(df, "s", "y", ks=ks).collect()))
     grp = sorted(
         tuple(r)[1:]  # strip the constant key
         for r in topk_calibration(

@@ -1,7 +1,6 @@
 """End-to-end + per-layer tests of the NYC pipeline semantics
 (SURVEY §2 operator families S/P/J/U/A and quirks Q1-Q10)."""
 
-import datetime
 from collections import Counter
 
 import pytest
@@ -11,7 +10,6 @@ from nyc_etl_pipeline_spark.pipeline import (
     build_date_dim,
     build_fact,
     clean_trips,
-    latest_pickup_watermark,
     monthly_from_base,
     seed_payment_dim,
     seed_rate_dim,
@@ -116,15 +114,6 @@ def test_upsert_dim_adds_unseen_vendor_with_default(spark, green_raw, yellow_raw
     assert 0 not in got  # sentinel dropped (Q4)
 
 
-def test_watermark_default_and_probe(spark, green_raw):
-    dd = build_date_dim(spark, "2023-01-01", "2023-12-31")
-    assert latest_pickup_watermark(None, dd) == datetime.datetime(2000, 1, 1)
-    g = clean_trips(green_raw, "Green")
-    fact = build_fact(g, dd, seed_type_dim(spark))
-    wm = latest_pickup_watermark(fact, dd)
-    assert wm.date() == datetime.date(2023, 3, 1)
-
-
 def test_build_fact_drops_out_of_dim_dates(spark, green_raw):
     dd = build_date_dim(spark, "2023-01-01", "2023-12-31")
     g = clean_trips(green_raw, "Green")
@@ -133,16 +122,6 @@ def test_build_fact_drops_out_of_dim_dates(spark, green_raw):
     # 6 silver rows, minus the 2008 trip (Q10 inner-join row loss)
     assert len(rows) == 5
     assert len({r["ID"] for r in rows}) == 5  # surrogate IDs unique
-
-
-def test_build_fact_incremental_watermark(spark, green_raw):
-    dd = build_date_dim(spark, "2023-01-01", "2023-12-31")
-    g = clean_trips(green_raw, "Green")
-    wm = datetime.datetime(2023, 2, 1)
-    fact = build_fact(g, dd, seed_type_dim(spark), watermark=wm)
-    dates = {r["date_puID"] for r in fact.collect()}
-    # only Feb 10 + Mar 1 trips pass the watermark filter (P6)
-    assert len(dates) == 2
 
 
 def test_reports_end_to_end(spark, green_raw, yellow_raw, zone_csv):

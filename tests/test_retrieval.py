@@ -337,9 +337,9 @@ def test_dsir_importance_weights_are_log_ratios(spark):
     assert abs(got.logw - round(want, 6)) < 1e-9
 
 
-def test_dsir_importance_fast_path_scores_all_docs(spark):
-    """portable=False (xxhash64 buckets) is the Spark-only production
-    path: same shape/coverage contract, different hash."""
+def test_dsir_importance_scores_all_docs(spark):
+    """Every raw doc with a token is scored, over all of its hashed
+    unigram and bigram features."""
     from nyc_etl_pipeline_spark.operators.lm import dsir_importance
 
     target = spark.createDataFrame(
@@ -350,7 +350,7 @@ def test_dsir_importance_fast_path_scores_all_docs(spark):
         [(i, f"alpha beta w{i} gamma") for i in range(12)],
         "doc_id long, text string",
     )
-    out = dsir_importance(raw, target, portable=False).collect()
+    out = dsir_importance(raw, target).collect()
     assert len(out) == 12
     assert all(r.n_feats == 7 for r in out)  # 4 unigrams + 3 bigrams
 
