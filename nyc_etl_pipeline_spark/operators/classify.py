@@ -134,8 +134,8 @@ def hashed_tf_features(
 
 
 #: above this many components the margin uses the higher-order fold
-#: (flat expression trees collapse at width — the _nearest_cell
-#: lesson); below it, a flat left-to-right chain stays inside
+#: (flat expression trees collapse at width — see similarity's
+#: _NEAREST_EXPR_MAX_TERMS); below it, a flat left-to-right chain stays inside
 #: whole-stage codegen (the fold is interpreted). Both are the SAME
 #: double-addition sequence (0.0 + a == a), so bit-identical.
 _MARGIN_FLAT_MAX_TERMS = 256

@@ -637,8 +637,8 @@ def _minhash_sig_table(sh: DataFrame, num_hashes: int, id_out: str) -> DataFrame
     this on an idle host: at 3M docs / 168M shingles / k=64 the JVM
     agg took 4.2 s vs Arrow 27 s; at 1M docs / 56M shingles / k=128,
     2.7 s vs 34.2 s. k min-agg expressions stay inside whole-stage
-    codegen with map-side partial combine (unlike the higher-order
-    fold trees of the _nearest_cell lesson), so the JVM path wins by
+    codegen with map-side partial combine (unlike the interpreted
+    higher-order folds behind similarity._NEAREST_EXPR_MAX_TERMS), so the JVM path wins by
     6-12x and the Arrow path was removed. An earlier contended-host
     reading (201 s for the JVM agg at 3M docs) did not reproduce."""
     return sh.groupBy(F.col("__id").alias(id_out)).agg(

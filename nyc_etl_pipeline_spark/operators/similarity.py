@@ -288,60 +288,58 @@ def ivf_centroids(
     return centers
 
 
-#: above this many literal terms (n_lists * dim), cell assignment
-#: switches from the JVM expression tree to the Arrow/BLAS path.
+#: above this many literal terms (centers * dims, summed over
+#: subspaces), the nearest-center argmin switches from the JVM
+#: expression (_center_d2) to one Arrow/BLAS matmul per batch (_pq_codes).
 #: Higher-order-function folds are INTERPRETED (not codegen'd): at 64
 #: lists x 64 dims the per-row tree measured 532 s for a 100k-vector
-#: assignment, vs seconds for one batched matmul. 512 keeps the gate
-#: configuration (8 x 64) on the exact JVM path.
-_NEAREST_CELL_EXPR_MAX_TERMS = 512
+#: assignment, vs seconds for one batched matmul, and a realistic
+#: 64-dim / m=8 / 16-centroid PQ book is 1024 terms per row. 512 keeps
+#: the gate configurations (q35's 8 x 64 cells, q101's 128-term book)
+#: on the exact JVM path.
+_NEAREST_EXPR_MAX_TERMS = 512
+
+
+def _double_array(values) -> Column:
+    """A (nested) list of doubles as ONE literal: a parsed SQL
+    `array(...)` that Catalyst folds once, so building it costs one
+    py4j call instead of one F.lit per element. sql_double round-trips
+    every double exactly, so the values equal F.lit's."""
+
+    def render(v) -> str:
+        if isinstance(v, (list, tuple)):
+            return "array(" + ", ".join(render(x) for x in v) + ")"
+        return sql_double(v)
+
+    return F.expr(render(values))
+
+
+def _center_d2(vec: Column, centers: list[list[float]]) -> Column:
+    """Per row, the array<struct<d2, idx>> of squared euclidean
+    distances from `vec` to each literal center, in center order. d2 is
+    the index-ordered left fold of squared differences from 0.0 (the
+    float sequence the k-means Arrow twin and DuckDB's list_reduce
+    replay). A NULL vector, or one whose length differs from the
+    centers', gets NULL d2 everywhere. Ties between centers go to the
+    lowest idx under struct ordering."""
+    return F.transform(
+        _double_array(centers),
+        lambda c, i: F.struct(
+            F.aggregate(
+                F.zip_with(vec, c, lambda a, b: (a - b) * (a - b)),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ).alias("d2"),
+            i.alias("idx"),
+        ),
+    )
 
 
 def _nearest_cell(vec: Column, centers: list[list[float]]) -> Column:
-    """argmin over squared euclidean distance to literal centers.
-    Ties break to the lowest cell index (same rule as the probe
-    ranking — numpy argmin also returns the first minimum).
-
-    Small center sets run as a per-row JVM expression (no shuffle, no
-    Python); past _NEAREST_CELL_EXPR_MAX_TERMS total terms the same
-    argmin runs as a vectorized pandas_udf — one (batch x dim) @
-    (dim x lists) BLAS matmul per Arrow batch. The ||x||^2 term is
-    constant per row and dropped there: argmin_c(||c||^2 - 2 x.c) ==
-    argmin_c ||x - c||^2 (exactly in real arithmetic; the two paths
-    may disagree only on float near-ties, which the IVF contract —
-    quality-at-rank, not cell identity — is explicitly robust to)."""
-    if len(centers) * len(centers[0]) <= _NEAREST_CELL_EXPR_MAX_TERMS:
-        dists = []
-        for c in centers:
-            cv = F.array(*[F.lit(x) for x in c])
-            dists.append(
-                F.aggregate(
-                    F.zip_with(vec, cv, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            )
-        darr = F.array(*dists)
-        return (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centers, dtype=np.float64)
-    half_cn = 0.5 * (C * C).sum(axis=1)
-
-    # no type hints: the module's `from __future__ import annotations`
-    # turns them into strings the UDF hint-inference can't resolve for
-    # locally-imported pandas; the positional form infers SCALAR.
-    def _cell(v):
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        x = np.stack(v.to_numpy())
-        scores = half_cn[None, :] - x @ C.T
-        return pd.Series(np.argmin(scores, axis=1).astype(np.int32))
-
-    return pandas_udf(_cell, "int")(vec)
+    """argmin over squared euclidean distance to literal centers, ties
+    to the lowest cell index: an IVF cell is the one-subspace PQ code
+    (see _pq_codes for the JVM and Arrow paths)."""
+    return _pq_codes(vec, [centers])[0]
 
 
 def ivf_topk(
@@ -373,7 +371,8 @@ def ivf_topk(
     assigned = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         _as_double(F.col(vec_col)).alias("__cv"),
-    ).withColumn("__cell", _nearest_cell(F.col("__cv"), centers))
+        _nearest_cell(F.col(vec_col), centers).alias("__cell"),
+    )
     probes = _ivf_probes(queries, centers, n_probe, id_col, vec_col)
     return _ivf_rank(assigned, probes, k)
 
@@ -387,35 +386,15 @@ def _ivf_probes(
 ) -> DataFrame:
     """(query_id, __qv, __cell): each query's n_probe nearest cells by
     euclidean distance to the literal centers (ties to lowest cell),
-    as one projection per query row (sort its (distance, cell) pairs,
-    keep the first n_probe): no join, no shuffle. The centers are one
-    JSON string the optimizer folds into a literal (exact for floats;
-    one py4j call instead of one per component)."""
-    import json
-
-    cjson = json.dumps([{"cell": i, "cvec": list(map(float, c))} for i, c in enumerate(centers)])
-    cells = F.from_json(F.lit(cjson), "array<struct<cell:int, cvec:array<double>>>")
-    ranked = F.transform(
-        cells,
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(F.col("__qv"), c["cvec"], lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("d2"),
-            c["cell"].alias("cell"),
-        ),
-    )
+    as one projection per query row (sort its _center_d2 pairs, keep
+    the first n_probe): no join, no shuffle."""
+    probes = F.slice(F.sort_array(_center_d2(F.col("__qv"), centers)), 1, n_probe)
     return (
         queries.select(
             F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("__qv")
         )
-        .select(
-            "query_id",
-            "__qv",
-            F.explode(F.slice(F.sort_array(ranked), 1, n_probe)).alias("__p"),
-        )
-        .select("query_id", "__qv", F.col("__p.cell").alias("__cell"))
+        .select("query_id", "__qv", F.explode(probes).alias("__p"))
+        .select("query_id", "__qv", F.col("__p.idx").alias("__cell"))
     )
 
 
@@ -467,7 +446,7 @@ def ivf_write_index(
         corpus.select(
             F.col(id_col),
             F.col(vec_col),
-            _nearest_cell(_as_double(F.col(vec_col)), centers).alias("__cell"),
+            _nearest_cell(F.col(vec_col), centers).alias("__cell"),
         ),
         path,
     )
@@ -542,8 +521,8 @@ def sq8_encode(vec: Column, mins: list[float], maxes: list[float]) -> Column:
     codebook does better but needs a KMeans training pass; SQ8 is
     training-free and fully deterministic — every engine reproduces the
     identical codes, so the whole ANN pipeline stays oracle-checkable)."""
-    mnv = F.array(*[F.lit(m) for m in mins])
-    rngv = F.array(*[F.lit((mx - mn) if mx > mn else 1.0) for mn, mx in zip(mins, maxes)])
+    mnv = _double_array(mins)
+    rngv = _double_array([(mx - mn) if mx > mn else 1.0 for mn, mx in zip(mins, maxes)])
     return F.zip_with(
         F.zip_with(vec, mnv, lambda x, mn: x - mn),
         rngv,
@@ -556,8 +535,8 @@ def sq8_encode(vec: Column, mins: list[float], maxes: list[float]) -> Column:
 def sq8_decode(codes: Column, mins: list[float], maxes: list[float]) -> Column:
     """Reconstruction at bucket midpoints: x̂_j = min_j + (code_j + 0.5)
     * range_j / 256."""
-    mnv = F.array(*[F.lit(m) for m in mins])
-    rngv = F.array(*[F.lit((mx - mn) if mx > mn else 1.0) for mn, mx in zip(mins, maxes)])
+    mnv = _double_array(mins)
+    rngv = _double_array([(mx - mn) if mx > mn else 1.0 for mn, mx in zip(mins, maxes)])
     return F.zip_with(
         F.zip_with(codes, rngv, lambda c, rng: (c + 0.5) * rng / 256.0),
         mnv,
@@ -643,49 +622,37 @@ def pq_codebooks(
     return books
 
 
-#: above this many total multiply terms (m * n_centroids * sub), PQ
-#: encoding switches from per-subspace literal JVM folds to the
-#: Arrow/BLAS path — the _nearest_cell lesson applies unchanged:
-#: higher-order folds are interpreted, and a realistic 64-dim / m=8 /
-#: 16-centroid book is 1024 terms per row. The q101 gate book
-#: (16 dims x 8 centroids = 128 terms) stays on the exact JVM path.
-_PQ_ENCODE_EXPR_MAX_TERMS = 512
-
-
 def _pq_codes(vec: Column, books: list[list[list[float]]]) -> Column:
     """array<int> column of PQ codes: code[s] = argmin_c ||x_s -
     books[s][c]||^2, ties to the lowest centroid index (the same
     first-minimum rule as numpy argmin).
 
-    Small books run as per-subspace literal JVM expressions (exact
-    index-ordered folds, no Python); past _PQ_ENCODE_EXPR_MAX_TERMS
-    total terms the argmin runs as one (batch x sub) @ (sub x k) BLAS
-    matmul per subspace per Arrow batch using the identity
-    argmin_c ||x-c||^2 == argmin_c (||c||^2/2 - x.c). The two paths
-    agree except on float near-ties between centroids (the IVF
-    contract: quality-at-rank, not cell identity)."""
+    Small books take the nearest _center_d2 pair per subspace slice
+    (exact folds, no Python; a row whose distances are all NULL gets a
+    NULL code, since NULL pairs are dropped before the minimum). Past
+    _NEAREST_EXPR_MAX_TERMS total terms the argmin runs as one
+    (batch x sub) @ (sub x k) BLAS matmul per subspace per Arrow batch
+    using the identity argmin_c ||x-c||^2 == argmin_c (||c||^2/2 - x.c).
+    The two paths agree except on float near-ties between centroids
+    (the IVF contract: quality-at-rank, not cell identity)."""
     m = len(books)
     n_centroids = len(books[0])
     sub = len(books[0][0])
 
-    if m * n_centroids * sub <= _PQ_ENCODE_EXPR_MAX_TERMS:
+    if m * n_centroids * sub <= _NEAREST_EXPR_MAX_TERMS:
         v = _as_double(vec)
-        codes = []
-        for s, book in enumerate(books):
-            piece = F.slice(v, s * sub + 1, sub)
-            dists = []
-            for c in book:
-                cv = F.array(*[F.lit(x) for x in c])
-                dists.append(
-                    F.aggregate(
-                        F.zip_with(piece, cv, lambda a, b: (a - b) * (a - b)),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                )
-            darr = F.array(*dists)
-            codes.append((F.array_position(darr, F.array_min(darr)) - 1).cast("int"))
-        return F.array(*codes)
+        # a one-subspace book (an IVF cell) reads the whole vector, so
+        # a vector longer than the centers gets a NULL cell, not a cell
+        # of its prefix
+        pieces = [v] if m == 1 else [F.slice(v, s * sub + 1, sub) for s in range(m)]
+        return F.array(
+            *[
+                F.array_min(
+                    F.filter(_center_d2(piece, book), lambda p: p["d2"].isNotNull())
+                )["idx"]
+                for piece, book in zip(pieces, books)
+            ]
+        )
 
     import numpy as np
     import pandas as pd
@@ -694,7 +661,9 @@ def _pq_codes(vec: Column, books: list[list[list[float]]]) -> Column:
     B = [np.asarray(book, dtype=np.float64) for book in books]  # (k, sub) each
     half_bn = [0.5 * (Bs * Bs).sum(axis=1) for Bs in B]
 
-    # positional form (no hints): see _nearest_cell for why
+    # no type hints: the module's `from __future__ import annotations`
+    # turns them into strings the UDF hint-inference can't resolve for
+    # locally-imported pandas; the positional form infers SCALAR.
     def _codes(vs):
         if len(vs) == 0:
             return pd.Series([], dtype="object")
@@ -963,7 +932,7 @@ def ivfpq_write_index(
         corpus.select(
             F.col(id_col),
             codes.alias("codes"),
-            _nearest_cell(_as_double(F.col(vec_col)), centers).alias("__cell"),
+            _nearest_cell(F.col(vec_col), centers).alias("__cell"),
         ),
         path,
     )
@@ -1037,7 +1006,7 @@ def lsh_bucket(vec: Column, n_planes: int, dim: int) -> Column:
     """Sign-random-projection bucket id (n_planes-bit integer)."""
     out = F.lit(0).cast("bigint")
     for p, signs in enumerate(plane_sign_vectors(n_planes, dim)):
-        sv = F.array(*[F.lit(s) for s in signs])
+        sv = _double_array(signs)
         proj = F.aggregate(
             F.zip_with(vec, sv, lambda x, s: x * s), F.lit(0.0), lambda acc, x: acc + x
         )
@@ -1272,7 +1241,7 @@ def jl_project(
 
     cols = list(id_cols)
     for j, row in enumerate(signs, start=1):
-        arr = F.array(*[F.lit(s) for s in row])
+        arr = _double_array(row)
         fold = F.aggregate(F.sequence(F.lit(1), F.lit(d_in)), F.lit(0.0), _term(arr))
         cols.append((fold / F.lit(scale)).alias(f"jl_{j}"))
     return df.select(*cols)
@@ -1281,6 +1250,14 @@ def jl_project(
 # --------------------------------------------------------------------------
 # Distributed fixed-round k-means (Lloyd) with a replayable recurrence
 # --------------------------------------------------------------------------
+
+
+#: k * dim at or below which kmeans_fixed assigns with the JVM
+#: expression; above it, with the exact Arrow twin. Measured at 1M x 64,
+#: k=8 (512 terms): 13.7 s Arrow vs 47.3 s JVM; the q165 gate's k=4
+#: (256 terms) stays on the JVM path. Lower than _NEAREST_EXPR_MAX_TERMS
+#: because the twin keeps the exact fold and so is slower than BLAS.
+_KMEANS_JVM_MAX_TERMS = 256
 
 
 def kmeans_fixed(
@@ -1355,40 +1332,20 @@ def kmeans_fixed(
         j: list(r["__v"]) for j, r in enumerate(init)
     }
 
-    def _step(arr):
-        # closure-bound centroid array: aggregate's lambda must take
-        # exactly 2 params (arity inference breaks on defaulted extras)
-        def f(acc, i):
-            diff = F.element_at(F.col("__v"), i) - F.element_at(arr, i)
-            return acc + diff * diff
-
-        return f
-
     def _assign_jvm():
-        alts = []
-        for j in range(k):
-            # one-parse double-literal array: F.array(*[F.lit(x) ...])
-            # cost k*dim py4j round-trips PER ROUND of plan build
-            # (~0.3-0.4 s each at k=4, dim=64 — r13 build profile);
-            # sql_double round-trips doubles exactly, so the
-            # expression is value-identical
-            arr = F.expr(
-                "array(" + ", ".join(sql_double(x) for x in cents[j]) + ")"
-            )
-            d = F.aggregate(
-                F.sequence(F.lit(1), F.lit(dim)), F.lit(0.0), _step(arr)
-            )
-            alts.append(
-                F.struct(d.alias("d"), F.lit(j).cast("long").alias("c"))
-            )
-        best = F.array_sort(F.array(*alts))[0]
+        # the nearest _center_d2 pair; a NULL vector's pairs all carry
+        # NULL d2, which sorts first, so it lands in cluster 0 with NULL d
+        best = F.array_min(_center_d2(F.col("__v"), [cents[j] for j in range(k)]))
         return v.select(
-            "__id", "__v", best["c"].alias("cluster"), best["d"].alias("d")
+            "__id",
+            "__v",
+            best["idx"].cast("long").alias("cluster"),
+            best["d2"].alias("d"),
         )
 
     def _assign_arrow():
         # BIT-IDENTICAL twin of _assign_jvm for large k*dim, where the
-        # interpreted fold tree dominates (the _nearest_cell lesson):
+        # interpreted fold tree dominates (see _NEAREST_EXPR_MAX_TERMS):
         # an ordered fold vectorizes ACROSS rows while keeping the
         # exact per-row float64 operation sequence — loop over dims,
         # numpy elementwise over rows, acc starting at 0.0, diff*diff
@@ -1440,11 +1397,8 @@ def kmeans_fixed(
         # both paths are bit-identical, so the split is pure cost: the
         # JVM tree avoids the Arrow boundary for small k*dim, the
         # vectorized twin wins once the interpreted fold work
-        # dominates (measured at 1M x 64, k=8 = 512 terms: 13.7 s
-        # arrow vs 47.3 s JVM; the gate's k=4 = 256 terms stays JVM).
-        # The (test-visible) _NEAREST_CELL_EXPR_MAX_TERMS override
-        # still forces the arrow path when lowered.
-        if k * dim <= min(256, _NEAREST_CELL_EXPR_MAX_TERMS):
+        # dominates (see _KMEANS_JVM_MAX_TERMS).
+        if k * dim <= _KMEANS_JVM_MAX_TERMS:
             return _assign_jvm()
         return _assign_arrow()
 

@@ -329,14 +329,13 @@ def ivf_maintainer(
     therefore relies on the replayed batch having the same content,
     which Structured Streaming's replayable sources guarantee and the
     fixed literal centers preserve (same vectors -> same cells)."""
-    from nyc_etl_pipeline_spark.operators.similarity import (
-        _as_double,
-        _nearest_cell,
-    )
+    from nyc_etl_pipeline_spark.operators.similarity import _nearest_cell
 
     def assign(batch_df: DataFrame) -> DataFrame:
-        return batch_df.select(F.col(id_col), F.col(vec_col)).withColumn(
-            "__cell", _nearest_cell(_as_double(F.col(vec_col)), centers)
+        return batch_df.select(
+            F.col(id_col),
+            F.col(vec_col),
+            _nearest_cell(F.col(vec_col), centers).alias("__cell"),
         )
 
     return _batch_partition_writer(

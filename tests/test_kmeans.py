@@ -126,7 +126,7 @@ def test_arrow_assignment_path_bitwise_equals_jvm(spark, monkeypatch):
     rng = _r.Random(99)
     vecs = {i: [rng.uniform(-2, 2) for _ in range(8)] for i in range(60)}
     jvm = _run(spark, vecs, k=3, rounds=3, dim=8)
-    monkeypatch.setattr(SIM, "_NEAREST_CELL_EXPR_MAX_TERMS", 0)
+    monkeypatch.setattr(SIM, "_KMEANS_JVM_MAX_TERMS", 0)
     arrow = _run(spark, vecs, k=3, rounds=3, dim=8)
     assert arrow == jvm  # exact doubles, not approx
 

@@ -106,7 +106,7 @@ def test_pq_encode_blas_path_matches_expr_path(spark, monkeypatch):
     the same codes as the literal JVM folds on exact-arithmetic data."""
     v, _, books = _fixture(spark)
     expr = {r["vec_id"]: list(r["codes"]) for r in SIM.pq_encode(v, books).collect()}
-    monkeypatch.setattr(SIM, "_PQ_ENCODE_EXPR_MAX_TERMS", 0)
+    monkeypatch.setattr(SIM, "_NEAREST_EXPR_MAX_TERMS", 0)
     blas = {r["vec_id"]: list(r["codes"]) for r in SIM.pq_encode(v, books).collect()}
     assert expr == blas
     assert all(
